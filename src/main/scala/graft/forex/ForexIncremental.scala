@@ -13,12 +13,20 @@ import graft.store.IncrementalStore
   *
   * Silver (stg_eurusd.sql:14-40): strict high-watermark — only ticks with
   * `observed_at > max(observed_at)` enter the batch; late rows at or below
-  * the watermark are dropped (reference semantics, SURVEY §2.10).
+  * the watermark are dropped (reference semantics, SURVEY §2.10). The
+  * watermark scans silver's newest day partition only.
   *
-  * Gold (fct_eurusd_timeframes.sql:15-86): 60-day lookback — re-reads
-  * trailing silver history so ROWS-frame SMAs are correct across batch
-  * boundaries, then wholesale-replaces the recomputed candle-day
-  * partitions (SURVEY §4.3 option 1).
+  * Gold (fct_eurusd_timeframes.sql:15-86): every gold write recomputes a
+  * range of candle days and wholesale-replaces exactly those day
+  * partitions (SURVEY §4.3 option 1), re-reading the 60-day silver
+  * lookback before the range so ROWS-frame SMAs are correct across batch
+  * boundaries. The daily run's range is [newest gold day − 1, newest
+  * silver day], the `--date` backfill's [d − 1, d + 49]; both come from
+  * day listings, so a daily run's scans and writes grow with the days it
+  * touches, not with history.
+  *
+  * Each silver upsert and gold rewrite logs one `[graft]` line to stderr:
+  * the upsert's observed metrics, the rewritten candle-day range.
   *
   * `now` is injectable so tests are deterministic (no wall-clock in data).
   */
@@ -36,10 +44,7 @@ object ForexIncremental {
       case Some(w) => events.filter(col("ts") > lit(w))
       case None => events
     }
-    val batch = ForexPipeline.silver(fresh)
-      .withColumn("dbt_updated_at", lit(now))
-    IncrementalStore.upsertByKey(
-      batch, silverDir, tsCol = "observed_at", keyCols = Seq("observed_at"))
+    upsertSilver(fresh, silverDir, now)
   }
 
   /** Single-day silver backfill (the reference's `--date` mode,
@@ -52,11 +57,18 @@ object ForexIncremental {
       events: DataFrame, silverDir: String, date: java.time.LocalDate,
       now: Timestamp = new Timestamp(0L)): Unit = {
     val d = java.sql.Date.valueOf(date)
-    val dayEvents = events.filter(to_date(col("ts")) === lit(d))
-    val batch = ForexPipeline.silver(dayEvents)
-      .withColumn("dbt_updated_at", lit(now))
-    IncrementalStore.upsertByKey(
+    upsertSilver(events.filter(to_date(col("ts")) === lit(d)), silverDir, now)
+  }
+
+  private def upsertSilver(events: DataFrame, silverDir: String,
+      now: Timestamp): Unit = {
+    val batch = ForexPipeline.silver(events).withColumn("dbt_updated_at", lit(now))
+    val m = IncrementalStore.upsertByKey(
       batch, silverDir, tsCol = "observed_at", keyCols = Seq("observed_at"))
+    // min/max are absent when nothing was written
+    System.err.println(s"[graft] silver upsert($silverDir): " +
+      Seq("rows_written", "min_ts_us", "max_ts_us")
+        .map(k => s"$k=${m.get(k).fold("none")(_.toString)}").mkString(" "))
   }
 
   /** How far a changed silver day reaches in the gold table. Backward: the
@@ -69,11 +81,9 @@ object ForexIncremental {
     */
   final val BackfillForwardDays = 49
 
-  /** Single-day gold backfill: recompute every candle-day partition a change
+  /** Single-day gold backfill: rewrite every candle-day partition a change
     * to `date`'s silver data can reach — [d-1, d+49] (see
-    * BackfillForwardDays) — feeding the candle aggregation the trailing
-    * lookback window so the EARLIEST rewritten day's ROWS-frame SMAs see
-    * their preceding candles. This mirrors the reference's incremental run,
+    * BackfillForwardDays). This mirrors the reference's incremental run,
     * which re-merges its whole 60-day lookback window every batch
     * (fct_eurusd_timeframes.sql:25-29) and therefore repairs neighbors for
     * free; rewriting only day d would leave d-1's shifted candles and the
@@ -84,45 +94,54 @@ object ForexIncremental {
   def runGoldBackfill(
       spark: SparkSession, silverDir: String, goldDir: String,
       date: java.time.LocalDate,
-      now: Timestamp = new Timestamp(0L)): Unit = {
-    val first = date.minusDays(1)
-    val last = date.plusDays(BackfillForwardDays)
-    val start = new Timestamp(
-      java.sql.Date.valueOf(first).getTime - LookbackDays * 86400000L)
-    // include day last+1 ticks: shifted buckets (tz +2h) put early-next-day
-    // ticks into day-`last` candles; candle_start <= tick ts, so ticks can
-    // never contribute to an EARLIER day than `start` allows
-    val readEnd = java.sql.Date.valueOf(last.plusDays(1))
-    val silver = IncrementalStore.readTable(spark, silverDir)
-      .select("observed_at", "open_price", "high_price", "low_price", "close_price")
-      .filter(col("observed_at") >= lit(start) &&
-        to_date(col("observed_at")) <= lit(readEnd))
-    val batch = ForexPipeline.gold(silver)
-      .filter(to_date(col("candle_start"))
-        .between(lit(java.sql.Date.valueOf(first)), lit(java.sql.Date.valueOf(last))))
-      .withColumn("dbt_updated_at", lit(now))
-    IncrementalStore.overwriteDayPartitions(
-      batch, goldDir, tsCol = "candle_start", clusterBy = Seq("timeframe"))
-  }
+      now: Timestamp = new Timestamp(0L)): Unit =
+    rewriteGold(spark, silverDir, goldDir,
+      date.minusDays(1), date.plusDays(BackfillForwardDays), now)
 
-  /** One gold batch: recompute candles over the trailing lookback window and
-    * replace the touched candle-day partitions (clustered by timeframe, the
-    * reference's `cluster_by`).
+  /** One daily gold batch: rewrite the candle days [newest gold day − 1,
+    * newest silver day]. Every silver row that passed the strict watermark
+    * is newer than gold's newest candle, and a candle's indicators read
+    * only earlier candles, so no earlier candle can change — except the
+    * 4h/12h candles starting late on the day before, which absorb the
+    * newest gold day's ticks before 02:00 (the +2h shift). An empty gold
+    * table is built from every silver day, starting the day before the
+    * first for the same reason. Re-running is idempotent.
     */
   def runGold(
       spark: SparkSession, silverDir: String, goldDir: String,
       now: Timestamp = new Timestamp(0L)): Unit = {
-    val silver = IncrementalStore.readTable(spark, silverDir)
-      .select("observed_at", "open_price", "high_price", "low_price", "close_price")
-    val wm = IncrementalStore.highWatermark(spark, goldDir, "candle_start")
-    val src = wm match {
-      case Some(w) =>
-        val start = new Timestamp(w.getTime - LookbackDays * 86400000L)
-        silver.filter(col("observed_at") >= lit(start))
-      case None => silver
+    val silverDays = IncrementalStore.listDays(spark, silverDir)
+    if (silverDays.nonEmpty) {
+      val from = IncrementalStore.listDays(spark, goldDir).lastOption
+        .getOrElse(silverDays.head)
+      rewriteGold(spark, silverDir, goldDir, from.minusDays(1), silverDays.last, now)
     }
-    val batch = ForexPipeline.gold(src).withColumn("dbt_updated_at", lit(now))
-    IncrementalStore.overwriteDayPartitions(
-      batch, goldDir, tsCol = "candle_start", clusterBy = Seq("timeframe"))
+  }
+
+  /** Recompute the candle days [first, last] and replace exactly those gold
+    * day partitions (clustered by timeframe, the reference's `cluster_by`).
+    * Silver is read for the days [first − 60, last + 1] only: the lookback
+    * feeds the earliest rewritten candles' ROWS-frame SMAs their
+    * predecessors, and day last + 1's ticks before 02:00 land in day
+    * `last`'s shifted candles. A candle never starts after its ticks, so
+    * no later day can reach the range.
+    */
+  private def rewriteGold(
+      spark: SparkSession, silverDir: String, goldDir: String,
+      first: java.time.LocalDate, last: java.time.LocalDate,
+      now: Timestamp): Unit = {
+    val lookback = IncrementalStore.listDays(spark, silverDir).filter(d =>
+      !d.isBefore(first.minusDays(LookbackDays)) && !d.isAfter(last.plusDays(1)))
+    if (lookback.nonEmpty) {
+      val silver = IncrementalStore.readDays(spark, silverDir, lookback)
+        .select("observed_at", "open_price", "high_price", "low_price", "close_price")
+      val batch = ForexPipeline.gold(silver)
+        .filter(to_date(col("candle_start"))
+          .between(lit(java.sql.Date.valueOf(first)), lit(java.sql.Date.valueOf(last))))
+        .withColumn("dbt_updated_at", lit(now))
+      IncrementalStore.overwriteDayPartitions(
+        batch, goldDir, tsCol = "candle_start", clusterBy = Seq("timeframe"))
+      System.err.println(s"[graft] gold rewrite($goldDir): candle days [$first, $last]")
+    }
   }
 }

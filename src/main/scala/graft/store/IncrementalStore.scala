@@ -15,13 +15,17 @@ import org.apache.spark.sql.functions._
   *  1. derive `p_date = to_date(tsCol)` and collect the batch's distinct days
   *     (bounded: one driver-side collect of a day list, never row data);
   *  2. `upsertByKey` anti-joins the existing rows of ONLY those day-partitions
-  *     (partition-pruned read) against the batch keys and unions the batch —
-  *     exact MERGE upsert cost-bounded to touched days;
-  *  3. write `mode=overwrite` with `partitionOverwriteMode=dynamic`, which
-  *     rewrites exactly the touched `p_date=` directories.
+  *     (a read of just those day directories, skipped when none exists yet)
+  *     against the batch keys and unions the batch — exact MERGE upsert
+  *     cost-bounded to touched days;
+  *  3. write `mode=overwrite` with the per-write option
+  *     `partitionOverwriteMode=dynamic`, which rewrites exactly the touched
+  *     `p_date=` directories.
   *
   * At 100 TB: a daily batch touches O(1) day-partitions; the rewrite is
   * O(batch + touched-partition size), independent of table history size.
+  * The table's day list comes from one directory listing ([[listDays]]),
+  * and [[highWatermark]] scans only the newest day.
   */
 object IncrementalStore {
 
@@ -38,20 +42,56 @@ object IncrementalStore {
   def readTable(spark: SparkSession, target: String): DataFrame =
     spark.read.parquet(target)
 
-  private def exists(spark: SparkSession, target: String): Boolean = {
+  /** Directory name of the null-day partition: a null `tsCol` makes
+    * `to_date` null at write time, and Hive-style partitioning spells it so.
+    */
+  private final val NullPartition = "__HIVE_DEFAULT_PARTITION__"
+
+  private def dayPath(target: String, day: java.time.LocalDate): String =
+    s"$target/$PartitionCol=$day"
+
+  /** The table's day partitions, oldest first, from one driver-side listing
+    * of its `p_date=` directories: no Spark job runs and no file is opened.
+    * Names are parsed as ISO dates, not compared lexically, so a malformed
+    * foreign directory fails loudly instead of being silently skipped. The
+    * null-day partition has no day and is left out. An absent table has no
+    * days.
+    */
+  def listDays(spark: SparkSession, target: String): Seq[java.time.LocalDate] = {
     val p = new org.apache.hadoop.fs.Path(target)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).nonEmpty
+    if (!fs.exists(p)) return Nil
+    val prefix = s"$PartitionCol="
+    fs.listStatus(p).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
+      .map(_.getPath.getName.stripPrefix(prefix))
+      .filter(_ != NullPartition)
+      .map(java.time.LocalDate.parse)
+      .sortBy(_.toEpochDay)
   }
 
-  /** P3/P4 watermark: max(tsCol) of the target, None if absent (first run).
-    * One column-pruned scalar aggregate — parquet footer min/max make this
-    * metadata-only at scale.
+  /** Read only the given day partitions of a store table (each must exist;
+    * partition column retained). The reader is handed the day directories
+    * themselves, so Spark lists and scans just those — a `p_date` filter
+    * over [[readTable]] prunes the scan too, but its partition discovery
+    * first lists every day of history.
+    */
+  def readDays(spark: SparkSession, target: String,
+      days: Seq[java.time.LocalDate]): DataFrame = {
+    require(days.nonEmpty, s"readDays($target): no days given")
+    spark.read.option("basePath", target).parquet(days.map(dayPath(target, _)): _*)
+  }
+
+  /** P3/P4 watermark: max(tsCol) of the target, None if it holds no day
+    * (absent or empty table, or null-day rows only). The store partitions
+    * on `p_date = to_date(tsCol)`, so the maximum lies in the NEWEST day
+    * partition, and only that day's files are scanned, not the whole
+    * column. The null-day partition holds only null `tsCol` values, which
+    * `max` ignores anyway.
     */
   def highWatermark(spark: SparkSession, target: String, tsCol: String): Option[Timestamp] =
-    if (!exists(spark, target)) None
-    else {
-      val row = readTable(spark, target).agg(max(col(tsCol))).first()
+    listDays(spark, target).lastOption.flatMap { newest =>
+      val row = readDays(spark, target, Seq(newest)).agg(max(col(tsCol))).first()
       if (row.isNullAt(0)) None else Some(row.getTimestamp(0))
     }
 
@@ -82,11 +122,14 @@ object IncrementalStore {
   }
 
   private def write(arranged: DataFrame, target: String): Unit = {
-    val spark = arranged.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    // the parquet writer takes its timestamp type from the session conf
+    // only (no per-write option), so this one stays session-wide;
+    // GraftSession and Verify start their sessions with the same value
+    arranged.sparkSession.conf.set(
+      "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     arranged.write
       .mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(PartitionCol)
       .option("compression", "snappy")
       .parquet(target)
@@ -180,7 +223,7 @@ object IncrementalStore {
     val root = new org.apache.hadoop.fs.Path(target)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def dirName(d: Option[java.sql.Date]): String =
-      s"$PartitionCol=${d.map(_.toString).getOrElse("__HIVE_DEFAULT_PARTITION__")}"
+      s"$PartitionCol=${d.map(_.toString).getOrElse(NullPartition)}"
     val open = days.filter(d =>
       fs.exists(new org.apache.hadoop.fs.Path(root, dirName(d))))
     if (open.isEmpty) {
@@ -244,32 +287,22 @@ object IncrementalStore {
     * A FILESYSTEM-level directory delete, O(dropped partitions): no row is
     * read and no surviving file is touched, which is what makes a 90-day
     * retention sweep over a 3-year 100 TB table a metadata operation, not
-    * a job. Day identity comes from the `p_date=` directory name (the
-    * store's own layout contract) — ISO date strings, parsed not compared
-    * lexically, so a malformed foreign directory fails loudly instead of
-    * silently surviving. The one non-date name the store itself can
-    * create is `__HIVE_DEFAULT_PARTITION__` (a null `tsCol` makes
-    * `to_date` null at write time): it has no day to be older than, so
-    * retention SKIPS it — null-day rows never age out by date, and one
-    * such row must not permanently wedge every future sweep. Returns the
-    * dropped partition names (bounded: one string per dropped day — the
-    * day-list collect pattern).
+    * a job. Day identity comes from [[listDays]] (the `p_date=` directory
+    * names, parsed strictly, so a malformed foreign directory fails loudly
+    * instead of silently surviving). The null-day partition it leaves out
+    * has no day to be older than — null-day rows never age out by date,
+    * and one such row must not permanently wedge every future sweep.
+    * Returns the dropped partition names, oldest first (bounded: one
+    * string per dropped day — the day-list collect pattern).
     */
   def retainDays(spark: SparkSession, target: String,
       cutoff: java.time.LocalDate): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(target)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Nil
-    val prefix = s"$PartitionCol="
-    val nullPartition = "__HIVE_DEFAULT_PARTITION__"
-    val dropped = fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
-      .map(_.getPath)
-      .filter(_.getName.stripPrefix(prefix) != nullPartition)
-      .filter(d => java.time.LocalDate.parse(d.getName.stripPrefix(prefix))
-        .isBefore(cutoff))
-    dropped.foreach(d => fs.delete(d, true))
-    dropped.map(_.getName).sorted
+    val fs = new org.apache.hadoop.fs.Path(target)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dropped = listDays(spark, target).filter(_.isBefore(cutoff))
+      .map(d => new org.apache.hadoop.fs.Path(dayPath(target, d)))
+    dropped.foreach(fs.delete(_, true))
+    dropped.map(_.getName)
   }
 
   /** Coordinate of a z-order dimension as a double: timestamps map to epoch
@@ -354,9 +387,12 @@ object IncrementalStore {
 
   /** MERGE upsert on `keyCols` bounded to the batch's day-partitions
     * (silver path: existing rows of touched days survive unless replaced by
-    * a batch row with the same key).
-    */
-  /** MERGE upsert, returning OPERATION METRICS — the commit-info row every
+    * a batch row with the same key). Only the touched days that already
+    * exist are read back ([[readDays]]); when none exists — a daily batch
+    * landing new days — the read and the anti-join are skipped and the
+    * batch is written as is, which is what the anti-join would produce.
+    *
+    * Returns OPERATION METRICS — the commit-info row every
     * table format (Delta `operationMetrics`, Iceberg snapshot summary)
     * reports with a write. The metrics ride the write job itself via
     * `Dataset.observe` (a `CollectMetrics` node accumulating DURING the
@@ -386,7 +422,8 @@ object IncrementalStore {
       // null entries rather than NPE on the cast
       obs.get.collect { case (k, v: Long) => k -> v }.toMap
     }
-    if (!exists(spark, target)) writeObserved(part)
+    val stored = listDays(spark, target).toSet
+    if (stored.isEmpty) writeObserved(part)
     else {
       // the batch feeds three computations (day-list collect, anti-join
       // probe, merged write) — persist it once rather than re-running its
@@ -394,12 +431,14 @@ object IncrementalStore {
       // the batch itself is one micro-batch of data, bounded by design
       val cached = part.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val days = cached.select(PartitionCol).distinct().collect().map(_.getDate(0))
-        val old = readTable(spark, target)
-          .filter(col(PartitionCol).isin(days.toIndexedSeq: _*))
-          .select(cached.columns.toIndexedSeq.map(col): _*) // align column order
-        val merged = old.join(cached, keyCols, "left_anti").unionByName(cached)
-        writeObserved(merged)
+        val open = cached.select(PartitionCol).distinct().collect().toSeq
+          .flatMap(r => Option(r.getDate(0))).map(_.toLocalDate).filter(stored)
+        if (open.isEmpty) writeObserved(cached)
+        else {
+          val old = readDays(spark, target, open)
+            .select(cached.columns.toIndexedSeq.map(col): _*) // align column order
+          writeObserved(old.join(cached, keyCols, "left_anti").unionByName(cached))
+        }
       } finally cached.unpersist(blocking = false)
     }
   }

@@ -24,6 +24,33 @@ class IncrementalSpec extends SparkSpec {
     new Timestamp((r.getTimestamp(0).getTime + r.getTimestamp(1).getTime) / 2)
   }
 
+  private final val DayUs = 86400L * 1000000L
+  private final val Day0Us =
+    java.time.Instant.parse("2024-01-01T00:00:00Z").getEpochSecond * 1000000L
+
+  /** `days` days of synthetic ticks from 2024-01-01 UTC, one per 20-minute
+    * slot at a hashed offset inside it (distinct, increasing times), with a
+    * deterministic price path. The sf test data spans only 30 days, which
+    * never crosses the 60-day gold lookback.
+    */
+  private def longEvents(days: Int): DataFrame = {
+    val slotUs = 20L * 60 * 1000000L
+    spark.range(days * DayUs / slotUs).select(
+      col("id").as("event_id"),
+      timestamp_micros(lit(Day0Us) + col("id") * slotUs +
+        pmod(xxhash64(col("id")), lit(slotUs - 1000000L))).as("ts"),
+      (lit(1.1) + sin(col("id") / 97.0) * 0.02 +
+        (pmod(xxhash64(col("id"), lit(1)), lit(1000L)) - 500) / 1e6).as("value"))
+  }
+
+  /** Each `p_date=` directory of a local table: its day and file names. */
+  private def dayFiles(dir: String): Map[java.time.LocalDate, Set[String]] =
+    new java.io.File(dir).listFiles().toSeq
+      .filter(f => f.isDirectory && f.getName.startsWith("p_date="))
+      .map(f => java.time.LocalDate.parse(f.getName.stripPrefix("p_date=")) ->
+        f.listFiles().map(_.getName).toSet)
+      .toMap
+
   private def sortedRows(df: DataFrame, drop: Seq[String]): Seq[String] = {
     val cols = df.columns.filterNot(drop.contains).sorted
     df.select(cols.map(col).toIndexedSeq: _*)
@@ -106,5 +133,34 @@ class IncrementalSpec extends SparkSpec {
     val b = sortedRows(IncrementalStore.readTable(spark, goldOnce), Seq("dbt_updated_at", "p_date"))
     assert(a === b)
     assert(a.nonEmpty)
+  }
+
+  test("gold: daily runs past the 60-day lookback equal one-shot, rewriting only their days") {
+    val ev = longEvents(70)
+    // bronze as it stands at 01:00 on day `day`: each daily run lands one
+    // more day, and the ticks before 01:00 fall in the previous day's
+    // shifted 4h/12h candles
+    def landedBy(day: Int): DataFrame =
+      ev.filter(unix_micros(col("ts")) < lit(Day0Us + day * DayUs + DayUs / 24))
+    val (silverInc, goldInc, silverOnce, goldOnce) = (tmp(), tmp(), tmp(), tmp())
+    ForexIncremental.runSilver(landedBy(66), silverInc) // history > 60 days
+    ForexIncremental.runGold(spark, silverInc, goldInc)
+    for (day <- 67 to 69) {
+      val before = dayFiles(goldInc)
+      ForexIncremental.runSilver(landedBy(day), silverInc)
+      ForexIncremental.runGold(spark, silverInc, goldInc)
+      val after = dayFiles(goldInc)
+      val (first, last) = (before.keys.max.minusDays(1), dayFiles(silverInc).keys.max)
+      val changed = after.keySet.filter(d => before.get(d) != after.get(d))
+      assert(changed.contains(last))
+      assert(changed.forall(d => !d.isBefore(first) && !d.isAfter(last)),
+        s"day $day run changed gold days ${changed.toSeq.sortBy(_.toEpochDay)} " +
+          s"outside [$first, $last]")
+    }
+    ForexIncremental.runSilver(landedBy(69), silverOnce)
+    ForexIncremental.runGold(spark, silverOnce, goldOnce)
+    val a = sortedRows(IncrementalStore.readTable(spark, goldInc), Seq("dbt_updated_at", "p_date"))
+    val b = sortedRows(IncrementalStore.readTable(spark, goldOnce), Seq("dbt_updated_at", "p_date"))
+    assert(a === b)
   }
 }
