@@ -76,9 +76,20 @@ object GraftExtensions {
   * µs writes, AQE with skew-join handling, sane shuffle width).
   */
 object GraftSession {
+
+  /** Makes partition discovery list a read's paths on the driver, however
+    * many there are. Past this threshold (32 paths by default) Spark lists
+    * them in a job with one task per directory, which a `local[n]` session
+    * runs on the same machine anyway: the daily run's checks over 77 days
+    * of gold ran 84 tasks with that job and 7 without it.
+    */
+  final val DriverListing =
+    "spark.sql.sources.parallelPartitionDiscovery.threshold" -> Int.MaxValue.toString
+
   def builder(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cores]")
+      .config(DriverListing._1, DriverListing._2)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

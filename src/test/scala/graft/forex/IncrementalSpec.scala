@@ -43,6 +43,28 @@ class IncrementalSpec extends SparkSpec {
         (pmod(xxhash64(col("id"), lit(1)), lit(1000L)) - 500) / 1e6).as("value"))
   }
 
+  /** `ev` as bronze stands at 01:00 on day `day` (day 0 = 2024-01-01): each
+    * daily run lands one more day, and the ticks before 01:00 fall in the
+    * previous day's shifted 4h/12h candles.
+    */
+  private def landedBy(ev: DataFrame, day: Int): DataFrame =
+    ev.filter(unix_micros(col("ts")) < lit(Day0Us + day * DayUs + DayUs / 24))
+
+  /** The day index of `ts`, day 0 = 2024-01-01, a Monday. */
+  private def dayIndex: org.apache.spark.sql.Column =
+    floor((unix_micros(col("ts")) - lit(Day0Us)) / lit(DayUs)).cast("int")
+
+  /** Silver and gold of a one-shot run over `ev`, as sorted rows. */
+  private def oneShot(ev: DataFrame): (Seq[String], Seq[String]) = {
+    val (silver, gold) = (tmp(), tmp())
+    ForexIncremental.runSilver(ev, silver)
+    ForexIncremental.runGold(spark, silver, gold)
+    (storeRows(silver), storeRows(gold))
+  }
+
+  private def storeRows(dir: String): Seq[String] =
+    sortedRows(IncrementalStore.readTable(spark, dir), Seq("dbt_updated_at", "p_date"))
+
   /** Each `p_date=` directory of a local table: its day and file names. */
   private def dayFiles(dir: String): Map[java.time.LocalDate, Set[String]] =
     new java.io.File(dir).listFiles().toSeq
@@ -137,17 +159,12 @@ class IncrementalSpec extends SparkSpec {
 
   test("gold: daily runs past the 60-day lookback equal one-shot, rewriting only their days") {
     val ev = longEvents(70)
-    // bronze as it stands at 01:00 on day `day`: each daily run lands one
-    // more day, and the ticks before 01:00 fall in the previous day's
-    // shifted 4h/12h candles
-    def landedBy(day: Int): DataFrame =
-      ev.filter(unix_micros(col("ts")) < lit(Day0Us + day * DayUs + DayUs / 24))
-    val (silverInc, goldInc, silverOnce, goldOnce) = (tmp(), tmp(), tmp(), tmp())
-    ForexIncremental.runSilver(landedBy(66), silverInc) // history > 60 days
+    val (silverInc, goldInc) = (tmp(), tmp())
+    ForexIncremental.runSilver(landedBy(ev, 66), silverInc) // history > 60 days
     ForexIncremental.runGold(spark, silverInc, goldInc)
     for (day <- 67 to 69) {
       val before = dayFiles(goldInc)
-      ForexIncremental.runSilver(landedBy(day), silverInc)
+      ForexIncremental.runSilver(landedBy(ev, day), silverInc)
       ForexIncremental.runGold(spark, silverInc, goldInc)
       val after = dayFiles(goldInc)
       val (first, last) = (before.keys.max.minusDays(1), dayFiles(silverInc).keys.max)
@@ -157,10 +174,48 @@ class IncrementalSpec extends SparkSpec {
         s"day $day run changed gold days ${changed.toSeq.sortBy(_.toEpochDay)} " +
           s"outside [$first, $last]")
     }
-    ForexIncremental.runSilver(landedBy(69), silverOnce)
-    ForexIncremental.runGold(spark, silverOnce, goldOnce)
-    val a = sortedRows(IncrementalStore.readTable(spark, goldInc), Seq("dbt_updated_at", "p_date"))
-    val b = sortedRows(IncrementalStore.readTable(spark, goldOnce), Seq("dbt_updated_at", "p_date"))
-    assert(a === b)
+    assert(storeRows(goldInc) === oneShot(landedBy(ev, 69))._2)
+  }
+
+  test("gold: a daily run reads no silver before the newest gold day - 1") {
+    val ev = longEvents(70)
+    val (silverInc, goldInc) = (tmp(), tmp())
+    ForexIncremental.runSilver(landedBy(ev, 66), silverInc)
+    ForexIncremental.runGold(spark, silverInc, goldInc)
+    // the window predecessors of the rewritten candles come from gold, so
+    // silver older than the rewritten range can be gone
+    val dropped = IncrementalStore.retainDays(spark, silverInc,
+      IncrementalStore.listDays(spark, goldInc).last.minusDays(1))
+    assert(dropped.size > 60)
+    ForexIncremental.runSilver(landedBy(ev, 67), silverInc)
+    ForexIncremental.runGold(spark, silverInc, goldInc)
+    assert(storeRows(goldInc) === oneShot(landedBy(ev, 67))._2)
+  }
+
+  test("gold: weekday-only ticks with holidays: daily and --date runs equal one-shot") {
+    // Monday to Friday, less two Thursday holidays: 60 day partitions hold
+    // 48 daily candles, fewer than sma_50 reads, and 49 daily candles span
+    // about 70 calendar days
+    val ev = longEvents(86).filter(
+      pmod(dayIndex, lit(7)) < 5 && !dayIndex.isin(38, 45))
+    val (silverInc, goldInc) = (tmp(), tmp())
+    ForexIncremental.runSilver(landedBy(ev, 78), silverInc)
+    ForexIncremental.runGold(spark, silverInc, goldInc)
+    for (day <- Seq(79, 80, 81, 84, 85)) { // 84: the Monday after a weekend
+      ForexIncremental.runSilver(landedBy(ev, day), silverInc)
+      ForexIncremental.runGold(spark, silverInc, goldInc)
+    }
+    assert(storeRows(goldInc) === oneShot(landedBy(ev, 85))._2)
+
+    // restate Friday day 11's prices: its 49th daily successor is day 84,
+    // 73 calendar days on
+    val restated = landedBy(ev, 85).withColumn("value",
+      when(dayIndex === 11, col("value") + 0.001).otherwise(col("value")))
+    val day11 = java.time.LocalDate.of(2024, 1, 12)
+    ForexIncremental.runSilverBackfill(restated, silverInc, day11)
+    ForexIncremental.runGoldBackfill(spark, silverInc, goldInc, day11)
+    val (silverOnce, goldOnce) = oneShot(restated)
+    assert(storeRows(silverInc) === silverOnce)
+    assert(storeRows(goldInc) === goldOnce)
   }
 }

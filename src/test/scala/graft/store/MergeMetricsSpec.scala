@@ -107,4 +107,42 @@ class MergeMetricsSpec extends SparkSpec {
     IncrementalStore.upsertByKey(batch(5 until 20), dir, "ts", Seq("k"))
     assert(spark.conf.getAll === before)
   }
+
+  test("with GraftSession's listing conf a store read starts no listing job") {
+    val dir = freshDir("listing")
+    // 40 day directories: past parallel partition discovery's 32 paths
+    val noon0 = java.time.Instant.parse("2024-03-01T12:00:00Z").getEpochSecond * 1000000L
+    IncrementalStore.overwriteDayPartitions(spark.range(40).select(col("id").as("k"),
+      timestamp_micros(lit(noon0) + col("id") * 86400000000L).as("ts")), dir, "ts")
+    def listingJobs(): Int = {
+      val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          descriptions.add(Option(e.properties)
+            .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        assert(IncrementalStore.readTable(spark, dir).count() === 40L)
+        // the bus delivers in order: once the marker job is seen, so is
+        // every job the read started
+        spark.sparkContext.setJobDescription("listing-probe-marker")
+        try spark.sparkContext.parallelize(Seq(1), 1).count()
+        finally spark.sparkContext.setJobDescription(null)
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (!descriptions.contains("listing-probe-marker") && System.nanoTime() < deadline)
+          Thread.sleep(20)
+        assert(descriptions.contains("listing-probe-marker"))
+        descriptions.toArray.count(_.toString.startsWith("Listing leaf files"))
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val (key, value) = graft.GraftSession.DriverListing
+    val prior = spark.conf.getOption(key)
+    spark.conf.unset(key)
+    try {
+      assert(listingJobs() > 0, "Spark's default lists 40 directories in a job")
+      spark.conf.set(key, value)
+      assert(listingJobs() === 0)
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
