@@ -16,22 +16,9 @@ object Bench {
     // dev-only subset filter (mirrors Verify's): SPARK_GRAFT_QUERIES=a,b,c
     // times just those queries for isolation runs; the driver never sets it
     val onlyQueries = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(',').toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.base(cpus.toInt)
       .config("spark.sql.adaptive.enabled", "true")
-      // The codegen class cache (static conf) defaults to 100 entries; a
-      // session running hundreds of distinct query plans cycles it every
-      // pass and Janino-recompiles every WholeStageCodegen unit per query
-      // per run (measured: 118.8 s -> 94.3 s on a 50-query subset at
-      // sf0.1). Not a local-mode tweak: any long-lived driver serving many
-      // distinct plans (the 100 TB warehouse shape) wants the cache sized
-      // to its plan population; entries are compiled classes, bounded by
-      // generated-code size, well within driver heap at 10k.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
+      .config(GraftSession.CodegenCache._1, GraftSession.CodegenCache._2)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val errs = scala.collection.mutable.LinkedHashMap[String, String]()

@@ -1,24 +1,34 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.VecDot
+import graft.plans.{AsOfJoinPruningRule, AsOfJoinStrategy, IntervalJoinPruningRule, IntervalJoinStrategy}
 
-/** SparkSessionExtensions entry point: registers the engine's custom
-  * Catalyst expressions as SQL functions, so `spark.sql("SELECT
-  * vec_dot(a, b)")` works next to the Column API.
+/** The engine's one `SparkSessionExtensions` entry point: the custom
+  * Catalyst expressions as SQL functions (`vec_dot`, `topk_by`, next to
+  * the Column API), and the whole custom operators (the as-of join and
+  * the interval sweep join: LogicalPlan node → planner strategy →
+  * SparkPlan) with their column-pruning optimizer rules.
   *
-  * Wire up via `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.GraftExtensions`.
+  * Every [[GraftSession]] session is built with it. A deployment that
+  * builds its own sessions loads it from configuration:
+  * {{{
+  *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions …
+  * }}}
+  * A session built without it cannot plan `AsOfJoinNative.backward` or
+  * `IntervalJoinNative.contains` ("No plan for AsOfJoinNode").
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectFunction(GraftExtensions.vecDotDescriptor)
     e.injectFunction(GraftExtensions.topkByDescriptor)
-    e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    e.injectOptimizerRule(_ => graft.plans.AsOfJoinPruningRule)
+    e.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    e.injectPlannerStrategy(_ => IntervalJoinStrategy)
+    e.injectOptimizerRule(_ => AsOfJoinPruningRule)
+    e.injectOptimizerRule(_ => IntervalJoinPruningRule)
   }
 }
 
@@ -59,43 +69,4 @@ object GraftExtensions {
       }
       graft.functions.TopKByAgg(children.head, children(1), k)
     })
-
-  /** Register on an existing session (for sessions not built with
-    * withExtensions, e.g. the driver-owned ones).
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDot(exprs.head, exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_by", topkByDescriptor._3, "scala_udf")
-  }
-}
-
-/** Canonical session factory for library users: local-cluster-shaped conf
-  * with the settings every graft workload needs (UTC, ns-timestamp reads,
-  * µs writes, AQE with skew-join handling, sane shuffle width).
-  */
-object GraftSession {
-
-  /** Makes partition discovery list a read's paths on the driver, however
-    * many there are. Past this threshold (32 paths by default) Spark lists
-    * them in a job with one task per directory, which a `local[n]` session
-    * runs on the same machine anyway: the daily run's checks over 77 days
-    * of gold ran 84 tasks with that job and 7 without it.
-    */
-  final val DriverListing =
-    "spark.sql.sources.parallelPartitionDiscovery.threshold" -> Int.MaxValue.toString
-
-  def builder(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession.Builder =
-    SparkSession.builder()
-      .master(s"local[$cores]")
-      .config(DriverListing._1, DriverListing._2)
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
 }

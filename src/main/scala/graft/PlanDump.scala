@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Measurement tooling (optimization rounds): write `.explain("formatted")`
   * for named registry queries — plus the per-round subplans of the
@@ -21,14 +21,9 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, names) = args.take(4)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.base(cpus.toInt)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
+      .config(GraftSession.CodegenCache._1, GraftSession.CodegenCache._2)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))

@@ -17,7 +17,9 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, Timesta
   * both WITHOUT recompilation:
   *
   *  - parquet `TIMESTAMP(NANOS)`: Spark is µs-native and cannot represent it;
-  *    with `spark.sql.legacy.parquet.nanosAsLong=true` it arrives as a raw
+  *    with `spark.sql.legacy.parquet.nanosAsLong=true` (every
+  *    [[GraftSession]] session starts with it; the reader leaves the
+  *    session conf alone) it arrives as a raw
   *    epoch-ns `LongType` and we floor-divide to µs — identical to DuckDB's
   *    `CAST(ts AS TIMESTAMP)` ns→µs truncation for positive epochs.
   *  - parquet `TIMESTAMP(MICROS)` (adjusted-to-UTC or NTZ): arrives as
@@ -61,14 +63,6 @@ object Tables {
     }
   }
 
-  /** Raw events read with the legacy-nanos conf set (harmless for µs files;
-    * required so NANOS files surface as LongType instead of erroring).
-    */
-  private def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    read(spark, dir, "events")
-  }
-
   /** Normalize `ts` to session-UTC TimestampType per the dual-schema contract. */
   private def normalizeTs(df: DataFrame): DataFrame = df.schema("ts").dataType match {
     case LongType         => df.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
@@ -102,13 +96,13 @@ object Tables {
 
   /** events with `ts` normalized to TimestampType (µs, session-UTC). */
   def events(spark: SparkSession, dir: String): DataFrame =
-    normalizeTs(eventsRaw(spark, dir))
+    normalizeTs(read(spark, dir, "events"))
 
   /** events restricted to one UTC day — pushed-down raw-column predicate,
     * see [[rawTsPredicate]].
     */
   def eventsDay(spark: SparkSession, dir: String, day: java.time.LocalDate): DataFrame = {
-    val raw = eventsRaw(spark, dir)
+    val raw = read(spark, dir, "events")
     val start = day.atStartOfDay(java.time.ZoneOffset.UTC).toInstant
     val end = day.plusDays(1).atStartOfDay(java.time.ZoneOffset.UTC).toInstant
     normalizeTs(raw.filter(rawTsPredicate(raw.schema("ts").dataType, Some(start), Some(end))))
@@ -118,7 +112,7 @@ object Tables {
     * same rationale as [[eventsDay]].
     */
   def eventsBefore(spark: SparkSession, dir: String, day: java.time.LocalDate): DataFrame = {
-    val raw = eventsRaw(spark, dir)
+    val raw = read(spark, dir, "events")
     val start = day.atStartOfDay(java.time.ZoneOffset.UTC).toInstant
     normalizeTs(raw.filter(rawTsPredicate(raw.schema("ts").dataType, None, Some(start))))
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,20 +10,10 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // harmless guard: lets TIMESTAMP(NANOS)-layout events files surface as
-      // LongType instead of erroring (Tables.scala dual-schema contract);
-      // a no-op for the µs layout current testdata ships
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.base(cpus.toInt)
       // µs timestamps on write so DuckDB reads what Spark computed
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // match Bench: the 100-entry codegen class cache thrashes under
-      // hundreds of distinct plans (see Bench.scala for the measurement)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
+      .config(GraftSession.CodegenCache._1, GraftSession.CodegenCache._2)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

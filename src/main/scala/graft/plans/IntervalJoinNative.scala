@@ -198,16 +198,6 @@ case class IntervalJoinExec(
 
 object IntervalJoinNative {
 
-  /** Register strategy + pruning rule on a session (idempotent). */
-  def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(IntervalJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ IntervalJoinStrategy
-    if (!spark.experimental.extraOptimizations.contains(IntervalJoinPruningRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ IntervalJoinPruningRule
-  }
-
   /** Column-API builder mirroring
     * [[graft.relational.RangeJoin.pointInInterval]] (minus the bin-width
     * knob — the sweep needs none). The interval side re-projects through
@@ -219,7 +209,6 @@ object IntervalJoinNative {
       tsCol: String, startCol: String, endCol: String,
       intervalPayload: Seq[String]): DataFrame = {
     val spark = points.sparkSession
-    ensureStrategy(spark)
     val rPrep = intervals.select(
       keys.map(k => col(k).as(s"__ik_$k")) ++
         intervalPayload.map(p => col(p).as(s"__ip_$p")) :+

@@ -386,18 +386,14 @@ object FormatQueries {
     fs.delete(root, true)
     val ckpt = StoreQueries.scratchPath(s, s"graft_store/dsv2_sink_stream_ckpt")
     fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-    val q = s.readStream.format("graft-ticks")
-      .option("rows", "10000").option("pages", "8")
-      .option("maxTicksPerTrigger", "3000").load()
-      .select(col("tick_id"), col("page"), unix_micros(col("ts")).as("ts_us"),
-        col("symbol"), col("price"))
-      .writeStream.format("graft-sink")
-      .option("path", target).option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    if (!q.awaitTermination(300000)) {
-      q.stop()
-      throw new IllegalStateException("dsv2 sink stream did not finish in 300s")
+    PipelineQueries.awaitBounded(s, "stream_dsv2_sink") {
+      s.readStream.format("graft-ticks")
+        .option("rows", "10000").option("pages", "8")
+        .option("maxTicksPerTrigger", "3000").load()
+        .select(col("tick_id"), col("page"), unix_micros(col("ts")).as("ts_us"),
+          col("symbol"), col("price"))
+        .writeStream.format("graft-sink")
+        .option("path", target).option("checkpointLocation", ckpt)
     }
     s.read.schema(sinkReadSchema)
       .option("pathGlobFilter", "epoch-*.csv").csv(target)

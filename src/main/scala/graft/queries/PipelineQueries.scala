@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{PipelineRunner, Tables}
+import graft.GraftSession.withConf
 import graft.ingest.Ingest
 import graft.store.IncrementalStore
 
@@ -230,29 +231,11 @@ object PipelineQueries {
     */
   val streamOhlc1h: Q = (s, dir) => {
     val base = silverStreamSource(s, dir)
-    val name = "graft_stream_ohlc_1h"
-    s.streams.active.filter(_.name == name).foreach(_.stop())
-    // the stateful agg creates one state-store instance (with per-batch
-    // delta + commit files) per shuffle partition; 720 windows need 8, not
-    // 32 — streaming disables AQE, so nothing coalesces this for us
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(s))
-    try {
-      val q = graft.streaming.ForexStream
+    runBoundedStream(s, "graft_stream_ohlc_1h",
+      () => graft.streaming.ForexStream
         .candlesComplete(graft.streaming.ForexStream.ticks(s, base),
-          graft.forex.Resample.byName("1h"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(300000)) {
-        q.stop() // never leak a running stream into later queries' conf changes
-        throw new IllegalStateException(
-          s"stream_ohlc_1h did not finish within 300s (a timed-out run would " +
-            "otherwise return a silently partial memory-sink table)")
-      }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    s.table(name).orderBy(col("candle_start"))
+          graft.forex.Resample.byName("1h")),
+      "complete").orderBy(col("candle_start"))
   }
 
   /** STREAM-STREAM interval join at the gate: purchases and clicks flow as
@@ -393,21 +376,13 @@ object PipelineQueries {
   val streamToStore: Q = (s, dir) => {
     val base = silverStreamSource(s, dir)
     val store = scratch(s, "stream_to_store_tbl")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(s))
-    try {
-      val q = graft.streaming.ForexStream.writeToStore(
+    awaitBounded(s, "stream_to_store") {
+      graft.streaming.ForexStream.writeToStore(
           graft.streaming.ForexStream.candlesComplete(
             graft.streaming.ForexStream.ticks(s, base),
             graft.forex.Resample.byName("1h")), store)
         .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("stream_to_store did not finish within 300s")
-      }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     IncrementalStore.readTable(s, store)
       .select(col("timeframe"), col("candle_start"), col("open_price"),
         col("high_price"), col("low_price"), col("close_price"),
@@ -474,14 +449,9 @@ object PipelineQueries {
     // multi-task writes (AQE would coalesce to one file at this scale); 8
     // tasks fragment just as well as 32 without paying 32-task launch
     // overhead on every fixture stage
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled", "true")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try graft.forex.ForexIncremental.runSilver(tenDays, store)
-    finally {
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    withConf(s, "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> "8") {
+      graft.forex.ForexIncremental.runSilver(tenDays, store)
     }
     val days = IncrementalStore.readTable(s, store)
       .select(col(IncrementalStore.PartitionCol)).distinct()
@@ -500,29 +470,38 @@ object PipelineQueries {
        |      (SELECT min(epoch_us(CAST(ts AS TIMESTAMP))) + 10 * 86400000000 FROM events)
        |ORDER BY observed_at""".stripMargin
 
-  /** Bounded-run harness shared by the round-4 streaming queries: stop any
-    * prior run of `name`, drop state-store partitions to 8 (streaming
-    * disables AQE; 32 state stores for a few hundred windows is pure
-    * overhead), run to completion under AvailableNow, restore the conf.
+  /** Runs one bounded stream to completion: the configured `writer` is
+    * started under `Trigger.AvailableNow` with the shuffle partitions cut
+    * to [[streamShufflePartitions]] (a stateful operator creates one state
+    * store per shuffle partition, and streaming disables AQE, so nothing
+    * coalesces them), and the session conf is restored afterwards. A run
+    * that does not finish within 300 s is stopped and fails: it would
+    * otherwise return a silently partial table.
+    */
+  private[queries] def awaitBounded(s: SparkSession, name: String)(
+      writer: => org.apache.spark.sql.streaming.DataStreamWriter[_]): Unit =
+    withConf(s, "spark.sql.shuffle.partitions" -> streamShufflePartitions(s)) {
+      val q = writer
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      if (!q.awaitTermination(300000)) {
+        q.stop() // never leak a running stream into later queries
+        throw new IllegalStateException(
+          s"$name did not finish within 300s (a timed-out run would " +
+            "otherwise return a silently partial table)")
+      }
+    }
+
+  /** Bounded-run harness of the memory-sink streaming queries: stop any
+    * prior run of `name`, run to completion into a memory sink
+    * ([[awaitBounded]]) and return the sink's table.
     */
   private[queries] def runBoundedStream(s: SparkSession, name: String,
       build: () => DataFrame, mode: String): DataFrame = {
     s.streams.active.filter(_.name == name).foreach(_.stop())
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(s))
-    try {
-      val q = build()
-        .writeStream.format("memory").queryName(name)
-        .outputMode(mode)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException(
-          s"$name did not finish within 300s (a timed-out run would " +
-            "otherwise return a silently partial memory-sink table)")
-      }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    awaitBounded(s, name) {
+      build().writeStream.format("memory").queryName(name).outputMode(mode)
+    }
     s.table(name)
   }
 
@@ -544,23 +523,13 @@ object PipelineQueries {
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(target), true)
     fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(s))
-    try {
-      val q = build()
+    awaitBounded(s, name) {
+      build()
         .writeStream.format("graft-sink")
         .option("path", target).option("checkpointLocation", ckpt)
         .queryName(name)
         .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException(
-          s"$name did not finish within 300s (a timed-out run would " +
-            "otherwise return a silently partial sink table)")
-      }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     s.read.format("graft-sink").load(target)
   }
 
@@ -696,27 +665,17 @@ object PipelineQueries {
     val fs = new org.apache.hadoop.fs.Path(ckpt)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions(s))
-    try {
-      val mergeDays: (DataFrame, Long) => Unit = (batch, bid) =>
-        IncrementalStore.mergeBatchDayPartitions(
-          perBatch(batch, bid, target), bid, target, dayCol,
-          clusterBy = clusterBy, retentionFloor = retentionFloor)
-      val q = source()
+    val mergeDays: (DataFrame, Long) => Unit = (batch, bid) =>
+      IncrementalStore.mergeBatchDayPartitions(
+        perBatch(batch, bid, target), bid, target, dayCol,
+        clusterBy = clusterBy, retentionFloor = retentionFloor)
+    awaitBounded(s, name) {
+      source()
         .writeStream
         .foreachBatch(mergeDays)
         .option("checkpointLocation", ckpt)
         .queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException(
-          s"$name did not finish within 300s (a timed-out run would " +
-            "otherwise return a silently partial store table)")
-      }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     val tp = new org.apache.hadoop.fs.Path(target)
     if (!fs.exists(tp))
       // a source that delivered zero rows (or whose rows all fell below
@@ -880,25 +839,9 @@ object PipelineQueries {
     val stored = streamFixtureToDayStore(s, "stream_cms_store", dir,
       Sketches.cmsCounters(ev, key, groupCols = Seq("day")),
       clusterBy = Seq("row_id"))
-    val merged = stored
-      .groupBy(col("row_id"), col("bucket")).agg(sum(col("n")).as("n"))
-    val direct = Sketches.cmsCounters(ev, key)
-    val top = graft.Scratch.table(
-      ev.groupBy(col("user_id")).agg(count(lit(1)).as("n_exact"))
-        .orderBy(col("n_exact").desc, col("user_id")).limit(20),
+    RelationalQueries.cmsServeReport(ev, stored
+      .groupBy(col("row_id"), col("bucket")).agg(sum(col("n")).as("n")),
       "scs-top")
-    val estD = Sketches.cmsEstimate(top, key, direct)
-      .withColumnRenamed("n_cms", "n_cms_direct")
-    val estM = Sketches.cmsEstimate(top, key, merged)
-      .withColumnRenamed("n_cms", "n_cms_merged")
-    top
-      .join(estD, key === estD("__key"))
-      .join(estM, key === estM("__key"))
-      .select(col("user_id"), col("n_exact"), col("n_cms_direct"),
-        col("n_cms_merged"),
-        (col("n_cms_merged") === col("n_cms_direct")).cast("long")
-          .as("merge_exact"))
-      .orderBy(col("n_exact").desc, col("user_id"))
   }
 
   /** STREAMING maintenance of the TRAINING-PACK layout — the pack family

@@ -2523,26 +2523,10 @@ object RelationalQueries {
       Tables.events(s, dir)
         .select(to_date(col("ts")).as("day"), col("user_id")),
       "cmsmd-ev")
-    val key = col("user_id").cast("string")
-    val direct = Sketches.cmsCounters(ev, key)
-    val merged = Sketches.cmsCounters(ev, key, groupCols = Seq("day"))
+    val merged = Sketches.cmsCounters(ev, col("user_id").cast("string"),
+        groupCols = Seq("day"))
       .groupBy(col("row_id"), col("bucket")).agg(sum(col("n")).as("n"))
-    val top = graft.Scratch.table(
-      ev.groupBy(col("user_id")).agg(count(lit(1)).as("n_exact"))
-        .orderBy(col("n_exact").desc, col("user_id")).limit(20),
-      "cmsmd-top")
-    val estD = Sketches.cmsEstimate(top, key, direct)
-      .withColumnRenamed("n_cms", "n_cms_direct")
-    val estM = Sketches.cmsEstimate(top, key, merged)
-      .withColumnRenamed("n_cms", "n_cms_merged")
-    top
-      .join(estD, key === estD("__key"))
-      .join(estM, key === estM("__key"))
-      .select(col("user_id"), col("n_exact"), col("n_cms_direct"),
-        col("n_cms_merged"),
-        (col("n_cms_merged") === col("n_cms_direct")).cast("long")
-          .as("merge_exact"))
-      .orderBy(col("n_exact").desc, col("user_id"))
+    cmsServeReport(ev, merged, "cmsmd-top")
   }
 
   val cmsMergeDaysSql: String = {
@@ -2646,27 +2630,10 @@ object RelationalQueries {
         date_add(col("d0"), 15)))
       .drop("d0")
     val sp = graft.Scratch.table(spanOf(evAll), "cmsrs-sp")
-    val key = col("user_id").cast("string")
-    val direct = Sketches.cmsCounters(sp, key)
-    val merged = spanOf(Sketches.cmsCounters(evAll, key,
-        groupCols = Seq("day")))
+    val merged = spanOf(Sketches.cmsCounters(evAll,
+        col("user_id").cast("string"), groupCols = Seq("day")))
       .groupBy(col("row_id"), col("bucket")).agg(sum(col("n")).as("n"))
-    val top = graft.Scratch.table(
-      sp.groupBy(col("user_id")).agg(count(lit(1)).as("n_exact"))
-        .orderBy(col("n_exact").desc, col("user_id")).limit(20),
-      "cmsrs-top")
-    val estD = Sketches.cmsEstimate(top, key, direct)
-      .withColumnRenamed("n_cms", "n_cms_direct")
-    val estM = Sketches.cmsEstimate(top, key, merged)
-      .withColumnRenamed("n_cms", "n_cms_merged")
-    top
-      .join(estD, key === estD("__key"))
-      .join(estM, key === estM("__key"))
-      .select(col("user_id"), col("n_exact"), col("n_cms_direct"),
-        col("n_cms_merged"),
-        (col("n_cms_merged") === col("n_cms_direct")).cast("long")
-          .as("merge_exact"))
-      .orderBy(col("n_exact").desc, col("user_id"))
+    cmsServeReport(sp, merged, "cmsrs-top")
   }
 
   /** [[hllRangeServe]] with the per-day register table GOVERNED: registers
@@ -2720,23 +2687,7 @@ object RelationalQueries {
     val merged = spanOf(stored.select(col("day"), col("row_id"),
         col("bucket"), col("n")))
       .groupBy(col("row_id"), col("bucket")).agg(sum(col("n")).as("n"))
-    val direct = Sketches.cmsCounters(sp, key)
-    val top = graft.Scratch.table(
-      sp.groupBy(col("user_id")).agg(count(lit(1)).as("n_exact"))
-        .orderBy(col("n_exact").desc, col("user_id")).limit(20),
-      "cmsss-top")
-    val estD = Sketches.cmsEstimate(top, key, direct)
-      .withColumnRenamed("n_cms", "n_cms_direct")
-    val estM = Sketches.cmsEstimate(top, key, merged)
-      .withColumnRenamed("n_cms", "n_cms_merged")
-    top
-      .join(estD, key === estD("__key"))
-      .join(estM, key === estM("__key"))
-      .select(col("user_id"), col("n_exact"), col("n_cms_direct"),
-        col("n_cms_merged"),
-        (col("n_cms_merged") === col("n_cms_direct")).cast("long")
-          .as("merge_exact"))
-      .orderBy(col("n_exact").desc, col("user_id"))
+    cmsServeReport(sp, merged, "cmsss-top")
   }
 
   /** Watermark-driven incremental maintenance of the governed HLL
@@ -2778,23 +2729,7 @@ object RelationalQueries {
       "day", clusterBy = Seq("row_id"))
     val merged = stored
       .groupBy(col("row_id"), col("bucket")).agg(sum(col("n")).as("n"))
-    val direct = Sketches.cmsCounters(ev, key)
-    val top = graft.Scratch.table(
-      ev.groupBy(col("user_id")).agg(count(lit(1)).as("n_exact"))
-        .orderBy(col("n_exact").desc, col("user_id")).limit(20),
-      "cmssi-top")
-    val estD = Sketches.cmsEstimate(top, key, direct)
-      .withColumnRenamed("n_cms", "n_cms_direct")
-    val estM = Sketches.cmsEstimate(top, key, merged)
-      .withColumnRenamed("n_cms", "n_cms_merged")
-    top
-      .join(estD, key === estD("__key"))
-      .join(estM, key === estM("__key"))
-      .select(col("user_id"), col("n_exact"), col("n_cms_direct"),
-        col("n_cms_merged"),
-        (col("n_cms_merged") === col("n_cms_direct")).cast("long")
-          .as("merge_exact"))
-      .orderBy(col("n_exact").desc, col("user_id"))
+    cmsServeReport(ev, merged, "cmssi-top")
   }
 
   /** RETENTION on a GOVERNED sketch table — the lifecycle interplay the
@@ -2880,6 +2815,37 @@ object RelationalQueries {
         (col("raw_merged") === col("raw_direct")).cast("long")
           .as("merge_exact"))
       .orderBy(col("event_type"))
+  }
+
+  /** Shared report arm of every CMS serve variant (merge/range/store/
+    * incremental/stream): the span's top-20 users by exact count, each
+    * with its CMS estimate from the direct counters over the span's ROWS
+    * and from the given `merged` (row_id, bucket, n) counters, and
+    * `merge_exact` asserting the two equal. Counters are integer-linear,
+    * so summed day tables equal the one-shot build bit for bit. `topTag`
+    * names the top-20's scratch table.
+    */
+  private[queries] def cmsServeReport(spanRows: DataFrame, merged: DataFrame,
+      topTag: String): DataFrame = {
+    import graft.relational.Sketches
+    val key = col("user_id").cast("string")
+    val direct = Sketches.cmsCounters(spanRows, key)
+    val top = graft.Scratch.table(
+      spanRows.groupBy(col("user_id")).agg(count(lit(1)).as("n_exact"))
+        .orderBy(col("n_exact").desc, col("user_id")).limit(20),
+      topTag)
+    val estD = Sketches.cmsEstimate(top, key, direct)
+      .withColumnRenamed("n_cms", "n_cms_direct")
+    val estM = Sketches.cmsEstimate(top, key, merged)
+      .withColumnRenamed("n_cms", "n_cms_merged")
+    top
+      .join(estD, key === estD("__key"))
+      .join(estM, key === estM("__key"))
+      .select(col("user_id"), col("n_exact"), col("n_cms_direct"),
+        col("n_cms_merged"),
+        (col("n_cms_merged") === col("n_cms_direct")).cast("long")
+          .as("merge_exact"))
+      .orderBy(col("n_exact").desc, col("user_id"))
   }
 
   val sketchStoreRetentionSql: String = {

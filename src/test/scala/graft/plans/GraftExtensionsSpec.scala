@@ -1,75 +1,82 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** GraftExtensions is the `spark.sql.extensions` deployment path: a session
-  * built WITH the extension must plan the custom operators through the
-  * INJECTED strategy alone — the per-call `ensureStrategy` fallback
-  * (session.experimental lists) must stay empty, otherwise this test would
-  * prove nothing. The node is therefore built by hand (the builder calls
-  * ensureStrategy as a convenience); without EITHER registration Spark's
-  * planner throws "No plan for AsOfJoinNode", so successful execution IS
-  * the proof the injection worked.
+/** [[graft.GraftExtensions]] is the only way the custom operators reach a
+  * session: the shared test session is built by `GraftSession.base`, which
+  * injects it, and nothing registers anything per call. With the
+  * `experimental` lists empty, Spark's planner would throw "No plan for
+  * AsOfJoinNode" (or IntervalJoinNode) without the injected strategies, so
+  * a planned exec node is the proof the injection worked.
   */
 class GraftExtensionsSpec extends SparkSpec {
 
-  /** AsOfJoinNative.backward minus its ensureStrategy call. */
-  private def nodeJoin(s: SparkSession, left: DataFrame,
-      right: DataFrame): DataFrame = {
-    val rPrep = right.select(col("k").as("__rk_k"), col("v").as("__rp_v"),
-      col("rts").as("__rts"))
-    val lPlan = left.queryExecution.analyzed
-    val rPlan = rPrep.queryExecution.analyzed
-    def attrOf(plan: LogicalPlan, name: String): Attribute =
-      plan.output.find(_.name == name).getOrElse(fail(s"no column $name"))
-    val node = AsOfJoinNode(lPlan, rPlan,
-      Seq(attrOf(lPlan, "k")), Seq(attrOf(rPlan, "__rk_k")),
-      attrOf(lPlan, "ts"), attrOf(rPlan, "__rts"),
-      Seq(attrOf(rPlan, "__rp_v")))
-    GraftSqlBridge.ofRows(s, node)
-      .select(col("id"), col("__rp_v").as("v"))
-  }
+  import spark.implicits._
+
+  private def ts(h: Int) = java.sql.Timestamp.valueOf(f"2024-03-01 $h%02d:00:00")
+
+  private def assertNoExperimental(): Unit =
+    assert(spark.experimental.extraStrategies.isEmpty &&
+      spark.experimental.extraOptimizations.isEmpty,
+      "the experimental lists must stay empty for this proof")
+
+  // the probe side carries `extra`, which no projection above the node uses
+  private def asofJoin(): DataFrame = AsOfJoinNative.backward(
+    Seq((1L, ts(0), "a", "x"), (2L, ts(5), "a", "x"), (3L, ts(7), "a", "x"),
+      (4L, ts(9), "b", "x")).toDF("id", "ts", "k", "extra"),
+    Seq(("a", ts(5), 50.0), ("a", ts(8), 80.0), ("b", ts(2), 20.0))
+      .toDF("k", "rts", "v"),
+    "ts", "rts", Seq("k"), Seq("v"))
+
+  private def intervalJoin(): DataFrame = IntervalJoinNative.contains(
+    Seq((1L, ts(5), "a", "x"), (2L, ts(10), "a", "x"), (3L, ts(20), "a", "x"))
+      .toDF("id", "ts", "k", "extra"),
+    Seq(("a", ts(0), ts(10), "p"), ("a", ts(8), ts(12), "q"))
+      .toDF("k", "lo", "hi", "tag"),
+    Seq("k"), "ts", "lo", "hi", Seq("tag"))
+
+  /** The probe-side output directly below the custom node. */
+  private def probeColumns(plan: LogicalPlan): Seq[String] =
+    plan.collectFirst {
+      case n: AsOfJoinNode => n.left.output.map(_.name)
+      case n: IntervalJoinNode => n.left.output.map(_.name)
+    }.getOrElse(fail(s"no custom join node in\n$plan"))
 
   test("withExtensions(new GraftExtensions) plans the native node with an " +
       "EMPTY experimental fallback") {
-    val base = spark // materialize the shared session/context first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val ext = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate() // reuses the SparkContext, builds a NEW SparkSession
-    try {
-      assert(ext ne base, "clearing active+default must force a new session")
-      assert(ext.experimental.extraStrategies.isEmpty &&
-        ext.experimental.extraOptimizations.isEmpty,
-        "fallback registration must be unused for this proof")
-      import ext.implicits._
-      def ts(h: Int) = java.sql.Timestamp.valueOf(f"2024-03-01 $h%02d:00:00")
-      val left = Seq((1L, ts(0), "a"), (2L, ts(5), "a"), (3L, ts(7), "a"),
-        (4L, ts(9), "b")).toDF("id", "ts", "k")
-      val right = Seq(("a", ts(5), 50.0), ("a", ts(8), 80.0),
-        ("b", ts(2), 20.0)).toDF("k", "rts", "v")
-      val df = nodeJoin(ext, left, right)
-      assert(df.queryExecution.executedPlan.toString.contains("AsOfJoin ["),
-        "injected strategy must plan AsOfJoinExec")
-      val got = df.collect().map(r =>
-        r.getLong(0) -> (if (r.isNullAt(1)) null else r.getDouble(1))).toMap
-      assert(got === Map(1L -> null, 2L -> 50.0, 3L -> 50.0, 4L -> 20.0))
-      // the optimizer rule came through the extension too: a projection
-      // that drops the payload prunes it below the node
-      val pruned = nodeJoin(ext, left, right).select("id")
-      assert(pruned.collect().map(_.getLong(0)).sorted === Array(1L, 2L, 3L, 4L))
-    } finally {
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
+    assertNoExperimental()
+    val df = asofJoin().select(col("id"), col("v"))
+    assert(df.queryExecution.executedPlan.toString.contains("AsOfJoin ["),
+      "injected strategy must plan AsOfJoinExec")
+    val got = df.collect().map(r =>
+      r.getLong(0) -> (if (r.isNullAt(1)) null else r.getDouble(1))).toMap
+    assert(got === Map(1L -> null, 2L -> 50.0, 3L -> 50.0, 4L -> 20.0))
+    assertNoExperimental()
+  }
+
+  test("the shared session plans the interval join through the extension alone") {
+    assertNoExperimental()
+    val df = intervalJoin().select(col("id"), col("tag"))
+    assert(df.queryExecution.executedPlan.toString.contains("IntervalJoin"),
+      "injected strategy must plan IntervalJoinExec")
+    assert(df.collect().map(r => r.getLong(0) -> r.getString(1)).toSet ===
+      Set(1L -> "p", 2L -> "p", 2L -> "q"))
+    assertNoExperimental()
+  }
+
+  test("each injected pruning rule drops an unused probe column below its node") {
+    for ((name, join) <- Seq("asof" -> (() => asofJoin()),
+        "interval" -> (() => intervalJoin()))) {
+      val joined = join()
+      assert(probeColumns(joined.queryExecution.optimizedPlan).contains("extra"),
+        s"$name: with every column selected the probe side keeps `extra`")
+      val pruned = joined.select(col("id"))
+      val kept = probeColumns(pruned.queryExecution.optimizedPlan)
+      assert(!kept.contains("extra") && kept.contains("id"), s"$name: $kept")
     }
   }
 }
