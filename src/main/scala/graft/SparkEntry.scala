@@ -41,16 +41,22 @@ object SparkEntry {
     }.toIndexedSeq: _*)
   }
 
+  /** The per-object registries [[queries]] joins. Their names must be
+    * disjoint: `++` keeps the last of two equal keys without a word.
+    */
+  private[graft] def queryMaps: Seq[Map[String, (SparkSession, String) => DataFrame]] =
+    Seq(ForexQueries.queries, IndicatorQueries.queries, TextQueries.queries,
+      DedupQueries.queries, SimilarityQueries.queries, MediaQueries.queries,
+      RelationalQueries.queries, SamplingQueries.queries,
+      StoreQueries.queries, PipelineQueries.queries, CurationQueries.queries,
+      MultiSymQueries.queries, DriftQueries.queries, FormatQueries.queries,
+      FeatureQueries.queries, KllQueries.queries, SketchQueries.queries)
+
   /** One entry per implemented operator from SURVEY.md §2 (+ §7.4 extension
     * surface: text analysis, dedup family, similarity search, multimodal).
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    (ForexQueries.queries ++ IndicatorQueries.queries ++ TextQueries.queries ++
-      DedupQueries.queries ++ SimilarityQueries.queries ++ MediaQueries.queries ++
-      RelationalQueries.queries ++ SamplingQueries.queries ++
-      StoreQueries.queries ++ PipelineQueries.queries ++ CurationQueries.queries ++
-      MultiSymQueries.queries ++ DriftQueries.queries ++ FormatQueries.queries ++
-      FeatureQueries.queries ++ KllQueries.queries)
+    queryMaps.reduce(_ ++ _)
       .map { case (name, fn) =>
         name -> ((s: SparkSession, dir: String) => normalizeOutputs(fn(s, dir)))
       }
@@ -65,5 +71,6 @@ object SparkEntry {
       StoreQueries.oracleSql ++ PipelineQueries.oracleSql ++
       CurationQueries.oracleSql ++ MultiSymQueries.oracleSql ++
       DriftQueries.oracleSql ++ FormatQueries.oracleSql ++
-      FeatureQueries.oracleSql ++ KllQueries.oracleSql
+      FeatureQueries.oracleSql ++ KllQueries.oracleSql ++
+      SketchQueries.oracleSql
 }

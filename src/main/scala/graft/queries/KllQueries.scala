@@ -6,19 +6,13 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.relational.KllSketch
 
-/** Quantile-sketch queries over the events metric stream (reference
+/** The one-shot quantile sketch over the events metric stream (reference
   * analog: percentile monitoring over tick/latency values —
-  * extract_forex.py's metrics would feed exactly this at fleet scale).
-  * Three faces of the same primitive:
-  *
-  *  - `kll_quantiles`: one-shot sketch build + read-out per event_type.
-  *  - `kll_merge_days`: per-(type, day) sketches merged across days by
-  *    union + re-compaction — the per-partition serving pattern (each
-  *    day's job emits a tiny sketch; any date range answers from merged
-  *    sketches without touching row data).
-  *  - `stream_kll` (PipelineQueries): the same day sketches SHIPPED as a
-  *    stream through the hardened GraftSink, merged at read time —
-  *    result identical to the batch merge, so it shares this oracle.
+  * extract_forex.py's metrics would feed exactly this at fleet scale):
+  * `kll_quantiles` builds one sketch per event_type and reads it out. The
+  * per-day sketches and their merges across days (`kll_merge_days`, the
+  * range and store serves, `stream_kll_store`) are the KLL instance of
+  * [[SketchQueries]].
   *
   * Every compaction decision is the parity of a portable md5 hash
   * (KllSketch scaladoc), so the DuckDB oracle replays the identical
@@ -36,13 +30,6 @@ object KllQueries {
     * at level 8 (k≈64-item sketch, rank error < 2^8 of 12k ranks ≈ 2%).
     */
   private val OneShotRounds = 8
-
-  /** Per-day rounds (≈400 rows/(type,day) → ~25 items at level 4) and the
-    * merge cascade ceiling (union of ~30 day sketches re-compacts levels
-    * 0 until 9).
-    */
-  private val DayRounds = 4
-  private val MergeToLevel = 9
 
   /** One-shot per-type sketch as a SHARED fixture: built once per
     * (JVM, dir) and served from scratch parquet thereafter — the
@@ -69,178 +56,7 @@ object KllQueries {
        |SELECT event_type, n_rows, p50, p90, p99
        |FROM q ORDER BY event_type""".stripMargin
 
-  /** Per-day sketch items for (type, day) — shared by the batch merge, the
-    * range-serving view, and the stream_kll fixture (PipelineQueries ships
-    * exactly this relation through the sink). A [[graft.Scratch.fixture]]:
-    * the per-day build touches row data, its three consumers only sketch
-    * rows, so it is built once per (JVM, dir) — exactly the per-day
-    * sketch-emitting job of the 100 TB serving pattern.
-    */
-  private[queries] def daySketch(s: SparkSession, dir: String): DataFrame =
-    graft.Scratch.fixture(s, s"kll-day$DayRounds|$dir")(
-      KllSketch.sketchAuto(
-        Tables.events(s, dir).withColumn("day", to_date(col("ts"))),
-        Seq("event_type", "day"), col("value"), col("event_id"),
-        rounds = DayRounds))
+  val queries: Map[String, Q] = Map("kll_quantiles" -> kllQuantiles)
 
-  /** Merge day sketches per type: drop the day key, re-compact the union
-    * (levels cascade 0 until MergeToLevel), read out quantiles.
-    */
-  private[queries] def mergeDaySketches(items: DataFrame): DataFrame = {
-    // both callers hand in file-backed items (the daySketch fixture, the
-    // graft-sink read-back) — cheap to count, which is what lets
-    // compactAuto certify the sub-threshold FUSED cascade (one linear job,
-    // zero per-round scratch round-trips; falls back to the round-by-round
-    // path above threshold, values identical either way)
-    val merged = KllSketch.compactAuto(
-      items.select(col("event_type"), col("level"), col("value"),
-        col("tid"), col("w")),
-      Seq("event_type"), 0, MergeToLevel, inputMaterialized = true)
-    KllSketch.quantiles(merged, Seq("event_type"), Qs)
-      .orderBy(col("event_type"))
-  }
-
-  val kllMergeDays: Q = (s, dir) => mergeDaySketches(daySketch(s, dir))
-
-  val kllMergeDaysSql: String =
-    s"""WITH k0d AS (
-       |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-       |         0 AS level, CAST(value AS DOUBLE) AS value,
-       |         CAST(event_id AS BIGINT) AS tid, CAST(1 AS BIGINT) AS w
-       |  FROM events),
-       |${KllSketch.compactSql("k0d", Seq("event_type", "day"), 0, DayRounds, "skd")},
-       |mg AS (SELECT event_type, level, value, tid, w FROM skd),
-       |${KllSketch.compactSql("mg", Seq("event_type"), 0, MergeToLevel, "skm")},
-       |${KllSketch.quantilesSql("skm", Seq("event_type"), Qs, "q")}
-       |SELECT event_type, n_rows, p50, p90, p99
-       |FROM q ORDER BY event_type""".stripMargin
-
-  /** Range-serving compaction ceiling: an ~11-day union of level ≤4 day
-    * sketches holds ≤ 11·(2^4-ish) items per type — 8 rounds leave a
-    * handful of top-level items plus leftovers.
-    */
-  private val RangeToLevel = 8
-
-  /** GROUPED SERVING VIEW over the persisted day sketches — the "any date
-    * range answers from merged sketches" pattern (VERDICT r13 next-round
-    * #5): per-type quantiles for an arbitrary day span, read PURELY from
-    * the per-(type, day) sketch rows — row data is never touched. (This
-    * form reads the [[daySketch]] fixture; [[kllStoreServe]] is the same
-    * serve against the GOVERNED store table.) The span is data-derived
-    * (min(day)+5 … min(day)+15) so the query is a pure function of the
-    * corpus; day sketches are per-(type, day) pure functions of each
-    * day's rows, so filtering days BEFORE vs AFTER sketching is
-    * indistinguishable — which is exactly what lets the oracle rebuild
-    * the same day sketches from raw rows and filter (KllRangeServeSpec
-    * pins the equivalence engine-side).
-    */
-  val kllRangeServe: Q = (s, dir) => {
-    val items = daySketch(s, dir)
-    val d0 = items.agg(min(col("day")).as("d0"))
-    val ranged = items.crossJoin(broadcast(d0))
-      .filter(col("day").between(date_add(col("d0"), 5), date_add(col("d0"), 15)))
-      .select(col("event_type"), col("level"), col("value"), col("tid"),
-        col("w"))
-    // ranged = fixture scan + a broadcast 1-row min — cheap to count, so
-    // compactAuto certifies the fused single-job cascade (values identical)
-    val merged = KllSketch.compactAuto(ranged, Seq("event_type"), 0,
-      RangeToLevel, inputMaterialized = true)
-    KllSketch.quantiles(merged, Seq("event_type"), Qs)
-      .orderBy(col("event_type"))
-  }
-
-  val kllRangeServeSql: String =
-    s"""WITH k0d AS (
-       |  SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
-       |         0 AS level, CAST(value AS DOUBLE) AS value,
-       |         CAST(event_id AS BIGINT) AS tid, CAST(1 AS BIGINT) AS w
-       |  FROM events),
-       |${KllSketch.compactSql("k0d", Seq("event_type", "day"), 0, DayRounds, "skd")},
-       |d0 AS (SELECT min(CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS mn FROM events),
-       |rg AS (
-       |  SELECT event_type, level, value, tid, w
-       |  FROM skd CROSS JOIN d0
-       |  WHERE day BETWEEN mn + 5 AND mn + 15),
-       |${KllSketch.compactSql("rg", Seq("event_type"), 0, RangeToLevel, "skm")},
-       |${KllSketch.quantilesSql("skm", Seq("event_type"), Qs, "q")}
-       |SELECT event_type, n_rows, p50, p90, p99
-       |FROM q ORDER BY event_type""".stripMargin
-
-  /** The per-day sketch table GOVERNED: [[daySketch]]'s items written
-    * through [[graft.store.IncrementalStore]] as day-partition batches —
-    * the real persisted artifact the scratch fixture imitates, with the
-    * store's whole lifecycle (dynamic partition overwrite, retention,
-    * time travel, compaction) available to it. The write is TWO batches
-    * (history ≤ min+10, then the rest), exercising the production cadence
-    * where each day's job appends its own partitions; the serve then
-    * reads PURELY from the stored table: span filter (the
-    * kll_range_serve derivation), fused merge, read-out. Sketch items
-    * round-trip parquet bit-exactly and the span/merge are identical, so
-    * this SHARES kll_range_serve's oracle — batch boundaries must be
-    * value-invisible (KllStoreServeSpec pins the two-batch ≡ one-shot
-    * equivalence on a fresh store).
-    *
-    * At 100 TB: a real serve passes literal dates, so the day filter
-    * prunes `p_date=` partitions statically; here the span is
-    * data-derived (a broadcast 1-row min), which scans the (tiny) sketch
-    * table instead — the query stays a pure function of the corpus.
-    */
-  val kllStoreServe: Q = (s, dir) => {
-    val stored = StoreQueries.storeDayTable(s, "kll_day_sketch",
-      daySketch(s, dir)
-        .select(col("event_type"), col("day"), col("level"), col("value"),
-          col("tid"), col("w")),
-      "day", clusterBy = Seq("event_type"))
-    val sd0 = stored.agg(min(col("day")).as("d0"))
-    val ranged = stored.crossJoin(broadcast(sd0))
-      .filter(col("day").between(date_add(col("d0"), 5),
-        date_add(col("d0"), 15)))
-      .select(col("event_type"), col("level"), col("value"), col("tid"),
-        col("w"))
-    val merged = KllSketch.compactAuto(ranged, Seq("event_type"), 0,
-      RangeToLevel, inputMaterialized = true)
-    KllSketch.quantiles(merged, Seq("event_type"), Qs)
-      .orderBy(col("event_type"))
-  }
-
-  /** WATERMARK-DRIVEN incremental maintenance of the governed sketch
-    * table — the production daily job, end to end: the store's high
-    * watermark (max(day), a metadata-cheap scalar — the P3 pattern
-    * applied to the sketch table) decides which day partitions are
-    * missing, ONLY those days' sketch items are appended (one
-    * partition-scoped dynamic overwrite — at 100 TB the increment also
-    * sketches only the new days' rows; here the items come off the shared
-    * day-sketch fixture, which is value-identical), and the serve merges
-    * the whole stored table. Because day sketches are per-(type, day)
-    * pure functions and the store appends exactly the missing days, the
-    * incrementally-maintained table holds precisely the all-days item
-    * relation — so this SHARES kll_merge_days' oracle: incremental
-    * maintenance must be value-invisible, and the hash proves it.
-    */
-  val kllStoreIncremental: Q = (s, dir) =>
-    mergeDaySketches(StoreQueries.storeDayIncremental(s,
-      "kll_day_sketch_incr",
-      daySketch(s, dir)
-        .select(col("event_type"), col("day"), col("level"), col("value"),
-          col("tid"), col("w")),
-      "day", clusterBy = Seq("event_type"),
-      inputMaterialized = true)) // the day-sketch fixture is file-backed
-
-  val queries: Map[String, Q] = Map(
-    "kll_quantiles" -> kllQuantiles,
-    "kll_merge_days" -> kllMergeDays,
-    "kll_range_serve" -> kllRangeServe,
-    "kll_store_serve" -> kllStoreServe,
-    "kll_store_incremental" -> kllStoreIncremental)
-
-  val oracleSql: Map[String, String] = Map(
-    "kll_quantiles" -> kllQuantilesSql,
-    "kll_merge_days" -> kllMergeDaysSql,
-    "kll_range_serve" -> kllRangeServeSql,
-    // the stored table holds exactly the day-sketch items; span + merge
-    // are identical, so the oracle is the range-serve chain verbatim
-    "kll_store_serve" -> kllRangeServeSql,
-    // the watermark-driven increment reassembles the all-days relation,
-    // so the batch merge oracle applies verbatim
-    "kll_store_incremental" -> kllMergeDaysSql)
+  val oracleSql: Map[String, String] = Map("kll_quantiles" -> kllQuantilesSql)
 }

@@ -596,43 +596,26 @@ object PipelineQueries {
       |FROM events ORDER BY observed_at""".stripMargin
 
   /** STREAMING quantile-sketch shipping: each day's job emits a tiny
-    * KLL-class sketch (KllQueries.daySketch — item rows, not data rows);
-    * the sketches arrive as an append stream and land through the
-    * hardened GraftSink; merge + read-out run over the accumulated item
-    * relation at query time. This is the 100 TB percentile-serving
-    * pattern — row data is touched exactly once per day, any date range
-    * answers from merged sketch items — and the result must equal the
-    * all-at-once batch merge, so it shares kll_merge_days' oracle
+    * KLL-class sketch (the day sketches of [[SketchQueries.Kll]] — item
+    * rows, not data rows); the sketches arrive as an append stream and
+    * land through the hardened GraftSink; merge + read-out run over the
+    * accumulated item relation at query time. This is the 100 TB
+    * percentile-serving pattern — row data is touched exactly once per
+    * day, any date range answers from merged sketch items — and the
+    * result must equal the all-at-once batch merge, so it shares
+    * kll_merge_days' oracle
     * (sketch contents are a pure function of the data; shipping them
     * through a stream must not change a bit).
     */
-  /** Schema of a persisted KLL day-sketch item relation — shared by the
-    * two streaming shippers ([[streamKll]], [[streamKllStore]]).
-    */
-  private val kllItemSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("event_type",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("day",
-      org.apache.spark.sql.types.DateType),
-    org.apache.spark.sql.types.StructField("level",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("value",
-      org.apache.spark.sql.types.DoubleType),
-    org.apache.spark.sql.types.StructField("tid",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("w",
-      org.apache.spark.sql.types.LongType)))
-
   val streamKll: Q = (s, dir) => {
+    import SketchQueries.{AllDays, Kll}
+    val items = Kll.events(s, dir)
     val base = ensureFixture(s, "stream_kll", dir) { b =>
-      KllQueries.daySketch(s, dir)
-        .select(col("event_type"), col("day"), col("level"), col("value"),
-          col("tid"), col("w"))
-        .repartition(4).write.mode("overwrite").parquet(b)
+      items.repartition(4).write.mode("overwrite").parquet(b)
     }
     val shipped = runBoundedStreamToSink(s, "graft_stream_kll",
-      () => s.readStream.schema(kllItemSchema).parquet(base).drop("day"))
-    KllQueries.mergeDaySketches(shipped)
+      () => s.readStream.schema(items.schema).parquet(base).drop("day"))
+    Kll.serve(shipped, shipped, AllDays)
   }
 
   /** Bounded streaming run whose SINK is the governed day-partition store:
@@ -684,164 +667,6 @@ object PipelineQueries {
       throw new IllegalStateException(
         s"$name stored zero rows: no micro-batch carried a storable day")
     IncrementalStore.readTable(s, target).drop(IncrementalStore.BatchIdCol)
-  }
-
-  /** The shared shipper shape of the four `stream_*_store` queries
-    * (VERDICT r16 missing #4): persist a day-keyed artifact relation as a
-    * range-partitioned-by-day fixture, stream it back one file per
-    * micro-batch, and land every batch in the governed day-partition
-    * store through [[runBoundedStreamToDayStore]]. Range partitioning
-    * keeps each micro-batch day-complete — the fast-path layout — but is
-    * no longer load-bearing for correctness (the engine-side merge
-    * handles split days); serve arms stay per-family at the call sites.
-    */
-  /** @param filesPerTrigger micro-batch tiling of the 4-file fixture:
-    *   Some(1) (the default) replays as 4 day-ranged micro-batches — the
-    *   multi-batch reassembly contract the `stream_*_store` queries exist
-    *   to prove; None ingests all files as ONE batch for callers whose
-    *   operator under test is downstream of the streamed layout (the
-    *   retention sweep), where paying 4 triggers re-proves the sibling's
-    *   contract at 4x the per-trigger cost (r18).
-    */
-  private def streamFixtureToDayStore(s: SparkSession, name: String,
-      dir: String, items: DataFrame, clusterBy: Seq[String],
-      fixtureName: String = null,
-      filesPerTrigger: Option[Int] = Some(1)): DataFrame = {
-    val base = ensureFixture(s, Option(fixtureName).getOrElse(name), dir) { b =>
-      items.repartitionByRange(4, col("day"))
-        .write.mode("overwrite").parquet(b)
-    }
-    runBoundedStreamToDayStore(s, s"graft_$name",
-      () => {
-        val r = s.readStream.schema(items.schema)
-        filesPerTrigger.fold(r)(n => r.option("maxFilesPerTrigger", n))
-          .parquet(base)
-      },
-      "day", clusterBy = clusterBy)
-  }
-
-  /** STREAMING maintenance of the GOVERNED sketch store — the round-15
-    * asymmetry closed: batch watermark maintenance (`kll_store_incremental`)
-    * and the streaming shipper (`stream_kll`) existed, but the stream
-    * terminated in a sink oracle table, not the governed store. Here each
-    * micro-batch of day-sketch items appends its day partitions INTO the
-    * [[IncrementalStore]] table (foreachBatch → dynamic partition
-    * overwrite — the production shape: a day's sketch job owns its
-    * `p_date=` partitions, retention/compaction/time-travel machinery
-    * applies to the result), and the serve merges the STORED table. The
-    * source fixture is range-partitioned by day so every micro-batch
-    * carries complete days and takes the merge's metadata-cheap fast
-    * path; a source that splits a day is handled by the engine-side
-    * fragment merge (r17). N micro-batches must reassemble precisely the
-    * all-days item relation, so this SHARES kll_merge_days' oracle: streaming
-    * maintenance is value-invisible, and the hash proves it
-    * (StreamStoreSpec pins multi-batch == one-shot on the store itself).
-    */
-  val streamKllStore: Q = (s, dir) => {
-    val stored = streamFixtureToDayStore(s, "stream_kll_store", dir,
-      KllQueries.daySketch(s, dir)
-        .select(col("event_type"), col("day"), col("level"), col("value"),
-          col("tid"), col("w")),
-      clusterBy = Seq("event_type"))
-    KllQueries.mergeDaySketches(
-      stored.select(col("event_type"), col("level"), col("value"),
-        col("tid"), col("w")))
-  }
-
-  /** [[streamKllStore]]'s HLL sibling — with it and [[streamCmsStore]],
-    * EVERY mergeable sketch family's streaming shipper now terminates in
-    * the governed day-partition store, making the store the only
-    * maintenance path, batch and streaming alike. Per-day registers
-    * stream in day-complete micro-batches (the range-partitioned-source
-    * contract) through foreachBatch day-partition appends; the serve
-    * max-merges the STORED registers. Registers are (group, bucket,
-    * max-rho) integers — bit-exact through parquet and order-invariant
-    * under max — so the streamed store reassembles exactly the all-days
-    * register relation and this SHARES hll_merge_days' oracle.
-    */
-  val streamHllStore: Q = (s, dir) => {
-    import graft.relational.Sketches
-    val ev = RelationalQueries.eventsTypeDayUser(s, dir)
-    val stored = streamFixtureToDayStore(s, "stream_hll_store", dir,
-      Sketches.hllRegisters(ev, Seq("event_type", "day"), col("user_id")),
-      clusterBy = Seq("event_type"))
-    RelationalQueries.hllServeReport(ev, stored)
-  }
-
-  /** END-TO-END LIFECYCLE ON A STREAM-WRITTEN STORE (VERDICT r16 next
-    * #5) — composes the round-16 pieces once: the per-day HLL register
-    * table is maintained by STREAMING micro-batches (the
-    * [[streamHllStore]] path, sharing its fixture — same registers, one
-    * build), then the retention sweep runs against the streamed layout
-    * ([[IncrementalStore.retainDays]] — a directory-level delete, exactly
-    * as on the batch-built table), and the surviving span is served by
-    * register max-merge. Proves the lifecycle machinery is
-    * writer-agnostic: a `p_date=` partition laid down by a foreachBatch
-    * micro-batch ages out and serves identically to one written by a
-    * batch job. Shares `sketch_store_retention`'s oracle — the whole
-    * chain (stream → sweep → serve) must be value-invisible vs the
-    * logical day filter, and `merge_exact` asserts it row-for-row.
-    */
-  val streamStoreRetention: Q = (s, dir) => {
-    import graft.store.IncrementalStore
-    val ev = RelationalQueries.eventsTypeDayUser(s, dir)
-    val stored = streamFixtureToDayStore(s, "stream_store_retention", dir,
-      graft.relational.Sketches.hllRegisters(ev, Seq("event_type", "day"),
-        col("user_id")),
-      clusterBy = Seq("event_type"), fixtureName = "stream_hll_store",
-      // one micro-batch: the operator under test is the retention sweep +
-      // serve over a STREAM-WRITTEN layout; the 4-trigger day-split
-      // reassembly contract is stream_hll_store's (same fixture, same
-      // sink) and StreamStoreSpec's — result identical either way
-      filesPerTrigger = None)
-    val d0 = stored.agg(min(col("day"))).first().getDate(0).toLocalDate
-    val cutoff = d0.plusDays(16)
-    val target = StoreQueries.storeRoot(s, "stream_store_retention")
-    IncrementalStore.retainDays(s, target, cutoff)
-    RelationalQueries.hllRetentionServe(ev,
-      IncrementalStore.readTable(s, target), cutoff)
-  }
-
-  /** Histogram bin counts streamed into the governed day-partition store —
-    * completes the streaming symmetry: ALL FOUR mergeable day-artifact
-    * families (KLL items, HLL registers, CMS counters, histogram bins)
-    * now maintain their governed table from a stream as well as from the
-    * batch watermark job. Bin counts are integer-linear, so the streamed
-    * store's day-summed histogram is bin-exact vs the one-shot build —
-    * shares hist_merge_days' oracle, `merge_exact` asserting the identity.
-    */
-  val streamHistStore: Q = (s, dir) => {
-    import graft.relational.Sketches
-    val binW = 5L
-    val ev = RelationalQueries.eventsHistInput(s, dir)
-    val stored = streamFixtureToDayStore(s, "stream_hist_store", dir,
-      Sketches.histCounts(ev, Seq("event_type", "day"), col("v"), binW),
-      clusterBy = Seq("event_type"))
-    RelationalQueries.histServeReport(
-      Sketches.histCounts(ev, Seq("event_type"), col("v"), binW),
-      stored.groupBy(col("event_type"), col("bin"))
-        .agg(sum(col("n")).as("n")))
-  }
-
-  /** CMS counters streamed into the governed day-partition store —
-    * counters are integer-LINEAR (per-cell addition), the strongest
-    * round-trip case: the streamed store's day-summed table is
-    * BIT-identical to the one-shot build, asserted per row by
-    * `merge_exact`. Shares cms_merge_days' oracle.
-    */
-  val streamCmsStore: Q = (s, dir) => {
-    import graft.relational.Sketches
-    val ev = graft.Scratch.table(
-      Tables.events(s, dir)
-        .select(to_date(col("ts")).as("day"), col("user_id")),
-      "scs-ev")
-    val key = col("user_id").cast("string")
-    val stored = streamFixtureToDayStore(s, "stream_cms_store", dir,
-      Sketches.cmsCounters(ev, key, groupCols = Seq("day")),
-      clusterBy = Seq("row_id"))
-    RelationalQueries.cmsServeReport(ev, stored
-      .groupBy(col("row_id"), col("bucket")).agg(sum(col("n")).as("n")),
-      "scs-top")
   }
 
   /** STREAMING maintenance of the TRAINING-PACK layout — the pack family
@@ -940,21 +765,17 @@ object PipelineQueries {
     */
   val streamHll: Q = (s, dir) => {
     import graft.relational.Sketches
+    val ev = Tables.events(s, dir)
+    val src = ev.select(col("event_type"), col("user_id"))
     val base = ensureFixture(s, "stream_hll", dir) { b =>
-      Tables.events(s, dir).select(col("event_type"), col("user_id"))
-        .coalesce(8).write.mode("overwrite").parquet(b)
+      src.coalesce(8).write.mode("overwrite").parquet(b)
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType)))
     val registers = runBoundedStream(s, "graft_stream_hll",
       () => Sketches.hllRegisters(
-        s.readStream.schema(schema).parquet(base),
+        s.readStream.schema(src.schema).parquet(base),
         Seq("event_type"), col("user_id")),
       "complete")
-    val exact = Tables.events(s, dir).groupBy("event_type")
+    val exact = ev.groupBy("event_type")
       .agg(countDistinct(col("user_id")).as("exact_distinct"))
     exact
       .join(Sketches.hllFromRegisters(registers, Seq("event_type")), "event_type")
@@ -993,19 +814,16 @@ object PipelineQueries {
     import graft.relational.Sketches
     import graft.text.TextAnalysis
     val binW = 16L
+    // the documents schema is cached by the time the fixture exists, so
+    // defining `src` outside the fixture build starts no schema-inference job
+    val src = Tables.documents(s, dir)
+      .select(col("lang"), TextAnalysis.tokenCount(col("text")).as("n_tokens"))
     val base = ensureFixture(s, "stream_hist", dir) { b =>
-      Tables.documents(s, dir)
-        .select(col("lang"), TextAnalysis.tokenCount(col("text")).as("n_tokens"))
-        .coalesce(8).write.mode("overwrite").parquet(b)
+      src.coalesce(8).write.mode("overwrite").parquet(b)
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("lang",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("n_tokens",
-        org.apache.spark.sql.types.IntegerType)))
     val counts = runBoundedStream(s, "graft_stream_hist",
       () => Sketches.histCounts(
-        s.readStream.schema(schema).parquet(base),
+        s.readStream.schema(src.schema).parquet(base),
         Seq("lang"), col("n_tokens"), binW),
       "complete")
     Sketches.histQuantiles(counts, Seq("lang"), binW, Seq(0.5, 0.9, 0.99))
@@ -1021,20 +839,17 @@ object PipelineQueries {
   val streamCms: Q = (s, dir) => {
     import graft.relational.Sketches
     import graft.text.TextAnalysis
+    val src = Tables.documents(s, dir)
+      .select(explode(TextAnalysis.words(col("text"))).as("token"))
+      .filter(length(col("token")) > 0)
     val base = ensureFixture(s, "stream_cms", dir) { b =>
-      Tables.documents(s, dir)
-        .select(explode(TextAnalysis.words(col("text"))).as("token"))
-        .filter(length(col("token")) > 0)
-        .repartition(8).write.mode("overwrite").parquet(b)
+      src.repartition(8).write.mode("overwrite").parquet(b)
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("token",
-        org.apache.spark.sql.types.StringType)))
     val counters = runBoundedStream(s, "graft_stream_cms",
       () => Sketches.cmsCounters(
-        s.readStream.schema(schema).parquet(base), col("token")),
+        s.readStream.schema(src.schema).parquet(base), col("token")),
       "complete")
-    val tok = s.read.parquet(base)
+    val tok = s.read.schema(src.schema).parquet(base)
     val top = graft.Scratch.table(
       tok.groupBy("token").agg(count(lit(1)).as("n_exact"))
         .orderBy(col("n_exact").desc, col("token")).limit(20),
@@ -1415,12 +1230,7 @@ object PipelineQueries {
     "stream_sliding_ohlc" -> streamSlidingOhlc,
     "stream_dedup" -> streamDedup,
     "stream_kll" -> streamKll,
-    "stream_kll_store" -> streamKllStore,
-    "stream_hll_store" -> streamHllStore,
-    "stream_cms_store" -> streamCmsStore,
-    "stream_hist_store" -> streamHistStore,
     "stream_seq_pack" -> streamSeqPack,
-    "stream_store_retention" -> streamStoreRetention,
     "stream_hll" -> streamHll,
     "stream_hist" -> streamHist,
     "staging_view" -> stagingView,
@@ -1443,17 +1253,10 @@ object PipelineQueries {
     "stream_cms" -> TextQueries.cmsTopKSql, // streaming counter state vs batch sketch
     "stream_sliding_ohlc" -> streamSlidingOhlcSql, // streaming vs batch explode
     "stream_dedup" -> streamDedupSql, // streaming dedup vs batch DISTINCT
-    "stream_kll" -> KllQueries.kllMergeDaysSql, // shipped sketches vs batch merge
-    // the store-maintained stream reassembles the all-days item relation,
-    // so the batch merge oracle applies verbatim
-    "stream_kll_store" -> KllQueries.kllMergeDaysSql,
-    "stream_hll_store" -> RelationalQueries.hllMergeDaysSql,
-    "stream_cms_store" -> RelationalQueries.cmsMergeDaysSql,
-    "stream_hist_store" -> RelationalQueries.histMergeDaysSql,
+    // shipped sketches vs batch merge
+    "stream_kll" -> SketchQueries.sql(SketchQueries.Kll, SketchQueries.AllDays),
     // arrival-ordered streaming packing reassembles the one-shot layout
     "stream_seq_pack" -> TextQueries.sequencePackSql,
-    // stream → retention sweep → serve must equal the logical day filter
-    "stream_store_retention" -> RelationalQueries.sketchStoreRetentionSql,
     "stream_hll" -> streamHllSql, // streaming register state vs batch sketch
     "stream_hist" -> TextQueries.histQuantilesSql, // streaming bin state vs batch sketch
     "staging_view" -> goldTableSql,

@@ -50,39 +50,6 @@ object StoreQueries {
       case None => s"${sys.props("java.io.tmpdir")}/$rel"
     }
 
-  /** Write a day-keyed relation through the governed store as TWO
-    * day-partition batches (history ≤ min(day)+10, then the rest — the
-    * production cadence where each day's job appends its own `p_date=`
-    * partitions), and return the read-back. The shared scaffolding of the
-    * *_store_serve queries: any per-day artifact family (KLL sketch
-    * items, HLL registers, CMS counters) becomes a REAL store table with
-    * retention/time-travel/compaction instead of a scratch fixture.
-    * Batch boundaries are value-invisible (two-batch ≡ one-shot,
-    * Round15OpsSpec) and parquet round-trips every payload type
-    * bit-exactly. `dayCol` must be a DateType column on `items`.
-    */
-  private[queries] def storeDayTable(s: SparkSession, name: String,
-      items: DataFrame, dayCol: String,
-      clusterBy: Seq[String]): DataFrame = {
-    val target = freshStoreRoot(s, name)
-    // three consumers below (the split bound + both batches): materialize
-    // the derivation once rather than re-running a corpus aggregate per
-    // consumer (for register/counter tables `items` IS a corpus pass;
-    // sketch items arrive file-backed already, where this is a cheap
-    // copy of a tiny relation)
-    val mat = graft.Scratch.table(items, s"storeday-$name")
-    val d0 = mat.agg(min(col(dayCol)).as("__d0"))
-    def batch(pred: org.apache.spark.sql.Column): DataFrame =
-      mat.crossJoin(broadcast(d0)).filter(pred).drop("__d0")
-    IncrementalStore.overwriteDayPartitions(
-      batch(col(dayCol) <= date_add(col("__d0"), 10)), target, dayCol,
-      clusterBy = clusterBy)
-    IncrementalStore.overwriteDayPartitions(
-      batch(col(dayCol) > date_add(col("__d0"), 10)), target, dayCol,
-      clusterBy = clusterBy)
-    IncrementalStore.readTable(s, target)
-  }
-
   /** Delete-and-return a query's scratch-store root (idempotent runs:
     * each store query owns a fixed name and rebuilds it from empty).
     */
@@ -92,70 +59,6 @@ object StoreQueries {
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
     target
-  }
-
-  /** WATERMARK-DRIVEN incremental maintenance of a governed day-keyed
-    * table — [[storeDayTable]]'s sibling for the *_store_incremental
-    * queries (KLL sketch items, HLL registers, CMS counters), extracted
-    * from their three near-verbatim inlines (VERDICT r15 next-round #2):
-    * initial load of the days up to min(day)+10, then the STORE's own
-    * high watermark decides which day partitions are missing and ONLY
-    * those are appended (one partition-scoped dynamic overwrite — the P3
-    * pattern applied to the artifact table). Returns the read-back, which
-    * holds exactly the all-days `items` relation, so each family's
-    * all-days serve shares its merge-days oracle: incremental maintenance
-    * must be value-invisible, and the hash proves it.
-    *
-    * The watermark is collected EAGERLY driver-side and passed into the
-    * increment filter as a literal (ADVICE r15): a lazy self-read of the
-    * target inside the overwrite job on that same path works only as long
-    * as dynamic partition overwrite never touches the files it reads —
-    * the eager scalar (one column-pruned max, parquet footers make it
-    * metadata-cheap) decouples the read from the write plan, exactly what
-    * [[IncrementalStore.highWatermark]] does for timestamp-keyed stores.
-    */
-  private[queries] def storeDayIncremental(s: SparkSession, name: String,
-      items: DataFrame, dayCol: String, clusterBy: Seq[String],
-      inputMaterialized: Boolean = false): DataFrame = {
-    val target = freshStoreRoot(s, name)
-    // the derivation feeds the initial load AND the increment: materialize
-    // once (the storeDayTable discipline) — unless the caller's relation
-    // is already file-backed (a fixture scan), where a scratch copy is
-    // pure overhead (the compactAuto `inputMaterialized` convention)
-    val mat =
-      if (inputMaterialized) items
-      else graft.Scratch.table(items, s"storedayincr-$name")
-    val d0 = mat.agg(min(col(dayCol)).as("__d0"))
-    IncrementalStore.overwriteDayPartitions(
-      mat.crossJoin(broadcast(d0))
-        .filter(col(dayCol) <= date_add(col("__d0"), 10)).drop("__d0"),
-      target, dayCol, clusterBy = clusterBy)
-    // day N: the store's high watermark, an eager driver-side scalar —
-    // mirror IncrementalStore.highWatermark's null discipline: an initial
-    // load that stored zero days (empty input / all-null day values) must
-    // fail with a description, not an opaque NPE or schema-inference
-    // error (ADVICE r16). Two cases: an EMPTY initial load leaves no
-    // partition directory at all (checked at the filesystem, before the
-    // read-back can die inferring a schema from zero files); an all-null
-    // day column stores rows whose max(day) is null. Read as a raw value
-    // so the helper stays agnostic of the day column's exact type (Date
-    // or Timestamp — lit() round-trips both).
-    val tp = new org.apache.hadoop.fs.Path(target)
-    val tfs = tp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val loaded = tfs.exists(tp) && tfs.listStatus(tp).exists(
-      _.getPath.getName.startsWith(s"${IncrementalStore.PartitionCol}="))
-    require(loaded,
-      s"storeDayIncremental($name): the initial load stored no rows " +
-        "(empty input) — nothing to increment from")
-    val wmRow = IncrementalStore.readTable(s, target)
-      .agg(max(col(dayCol))).first()
-    require(!wmRow.isNullAt(0),
-      s"storeDayIncremental($name): the initial load stored no '$dayCol' " +
-        "values (all-null days) — nothing to increment from")
-    IncrementalStore.overwriteDayPartitions(
-      mat.filter(col(dayCol) > lit(wmRow.get(0))), target, dayCol,
-      clusterBy = clusterBy)
-    IncrementalStore.readTable(s, target)
   }
 
   private val silverSql: String =

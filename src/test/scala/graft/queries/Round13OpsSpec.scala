@@ -57,7 +57,7 @@ class Round13OpsSpec extends SparkSpec {
 
   test("stream_kll equals the batch merge exactly (sketch shipping changes " +
       "no bits)") {
-    val batch = KllQueries.kllMergeDays(spark, sf0001).collect()
+    val batch = SketchQueries.queries("kll_merge_days")(spark, sf0001).collect()
     val streamed = PipelineQueries.streamKll(spark, sf0001).collect()
     assert(streamed.length === batch.length)
     streamed.zip(batch).foreach { case (a, b) => assert(a === b) }

@@ -16,11 +16,11 @@ class Round14OpsSpec extends SparkSpec {
     // so filtering days BEFORE vs AFTER sketching must be indistinguishable
     // — this is exactly what makes a persisted day-sketch table servable
     // for arbitrary ranges without touching row data
-    val served = KllQueries.queries("kll_range_serve")(spark, sf0001).collect()
+    val served = SketchQueries.queries("kll_range_serve")(spark, sf0001).collect()
     assert(served.nonEmpty)
 
     // batch reference: sketch ONLY the span's rows, merge, read out —
-    // constants mirror KllQueries (DayRounds = 4, RangeToLevel = 8, the
+    // constants mirror SketchQueries.Kll (DayRounds = 4, RangeToLevel = 8, the
     // min(day)+5 … min(day)+15 span)
     val ev = Tables.events(spark, sf0001).withColumn("day", to_date(col("ts")))
     val d0 = ev.agg(min(col("day"))).head().getDate(0).toLocalDate
@@ -47,7 +47,7 @@ class Round14OpsSpec extends SparkSpec {
         java.sql.Date.valueOf(d0.plusDays(5)), java.sql.Date.valueOf(d0.plusDays(15))))
       .groupBy(col("event_type")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val served = KllQueries.queries("kll_range_serve")(spark, sf0001)
+    val served = SketchQueries.queries("kll_range_serve")(spark, sf0001)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(served === expected)
   }
@@ -166,7 +166,7 @@ class Round14OpsSpec extends SparkSpec {
 
   test("cms_merge_days: day-summed counters give BIT-identical estimates " +
       "to the one-shot sketch (integer linearity)") {
-    val rows = RelationalQueries.queries("cms_merge_days")(spark, sf0001).collect()
+    val rows = SketchQueries.queries("cms_merge_days")(spark, sf0001).collect()
     val nUsers = Tables.events(spark, sf0001)
       .select(org.apache.spark.sql.functions.countDistinct(
         org.apache.spark.sql.functions.col("user_id"))).head().getLong(0)

@@ -11,9 +11,9 @@ class Round15OpsSpec extends SparkSpec {
 
   test("kll_store_serve: serving from the governed store equals the " +
       "fixture-backed range serve value-for-value") {
-    val fromStore = KllQueries.queries("kll_store_serve")(spark, sf0001)
+    val fromStore = SketchQueries.queries("kll_store_serve")(spark, sf0001)
       .collect().map(_.toString).toSeq
-    val fromFixture = KllQueries.queries("kll_range_serve")(spark, sf0001)
+    val fromFixture = SketchQueries.queries("kll_range_serve")(spark, sf0001)
       .collect().map(_.toString).toSeq
     assert(fromStore.nonEmpty)
     assert(fromStore === fromFixture)
@@ -22,7 +22,7 @@ class Round15OpsSpec extends SparkSpec {
   test("kll day-sketch store: two day-partition batches reassemble the " +
       "one-shot table bit-for-bit (append day N+1, re-serve, equal)") {
     import graft.store.IncrementalStore
-    val items = KllQueries.daySketch(spark, sf0001)
+    val items = SketchQueries.Kll.events(spark, sf0001)
       .select(col("event_type"), col("day"), col("level"), col("value"),
         col("tid"), col("w"))
     val d0 = items.agg(min(col("day"))).head().getDate(0).toLocalDate
@@ -54,7 +54,7 @@ class Round15OpsSpec extends SparkSpec {
 
   test("hll_range_serve: register-merge over the span's day tables is " +
       "bit-exact vs the direct span sketch, and exact counts check out") {
-    val rows = RelationalQueries.queries("hll_range_serve")(spark, sf0001)
+    val rows = SketchQueries.queries("hll_range_serve")(spark, sf0001)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -76,7 +76,7 @@ class Round15OpsSpec extends SparkSpec {
 
   test("cms_range_serve: day-summed counters over the span are BIT-equal " +
       "to the one-shot span sketch, and CMS never underestimates") {
-    val rows = RelationalQueries.queries("cms_range_serve")(spark, sf0001)
+    val rows = SketchQueries.queries("cms_range_serve")(spark, sf0001)
       .collect()
     assert(rows.nonEmpty && rows.length <= 20)
     rows.foreach { r =>
@@ -88,23 +88,23 @@ class Round15OpsSpec extends SparkSpec {
 
   test("kll_store_incremental: watermark-driven appends reassemble the " +
       "all-days merge value-for-value") {
-    val incr = KllQueries.queries("kll_store_incremental")(spark, sf0001)
+    val incr = SketchQueries.queries("kll_store_incremental")(spark, sf0001)
       .collect().map(_.toString).toSeq
-    val batch = KllQueries.queries("kll_merge_days")(spark, sf0001)
+    val batch = SketchQueries.queries("kll_merge_days")(spark, sf0001)
       .collect().map(_.toString).toSeq
     assert(incr.nonEmpty && incr === batch)
   }
 
   test("hll/cms store incrementals: watermark-driven appends reassemble " +
       "the whole-range merges value-for-value") {
-    val hIncr = RelationalQueries.queries("hll_store_incremental")(
+    val hIncr = SketchQueries.queries("hll_store_incremental")(
       spark, sf0001).collect().map(_.toString).toSeq
-    val hBatch = RelationalQueries.queries("hll_merge_days")(spark, sf0001)
+    val hBatch = SketchQueries.queries("hll_merge_days")(spark, sf0001)
       .collect().map(_.toString).toSeq
     assert(hIncr.nonEmpty && hIncr === hBatch)
-    val cIncr = RelationalQueries.queries("cms_store_incremental")(
+    val cIncr = SketchQueries.queries("cms_store_incremental")(
       spark, sf0001).collect().map(_.toString).toSeq
-    val cBatch = RelationalQueries.queries("cms_merge_days")(spark, sf0001)
+    val cBatch = SketchQueries.queries("cms_merge_days")(spark, sf0001)
       .collect().map(_.toString).toSeq
     assert(cIncr.nonEmpty && cIncr === cBatch)
   }
@@ -113,7 +113,7 @@ class Round15OpsSpec extends SparkSpec {
       "partitions statically (the 100 TB serve path)") {
     import graft.store.IncrementalStore
     // the store laid down by the serve queries (rebuild for independence)
-    KllQueries.queries("kll_store_serve")(spark, sf0001).collect()
+    SketchQueries.queries("kll_store_serve")(spark, sf0001).collect()
     val stored = IncrementalStore.readTable(spark,
       StoreQueries.storeRoot(spark, "kll_day_sketch"))
     val days = stored.select(col("p_date")).distinct()
@@ -132,14 +132,14 @@ class Round15OpsSpec extends SparkSpec {
 
   test("hll/cms store serves: serving from the governed day tables is " +
       "value-identical to the fixture-free range serves") {
-    val hStore = RelationalQueries.queries("hll_store_serve")(spark, sf0001)
+    val hStore = SketchQueries.queries("hll_store_serve")(spark, sf0001)
       .collect().map(_.toString).toSeq
-    val hRange = RelationalQueries.queries("hll_range_serve")(spark, sf0001)
+    val hRange = SketchQueries.queries("hll_range_serve")(spark, sf0001)
       .collect().map(_.toString).toSeq
     assert(hStore.nonEmpty && hStore === hRange)
-    val cStore = RelationalQueries.queries("cms_store_serve")(spark, sf0001)
+    val cStore = SketchQueries.queries("cms_store_serve")(spark, sf0001)
       .collect().map(_.toString).toSeq
-    val cRange = RelationalQueries.queries("cms_range_serve")(spark, sf0001)
+    val cRange = SketchQueries.queries("cms_range_serve")(spark, sf0001)
       .collect().map(_.toString).toSeq
     assert(cStore.nonEmpty && cStore === cRange)
   }

@@ -13,7 +13,7 @@ import graft.store.IncrementalStore
 class Round16OpsSpec extends SparkSpec {
 
   private def kllItems(dir: String) =
-    KllQueries.daySketch(spark, dir)
+    SketchQueries.Kll.events(spark, dir)
       .select(col("event_type"), col("day"), col("level"), col("value"),
         col("tid"), col("w"))
 
@@ -22,9 +22,9 @@ class Round16OpsSpec extends SparkSpec {
 
   test("stream_kll_store: micro-batch appends into the governed store " +
       "equal the batch merge, and the run really was multi-batch") {
-    val streamed = PipelineQueries.queries("stream_kll_store")(spark, sf0001)
+    val streamed = SketchQueries.queries("stream_kll_store")(spark, sf0001)
       .collect().map(_.toString).toSeq
-    val batch = KllQueries.queries("kll_merge_days")(spark, sf0001)
+    val batch = SketchQueries.queries("kll_merge_days")(spark, sf0001)
       .collect().map(_.toString).toSeq
     assert(streamed.nonEmpty)
     assert(streamed === batch)
@@ -41,7 +41,7 @@ class Round16OpsSpec extends SparkSpec {
 
   test("stream_kll_store: the STORED table itself equals a one-shot " +
       "day-partition write (N micro-batches == one shot through the store)") {
-    PipelineQueries.queries("stream_kll_store")(spark, sf0001).collect()
+    SketchQueries.queries("stream_kll_store")(spark, sf0001).collect()
     val streamedStore = IncrementalStore.readTable(spark,
       StoreQueries.storeRoot(spark, "stream_kll_store"))
       .select(col("event_type"), col("day"), col("level"), col("value"),
@@ -58,7 +58,7 @@ class Round16OpsSpec extends SparkSpec {
 
   test("storeDayIncremental: watermark-driven append reassembles the " +
       "one-shot table bit-for-bit") {
-    val incr = StoreQueries.storeDayIncremental(spark, "spec_incr16",
+    val incr = SketchQueries.storeDayIncremental(spark, "spec_incr16",
       kllItems(sf0001), "day", clusterBy = Seq("event_type"))
       .select(col("event_type"), col("day"), col("level"), col("value"),
         col("tid"), col("w"))
@@ -73,7 +73,7 @@ class Round16OpsSpec extends SparkSpec {
 
   test("sketch store retention: the sweep leaves only p_date dirs at/after " +
       "the cutoff, and the serve proves survivors == logical day filter") {
-    val rows = RelationalQueries.queries("sketch_store_retention")(
+    val rows = SketchQueries.queries("sketch_store_retention")(
       spark, sf0001).collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getAs[Long]("merge_exact") === 1L, r.toString))
@@ -98,7 +98,7 @@ class Round16OpsSpec extends SparkSpec {
       .select(to_date(col("ts")).as("day"), col("user_id"))
     val counters = Sketches.cmsCounters(ev, col("user_id").cast("string"),
       groupCols = Seq("day"))
-    val stored = StoreQueries.storeDayTable(spark, "cms_counters_spec16",
+    val stored = SketchQueries.storeDayTable(spark, "cms_counters_spec16",
       counters, "day", clusterBy = Seq("row_id"))
     val before = slurp(stored.select(col("day"), col("row_id"),
       col("bucket"), col("n")))
@@ -134,9 +134,7 @@ class Round16OpsSpec extends SparkSpec {
     items.filter(col("day") > cut)
       .write.mode("overwrite").parquet(s"$target/gen=2")
     def serve(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      slurp(KllQueries.mergeDaySketches(
-        df.select(col("event_type"), col("level"), col("value"),
-          col("tid"), col("w"))))
+      slurp(SketchQueries.Kll.serve(df, df, SketchQueries.AllDays))
     // time travel = directory selection before any IO: gens ≤ 1
     val asOf1 = spark.read.option("basePath", target)
       .parquet(s"$target/gen=1")
@@ -150,37 +148,37 @@ class Round16OpsSpec extends SparkSpec {
 
   test("stream_hll_store / stream_cms_store: the streamed governed stores " +
       "reassemble the batch day-merge value-for-value") {
-    val hll = PipelineQueries.queries("stream_hll_store")(spark, sf0001)
+    val hll = SketchQueries.queries("stream_hll_store")(spark, sf0001)
       .collect()
     assert(hll.nonEmpty)
     hll.foreach(r => assert(r.getAs[Long]("merge_exact") === 1L, r.toString))
     assert(hll.map(_.toString).toSeq ===
-      RelationalQueries.queries("hll_merge_days")(spark, sf0001)
+      SketchQueries.queries("hll_merge_days")(spark, sf0001)
         .collect().map(_.toString).toSeq)
-    val cms = PipelineQueries.queries("stream_cms_store")(spark, sf0001)
+    val cms = SketchQueries.queries("stream_cms_store")(spark, sf0001)
       .collect()
     assert(cms.nonEmpty)
     cms.foreach(r => assert(r.getAs[Long]("merge_exact") === 1L, r.toString))
     assert(cms.map(_.toString).toSeq ===
-      RelationalQueries.queries("cms_merge_days")(spark, sf0001)
+      SketchQueries.queries("cms_merge_days")(spark, sf0001)
         .collect().map(_.toString).toSeq)
-    val hist = PipelineQueries.queries("stream_hist_store")(spark, sf0001)
+    val hist = SketchQueries.queries("stream_hist_store")(spark, sf0001)
       .collect()
     assert(hist.nonEmpty)
     hist.foreach(r => assert(r.getAs[Long]("merge_exact") === 1L, r.toString))
     assert(hist.map(_.toString).toSeq ===
-      RelationalQueries.queries("hist_merge_days")(spark, sf0001)
+      SketchQueries.queries("hist_merge_days")(spark, sf0001)
         .collect().map(_.toString).toSeq)
   }
 
   test("hist_store_incremental: the governed histogram counter table " +
       "reassembles the batch day-merge value-for-value") {
-    val incr = RelationalQueries.queries("hist_store_incremental")(
+    val incr = SketchQueries.queries("hist_store_incremental")(
       spark, sf0001).collect()
     assert(incr.nonEmpty)
     incr.foreach(r => assert(r.getAs[Long]("merge_exact") === 1L, r.toString))
     assert(incr.map(_.toString).toSeq ===
-      RelationalQueries.queries("hist_merge_days")(spark, sf0001)
+      SketchQueries.queries("hist_merge_days")(spark, sf0001)
         .collect().map(_.toString).toSeq)
   }
 

@@ -95,14 +95,14 @@ class Round17OpsSpec extends SparkSpec {
     import spark.implicits._
     val empty = Seq.empty[(java.sql.Date, Long)].toDF("day", "k")
     val e1 = intercept[IllegalArgumentException] {
-      StoreQueries.storeDayIncremental(spark, "spec_empty17", empty, "day",
+      SketchQueries.storeDayIncremental(spark, "spec_empty17", empty, "day",
         clusterBy = Nil)
     }
     assert(e1.getMessage.contains("nothing to increment"))
     val nullDays = Seq((null: java.sql.Date, 1L), (null: java.sql.Date, 2L))
       .toDF("day", "k")
     val e2 = intercept[IllegalArgumentException] {
-      StoreQueries.storeDayIncremental(spark, "spec_nulldays17", nullDays,
+      SketchQueries.storeDayIncremental(spark, "spec_nulldays17", nullDays,
         "day", clusterBy = Nil)
     }
     assert(e2.getMessage.contains("nothing to increment"))
@@ -149,7 +149,7 @@ class Round17OpsSpec extends SparkSpec {
   test("hist serve symmetry: range and store serves answer the span with " +
       "merge_exact == 1 everywhere") {
     Seq("hist_range_serve", "hist_store_serve").foreach { name =>
-      val rows = RelationalQueries.queries(name)(spark, sf0001).collect()
+      val rows = SketchQueries.queries(name)(spark, sf0001).collect()
       assert(rows.nonEmpty, name)
       rows.foreach(r =>
         assert(r.getAs[Long]("merge_exact") === 1L, s"$name: $r"))
@@ -158,7 +158,7 @@ class Round17OpsSpec extends SparkSpec {
 
   test("stream_store_retention: the sweep runs against the STREAM-written " +
       "table — only at/after-cutoff p_date dirs survive, serve proves it") {
-    val rows = PipelineQueries.queries("stream_store_retention")(
+    val rows = SketchQueries.queries("stream_store_retention")(
       spark, sf0001).collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getAs[Long]("merge_exact") === 1L, r.toString))

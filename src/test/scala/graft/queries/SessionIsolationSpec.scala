@@ -6,7 +6,8 @@ import graft.{GraftSession, SparkEntry, SparkSpec}
   * keys with the same values, and nothing added to the `experimental`
   * strategy or optimizer lists. The queries below each change session
   * state while they run (the native joins' operators, the bounded streams'
-  * shuffle partitions, compact_roundtrip's AQE switch).
+  * shuffle partitions, compact_roundtrip's AQE switch); the sketch family's
+  * queries write governed stores and run bounded streams.
   */
 class SessionIsolationSpec extends SparkSpec {
 
@@ -26,6 +27,15 @@ class SessionIsolationSpec extends SparkSpec {
       assert(state() === before, s"$q changed the session")
     }
     assert(!spark.conf.getAll.contains(Aqe))
+  }
+
+  test("the mergeable-sketch queries leave the session unchanged") {
+    spark.conf.unset(Aqe)
+    val before = state()
+    for (q <- SketchQueries.queries.keys.toSeq.sorted) {
+      assert(SparkEntry.queries(q)(spark, sf0001).count() > 0L, q)
+      assert(state() === before, s"$q changed the session")
+    }
   }
 
   test("withConf restores set and unset keys when its body throws") {
