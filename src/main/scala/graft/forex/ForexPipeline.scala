@@ -19,73 +19,52 @@ import graft.Tables
   */
 object ForexPipeline {
 
-  /** Silver: events → typed, deduped ticks (stg_eurusd.sql:24-40).
-    * Tie-break on duplicate `observed_at` is made deterministic via
-    * event_id (SURVEY §5 note on D2's nondeterminism).
+  /** The instrument key. The reference runs one pipeline per symbol
+    * (`--symbol`, extract_forex.py:276) and stamps `symbol` on every tick
+    * (extract_forex.py:138); a multi-instrument deployment holds all symbols
+    * in one table and passes this key to every stage (VERDICT r4 item #1:
+    * the 100 TB partition key). `Nil` is the single series.
     */
-  def silver(events: DataFrame): DataFrame = {
-    val typed = events.select(
-      col("event_id"),
+  val SymbolKey: Seq[String] = Seq("symbol")
+
+  /** The `events` column each series key is read from: `event_type` is the
+    * testdata's symbol proxy (5 distinct values).
+    */
+  val KeySource: Map[String, String] = Map("symbol" -> "event_type")
+
+  /** Silver: events → typed, deduped ticks (stg_eurusd.sql:24-40), one row
+    * per (keyCols…, observed_at) — still one shuffle. Tie-break on a
+    * duplicate key is made deterministic via event_id (SURVEY §5 note on
+    * D2's nondeterminism).
+    */
+  def silver(events: DataFrame, keyCols: Seq[String] = Nil): DataFrame = {
+    val typed = events.select(col("event_id") +:
+      keyCols.map(k => col(KeySource(k)).as(k)) ++: Seq(
       col("ts").as("observed_at"),
       col("value").as("open_price"),
       col("value").as("high_price"),
       col("value").as("low_price"),
-      col("value").as("close_price"))
-    Dedup.keyedKeepOne(typed, col("observed_at"), Seq(col("event_id")))
-      .drop("event_id")
-  }
-
-  /** Gold: silver ticks → per-timeframe candles with indicators
-    * (fct_eurusd_timeframes.sql:15-86).
-    */
-  def gold(silver: DataFrame): DataFrame =
-    Indicators.enrich(Ohlc.candles(Resample.fanout(silver)))
-
-  def silverFrom(spark: SparkSession, sfDir: String): DataFrame =
-    silver(Tables.events(spark, sfDir))
-
-  def goldFrom(spark: SparkSession, sfDir: String): DataFrame =
-    gold(silverFrom(spark, sfDir))
-
-  // ------------------------------------------------------------ multi-symbol
-
-  /** Multi-symbol silver: the reference parameterizes one run per symbol
-    * (`--symbol`, extract_forex.py:276) and stamps the `symbol` column on
-    * every tick (extract_forex.py:138); a multi-instrument deployment holds
-    * them all in ONE table keyed by symbol. `event_type` is the testdata's
-    * symbol proxy (5 distinct values). Dedup key becomes (symbol,
-    * observed_at) — still one shuffle.
-    */
-  def silverMulti(events: DataFrame): DataFrame = {
-    val typed = events.select(
-      col("event_id"),
-      col("event_type").as("symbol"),
-      col("ts").as("observed_at"),
-      col("value").as("open_price"),
-      col("value").as("high_price"),
-      col("value").as("low_price"),
-      col("value").as("close_price"))
-    Dedup.keyedKeepOne(typed, Seq(col("symbol"), col("observed_at")),
+      col("value").as("close_price")): _*)
+    Dedup.keyedKeepOne(typed, keyCols.map(col) :+ col("observed_at"),
         Seq(col("event_id")))
       .drop("event_id")
   }
 
-  /** Multi-symbol gold: same stages with `symbol` threaded through — the
-    * OHLC aggregate keys on (symbol, timeframe, candle_start) and every
-    * indicator window partitions by (symbol, timeframe), so window
-    * parallelism is |symbols|×7 and grows with the instrument universe
-    * (VERDICT r4 item #1: the 100 TB partition key).
+  /** Gold: silver ticks → per-timeframe candles with indicators
+    * (fct_eurusd_timeframes.sql:15-86). With a key, the OHLC aggregate keys
+    * on (keyCols…, timeframe, candle_start) and every indicator window
+    * partitions by (keyCols…, timeframe), so window parallelism grows with
+    * the instrument universe instead of being pinned at 7.
     */
-  def goldMulti(silver: DataFrame): DataFrame = {
-    val key = Seq("symbol")
+  def gold(silver: DataFrame, keyCols: Seq[String] = Nil): DataFrame =
     Indicators.enrich(
-      Ohlc.candles(Resample.fanout(silver, keyCols = key), keyCols = key),
-      keyCols = key)
-  }
+      Ohlc.candles(Resample.fanout(silver, keyCols = keyCols), keyCols), keyCols)
 
-  def silverMultiFrom(spark: SparkSession, sfDir: String): DataFrame =
-    silverMulti(Tables.events(spark, sfDir))
+  def silverFrom(spark: SparkSession, sfDir: String,
+      keyCols: Seq[String] = Nil): DataFrame =
+    silver(Tables.events(spark, sfDir), keyCols)
 
-  def goldMultiFrom(spark: SparkSession, sfDir: String): DataFrame =
-    goldMulti(silverMultiFrom(spark, sfDir))
+  def goldFrom(spark: SparkSession, sfDir: String,
+      keyCols: Seq[String] = Nil): DataFrame =
+    gold(silverFrom(spark, sfDir, keyCols), keyCols)
 }

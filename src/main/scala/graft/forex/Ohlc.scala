@@ -1,6 +1,6 @@
 package graft.forex
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** OHLC candle aggregation (reference: fct_eurusd_timeframes.sql:59-71).
@@ -19,15 +19,20 @@ import org.apache.spark.sql.functions._
   */
 object Ohlc {
 
+  /** The candle aggregate over ticks (observed_at, *_price); the batch and
+    * streaming candles both group with it.
+    */
+  val tickAggs: Seq[Column] = Seq(
+    min_by(col("open_price"), col("observed_at")).as("open_price"),
+    max(col("high_price")).as("high_price"),
+    min(col("low_price")).as("low_price"),
+    max_by(col("close_price"), col("observed_at")).as("close_price"),
+    count(lit(1)).as("ticks_5m_count"))
+
   def candles(fanned: DataFrame, keyCols: Seq[String] = Nil): DataFrame =
     fanned
       .groupBy(keyCols.map(col) ++ Seq(col("timeframe"), col("candle_start")): _*)
-      .agg(
-        min_by(col("open_price"), col("observed_at")).as("open_price"),
-        max(col("high_price")).as("high_price"),
-        min(col("low_price")).as("low_price"),
-        max_by(col("close_price"), col("observed_at")).as("close_price"),
-        count(lit(1)).as("ticks_5m_count"))
+      .agg(tickAggs.head, tickAggs.tail: _*)
 
   /** Hierarchical re-aggregation: coarser candles FROM finer candles, never
     * re-reading ticks — OHLC is a mergeable aggregate (open = open of the

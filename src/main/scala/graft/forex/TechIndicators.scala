@@ -155,13 +155,55 @@ object TechIndicators {
           6).as(s"rsi_$n")): _*)
   }
 
+  // ----------------------------------------------------------------- EWMA
+
+  /** EWMA of close (ewma_t = 0.2·x_t + 0.8·ewma_{t−1}, seeded at the first
+    * close) — a RECURSIVE indicator no window frame can express: frames
+    * compute over values, not over prior RESULTS. Realized as the prefix
+    * fold: `collect_list` over a ROWS UNBOUNDED PRECEDING window gives each
+    * row its ordered prefix, and `aggregate` folds it left with exactly
+    * DuckDB list_reduce's association, so the recurrence reproduces
+    * bit-for-bit. O(n²) per series, the candle-level ceiling documented
+    * above; [[ewmaChunked]] is the scale-out form. With a key, the fold
+    * window partitions by it: each series' fold is the same sequential
+    * association, so a keyed slice equals that series' own run.
+    */
+  def ewma(candles: DataFrame, keyCols: Seq[String] = Nil): DataFrame =
+    candles
+      .withColumn("px", collect_list(col("close_price")).over(prefix(keyCols)))
+      .select(keyCols.map(col) ++ Seq(col("candle_start"), col("close_price"),
+        graft.Parity.pround(foldCol("px", "(acc, x) -> 0.2 * x + 0.8 * acc"), 6)
+          .as("ewma")): _*)
+
+  // ------------------------------------------------------------- gap fill
+
+  /** Calendar densification + forward fill of a 1h close series: each
+    * series gets its own dense hourly grid over its [min, max] (one
+    * `sequence` row per series, never a cross join), joined back to the
+    * closes, with close_price forward-filled by `last(_, ignoreNulls)` over
+    * the time order. `is_filled` marks synthesized rows. The fill window
+    * partitions by the key, so every series is repaired on its own.
+    */
+  def gapFill(closes: DataFrame, keyCols: Seq[String] = Nil): DataFrame = {
+    val grid = closes
+      .groupBy(keyCols.map(col): _*)
+      .agg(min(col("candle_start")).as("lo"), max(col("candle_start")).as("hi"))
+      .select(keyCols.map(col) :+
+        explode(expr("sequence(lo, hi, interval 1 hour)")).as("candle_start"): _*)
+    grid.join(closes, keyCols :+ "candle_start", "left")
+      .withColumn("close_filled",
+        last(col("close_price"), ignoreNulls = true).over(prefix(keyCols)))
+      .select(keyCols.map(col) ++ Seq(col("candle_start"), col("close_filled"),
+        col("close_price").isNull.cast("long").as("is_filled")): _*)
+  }
+
   // --------------------------------------------------- chunk-parallel EWMA
 
   /** EWMA as a PARALLEL PREFIX SCAN — the 100 TB path for linear
-    * recurrences that [[graft.queries.ForexQueries.ewma1h]]'s scaladoc
-    * names but does not build. ewma_t = (1−α)·ewma_{t−1} + α·x_t is the
-    * affine map s ↦ a·s + b_t (a = 1−α, b_t = α·x_t), and affine maps
-    * compose associatively: (A₂,B₂)∘(A₁,B₁) = (A₂A₁, A₂B₁+B₂). So:
+    * recurrences that [[ewma]]'s scaladoc names. ewma_t =
+    * (1−α)·ewma_{t−1} + α·x_t is the affine map s ↦ a·s + b_t (a = 1−α,
+    * b_t = α·x_t), and affine maps compose associatively:
+    * (A₂,B₂)∘(A₁,B₁) = (A₂A₁, A₂B₁+B₂). So:
     *
     *  1. split the series into time-contiguous chunks (integer-DIV on the
     *     candle grid — same chunking as IndicatorsChunked);
@@ -301,9 +343,7 @@ object TechIndicators {
     // per-series seeds: one row (global) or one per key — broadcast either way
     val firstAggs = specs.map(sp =>
       min_by(col(sp.valueCol), col("candle_start")).as(s"${sp.outCol}_first"))
-    val first =
-      if (keyCols.isEmpty) df.agg(firstAggs.head, firstAggs.tail: _*)
-      else df.groupBy(keyCols.map(col): _*).agg(firstAggs.head, firstAggs.tail: _*)
+    val first = df.groupBy(keyCols.map(col): _*).agg(firstAggs.head, firstAggs.tail: _*)
     val seeds = first.select(keyCols.map(col) :+ expr(
       s"named_struct(" +
         perSpec(sp => s"named_struct('a', 1.0D, 'b', ${sp.outCol}_first)") +
@@ -507,9 +547,7 @@ object TechIndicators {
       "'b1', f.a11 * acc.b1 + f.a12 * acc.b2 + f.b1, " +
       "'b2', f.a21 * acc.b1 + f.a22 * acc.b2 + f.b2)"
     val firstAgg = min_by(col("close_price"), col("candle_start")).as("__x0")
-    val first =
-      if (keyCols.isEmpty) candles.agg(firstAgg)
-      else candles.groupBy(keyCols.map(col): _*).agg(firstAgg)
+    val first = candles.groupBy(keyCols.map(col): _*).agg(firstAgg)
     val seeds = first.select(keyCols.map(col) :+
       expr("named_struct('a11', 1.0D, 'a12', 0.0D, 'a21', 0.0D, " +
         "'a22', 1.0D, 'b1', __x0, 'b2', 0.0D)").as("__seed0"): _*)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.forex.{Dedup, ForexPipeline, Indicators, IndicatorsChunked, Ohlc, Resample}
+import graft.forex.{Dedup, ForexPipeline, Indicators, IndicatorsChunked, Ohlc, Resample, TechIndicators}
 
 /** Driver-contract queries covering the reference pipeline (SURVEY §2),
   * each with a DuckDB oracle over the same parquet tables.
@@ -25,51 +25,44 @@ object ForexQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** DuckDB equivalent of the silver model (shared CTE text). */
-  private[queries] val silverSql: String =
-    """silver AS (
-      |  SELECT observed_at, open_price, high_price, low_price, close_price FROM (
-      |    SELECT CAST(ts AS TIMESTAMP) AS observed_at,
-      |           value AS open_price, value AS high_price,
-      |           value AS low_price, value AS close_price,
-      |           row_number() OVER (PARTITION BY CAST(ts AS TIMESTAMP)
-      |                              ORDER BY event_id DESC) AS rn
-      |    FROM events)
-      |  WHERE rn = 1)""".stripMargin
+  private val OneHour = Resample.byName("1h")
 
-  /** DuckDB bucket expression mirroring Resample.bucket's closed form. */
-  private[queries] def bucketSql(tsCol: String, tf: Resample.Timeframe): String = {
-    val u = s"(epoch_us($tsCol) + ${tf.shiftUs})"
-    s"make_timestamp($u - ($u % ${tf.widthUs}) - ${tf.shiftUs})"
-  }
+  /** `df` sorted by the key, then `cols`. */
+  private[queries] def ordered(df: DataFrame, key: Seq[String], cols: String*): DataFrame =
+    df.orderBy((key ++ cols).map(col): _*)
 
-  private[queries] val fannedSql: String = {
-    val branches = Resample.timeframes.map { tf =>
-      s"""  SELECT '${tf.name}' AS timeframe, ${bucketSql("observed_at", tf)} AS candle_start,
-         |         observed_at, open_price, high_price, low_price, close_price FROM silver""".stripMargin
-    }
-    "fanned AS (\n" + branches.mkString("\n  UNION ALL\n") + ")"
-  }
+  /** Ticks → 1h candles of every series under `key`. */
+  private[queries] def candles1h(s: SparkSession, dir: String, key: Seq[String]): DataFrame =
+    Ohlc.candles(Resample.fanout(ForexPipeline.silverFrom(s, dir, key), Seq(OneHour), key), key)
 
-  /** DuckDB SMA mirroring Indicators.sma: exact DECIMAL frame sum → double
-    * → divide by frame count → round. Association-independent on both sides.
+  /** The (key…, candle_start, close_price) columns of `candles`. */
+  private def closes(candles: DataFrame, key: Seq[String]): DataFrame =
+    candles.select((key :+ "candle_start" :+ "close_price").map(col): _*)
+
+  /** The single series' 1h candles as a SHARED fixture: eleven indicator
+    * queries (the chunked family, ewma/rsi/macd/bollinger, both enrich
+    * forms) consume exactly this table, and each was re-running the silver
+    * scan + dedup window + candle aggregate to get it. One (JVM, dir)
+    * build, one parquet write, per-consumer column-pruned scans — the
+    * derived-table discipline the PCA/KLL families already follow.
+    * Timestamps (µs) and doubles round-trip parquet bit-exactly, so every
+    * consumer's values are unchanged.
     */
-  private[queries] def smaSql(n: Int): String = {
-    val frame = s"PARTITION BY timeframe ORDER BY candle_start ROWS BETWEEN ${n - 1} PRECEDING AND CURRENT ROW"
-    val avg = s"""CAST(sum(CAST(close_price AS DECIMAL(25,10))) OVER ($frame) AS DOUBLE)
-       |         / count(*) OVER ($frame)""".stripMargin
-    graft.Parity.proundSql(avg, 6) + s" AS sma_$n"
-  }
+  private[queries] def candles1hShared(s: SparkSession, dir: String): DataFrame =
+    graft.Scratch.fixture(s, s"candles-1h|$dir")(candles1h(s, dir, Nil))
 
-  private[queries] val candlesSql: String =
-    """candles AS (
-      |  SELECT timeframe, candle_start,
-      |         arg_min(open_price, observed_at) AS open_price,
-      |         max(high_price)                  AS high_price,
-      |         min(low_price)                   AS low_price,
-      |         arg_max(close_price, observed_at) AS close_price,
-      |         count(*)                         AS ticks_5m_count
-      |  FROM fanned GROUP BY 1, 2)""".stripMargin
+  /** A series layout: its key (`Nil` for the one series the reference
+    * runs, ForexPipeline.SymbolKey for a table of instruments) and where its
+    * 1h candles come from. Each layout keeps the input its queries have
+    * always read: the single series reads the shared fixture, the keyed
+    * table builds its candles inline.
+    */
+  final case class Series(key: Seq[String], candles1h: Q) {
+    def closes1h(s: SparkSession, dir: String): DataFrame = closes(candles1h(s, dir), key)
+  }
+  val Single: Series = Series(Nil, candles1hShared)
+  val Keyed: Series = Series(ForexPipeline.SymbolKey,
+    (s, dir) => candles1h(s, dir, ForexPipeline.SymbolKey))
 
   // ---------------------------------------------------------------- queries
 
@@ -78,110 +71,53 @@ object ForexQueries {
     ForexPipeline.silverFrom(s, dir).orderBy(col("observed_at"))
 
   val stgTicksSql: String =
-    s"""WITH $silverSql
+    s"""WITH ${ForexSql.silver(Nil)}
        |SELECT * FROM silver ORDER BY observed_at""".stripMargin
 
   /** Flagship: full gold model — fan-out, OHLC, indicators, md5 id
-    * (T1–T6, A1–A5, W2–W4, §2.9).
+    * (T1–T6, A1–A5, W2–W4, §2.9) — for every series under `key`.
     */
-  val fctTimeframes: Q = (s, dir) =>
-    ForexPipeline.goldFrom(s, dir).orderBy(col("timeframe"), col("candle_start"))
+  def fctTimeframesOf(key: Seq[String]): Q = (s, dir) =>
+    ordered(ForexPipeline.goldFrom(s, dir, key), key, "timeframe", "candle_start")
 
-  val fctTimeframesSql: String =
-    s"""WITH $silverSql,
-       |$fannedSql,
-       |$candlesSql
-       |SELECT md5(timeframe || '|' || strftime(candle_start, '%Y-%m-%d %H:%M:%S')) AS unique_id,
-       |       timeframe, candle_start, open_price, high_price, low_price, close_price,
-       |       ticks_5m_count,
-       |       close_price - lag(close_price) OVER
-       |         (PARTITION BY timeframe ORDER BY candle_start) AS price_diff,
-       |       ${smaSql(20)},
-       |       ${smaSql(50)}
-       |FROM candles
-       |ORDER BY timeframe, candle_start""".stripMargin
+  /** The single series' gold: the driver's entry query. */
+  val fctTimeframes: Q = fctTimeframesOf(Nil)
+
+  def fctTimeframesSql(key: Seq[String]): String =
+    s"""WITH ${ForexSql.gold(key, Resample.timeframes)}
+       |SELECT * FROM gold ORDER BY ${ForexSql.by(key, "timeframe", "candle_start")}""".stripMargin
 
   /** Single-timeframe OHLC aggregate (A1–A5 in isolation). */
-  val ohlc1h: Q = (s, dir) => {
-    val fanned = Resample.fanout(ForexPipeline.silverFrom(s, dir),
-      Seq(Resample.byName("1h")))
-    Ohlc.candles(fanned).orderBy(col("candle_start"))
-  }
+  val ohlc1h: Q = (s, dir) => candles1h(s, dir, Nil).orderBy(col("candle_start"))
 
-  val ohlc1hSql: String =
-    s"""WITH $silverSql
-       |SELECT '1h' AS timeframe,
-       |       ${bucketSql("observed_at", Resample.byName("1h"))} AS candle_start,
-       |       arg_min(open_price, observed_at) AS open_price,
-       |       max(high_price)                  AS high_price,
-       |       min(low_price)                   AS low_price,
-       |       arg_max(close_price, observed_at) AS close_price,
-       |       count(*)                         AS ticks_5m_count
-       |FROM silver GROUP BY 1, 2 ORDER BY candle_start""".stripMargin
-
-  /** EWMA over 1h candle closes — a RECURSIVE indicator
-    * (ewma_t = a*x_t + (1-a)*ewma_{t-1}) that no window frame can express:
-    * frames compute over values, not over prior RESULTS. Realized as a
-    * prefix-list sequential fold: collect_list over a ROWS UNBOUNDED
-    * PRECEDING window gives each row its ordered prefix, and `aggregate`
-    * folds it left with exactly DuckDB list_reduce's association, so the
-    * recurrence reproduces bit-for-bit. O(n^2) in series length per
-    * series — acceptable because the input is candle-level (720 rows/month
-    * at 1h), the same documented ceiling as the Indicators windows; the
-    * 100 TB path for long series is a parallel prefix scan (the recurrence
-    * is a linear map, hence associative in (mul, add) matrix form), noted
-    * here rather than built.
+  /** The 1h candles of every series under `key`: the oracle of the batch
+    * and streaming candle queries.
     */
-  /** The 1h candle relation as a SHARED fixture: eleven indicator queries
-    * (the chunked family, ewma/rsi/macd/bollinger, both enrich forms)
-    * consume exactly this table, and each was re-running the silver scan +
-    * dedup window + candle aggregate to get it. One (JVM, dir) build, one
-    * parquet write, per-consumer column-pruned scans — the derived-table
-    * discipline the PCA/KLL families already follow. Timestamps (µs) and
-    * doubles round-trip parquet bit-exactly, so every consumer's values
-    * are unchanged.
+  def ohlc1hSql(key: Seq[String]): String =
+    s"""WITH ${ForexSql.candles(key, Seq(OneHour))}
+       |SELECT * FROM candles ORDER BY ${ForexSql.by(key, "candle_start")}""".stripMargin
+
+  /** EWMA over 1h candle closes, one recurrence per series
+    * (TechIndicators.ewma).
     */
-  private[queries] def candles1hShared(s: SparkSession, dir: String): DataFrame =
-    graft.Scratch.fixture(s, s"candles-1h|$dir")(
-      Ohlc.candles(Resample.fanout(ForexPipeline.silverFrom(s, dir),
-        Seq(Resample.byName("1h")))))
+  def ewma(sr: Series): Q = (s, dir) =>
+    ordered(TechIndicators.ewma(sr.closes1h(s, dir), sr.key), sr.key, "candle_start")
 
-  val ewma1h: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
-    val candles = candles1hShared(s, dir)
-      .select(col("candle_start"), col("close_price"))
-    val w = Window.orderBy(col("candle_start"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    candles
-      .withColumn("px", collect_list(col("close_price")).over(w))
-      .select(col("candle_start"), col("close_price"),
-        graft.Parity.pround(
-          expr("aggregate(slice(px, 2, size(px) - 1), px[0], (acc, x) -> 0.2 * x + 0.8 * acc)"),
-          6).as("ewma"))
-      .orderBy(col("candle_start"))
-  }
-
-  val ewma1hSql: String =
-    s"""WITH $silverSql,
-       |c AS (
-       |  SELECT ${bucketSql("observed_at", Resample.byName("1h"))} AS candle_start,
-       |         arg_max(close_price, observed_at) AS close_price
-       |  FROM silver GROUP BY 1),
+  def ewmaSql(key: Seq[String]): String =
+    s"""WITH ${ForexSql.closes1h(key)},
        |pre AS (
-       |  SELECT candle_start, close_price,
-       |         list(close_price) OVER (ORDER BY candle_start ROWS UNBOUNDED PRECEDING) AS px
+       |  SELECT *, list(close_price) OVER (${ForexSql.window(key)} ROWS UNBOUNDED PRECEDING) AS px
        |  FROM c)
-       |SELECT candle_start, close_price,
+       |SELECT ${ForexSql.by(key, "candle_start", "close_price")},
        |       ${graft.Parity.proundSql("list_reduce(px, (acc, x) -> 0.2 * x + 0.8 * acc)", 6)} AS ewma
-       |FROM pre ORDER BY candle_start""".stripMargin
+       |FROM pre ORDER BY ${ForexSql.by(key, "candle_start")}""".stripMargin
 
   /** Fused single-buffer OHLC via the custom OhlcAgg DeclarativeAggregate —
     * same semantics and SAME ORACLE as ohlc_1h, different physical
     * aggregation (one buffer instead of four aggregate functions).
     */
   val ohlc1hFused: Q = (s, dir) => {
-    val fanned = Resample.fanout(ForexPipeline.silverFrom(s, dir),
-      Seq(Resample.byName("1h")))
+    val fanned = Resample.fanout(ForexPipeline.silverFrom(s, dir), Seq(OneHour))
     fanned.groupBy(col("timeframe"), col("candle_start"))
       .agg(graft.functions.OhlcAggregate.ohlc(
         col("observed_at"), col("open_price"), col("high_price"),
@@ -202,37 +138,21 @@ object ForexQueries {
 
   val resampleBucketsSql: String = {
     val bucketCols = Resample.timeframes
-      .map(tf => s"${bucketSql("observed_at", tf)} AS b_${tf.name}")
+      .map(tf => s"${ForexSql.bucket("observed_at", tf)} AS b_${tf.name}")
       .mkString(",\n       ")
-    s"""WITH $silverSql
+    s"""WITH ${ForexSql.silver(Nil)}
        |SELECT observed_at,
        |       $bucketCols
        |FROM silver ORDER BY observed_at""".stripMargin
   }
 
   /** Indicator stage in isolation over 1h candles (W2–W4). */
-  val indicators1h: Q = (s, dir) =>
-    Indicators.enrich(candles1hShared(s, dir)).orderBy(col("candle_start"))
+  def indicators(sr: Series): Q = (s, dir) =>
+    ordered(Indicators.enrich(sr.candles1h(s, dir), sr.key), sr.key, "candle_start")
 
-  val indicators1hSql: String =
-    s"""WITH $silverSql,
-       |candles AS (
-       |  SELECT '1h' AS timeframe,
-       |         ${bucketSql("observed_at", Resample.byName("1h"))} AS candle_start,
-       |         arg_min(open_price, observed_at) AS open_price,
-       |         max(high_price)                  AS high_price,
-       |         min(low_price)                   AS low_price,
-       |         arg_max(close_price, observed_at) AS close_price,
-       |         count(*)                         AS ticks_5m_count
-       |  FROM silver GROUP BY 1, 2)
-       |SELECT md5(timeframe || '|' || strftime(candle_start, '%Y-%m-%d %H:%M:%S')) AS unique_id,
-       |       timeframe, candle_start, open_price, high_price, low_price, close_price,
-       |       ticks_5m_count,
-       |       close_price - lag(close_price) OVER
-       |         (PARTITION BY timeframe ORDER BY candle_start) AS price_diff,
-       |       ${smaSql(20)},
-       |       ${smaSql(50)}
-       |FROM candles ORDER BY candle_start""".stripMargin
+  def indicatorsSql(key: Seq[String]): String =
+    s"""WITH ${ForexSql.gold(key, Seq(OneHour))}
+       |SELECT * FROM gold ORDER BY ${ForexSql.by(key, "candle_start")}""".stripMargin
 
   /** Indicator stage through the chunked scale-out path (bounded chunks +
     * ≤50-row carry-in, parallelism = #chunks instead of #timeframes) —
@@ -268,7 +188,7 @@ object ForexQueries {
   }
 
   val watermarkFilterSql: String =
-    s"""WITH $silverSql
+    s"""WITH ${ForexSql.silver(Nil)}
        |SELECT * FROM silver
        |WHERE observed_at > (SELECT max(observed_at) - INTERVAL 7 DAY FROM silver)
        |ORDER BY observed_at""".stripMargin
@@ -282,8 +202,7 @@ object ForexQueries {
       .orderBy(col("timeframe"))
 
   val unionFanoutSql: String =
-    s"""WITH $silverSql,
-       |$fannedSql
+    s"""WITH ${ForexSql.candles(Nil, Resample.timeframes)}
        |SELECT timeframe, count(*) AS n_rows,
        |       count(DISTINCT candle_start) AS n_candles
        |FROM fanned GROUP BY 1 ORDER BY timeframe""".stripMargin
@@ -295,72 +214,51 @@ object ForexQueries {
     * store to build coarse series from the finest persisted one at scale.
     */
   val candlesRollup: Q = (s, dir) => {
-    val oneHour = Ohlc.candles(Resample.fanout(
-      ForexPipeline.silverFrom(s, dir), Seq(Resample.byName("1h"))))
-    Ohlc.rollupCandles(oneHour,
+    Ohlc.rollupCandles(candles1h(s, dir, Nil),
         Seq(Resample.byName("4h"), Resample.byName("12h"), Resample.byName("24h")))
       .orderBy(col("timeframe"), col("candle_start"))
   }
 
   val candlesRollupSql: String =
-    s"""WITH $silverSql,
-       |$fannedSql,
-       |$candlesSql
+    s"""WITH ${ForexSql.candles(Nil, Resample.timeframes)}
        |SELECT timeframe, candle_start, open_price, high_price, low_price,
        |       close_price, ticks_5m_count
        |FROM candles
        |WHERE timeframe IN ('4h', '12h', '24h')
        |ORDER BY timeframe, candle_start""".stripMargin
 
-  /** Calendar densification + forward fill: thin the 1h candle series
-    * deterministically (drop hours ≡ 3 mod 5 — real feeds drop ticks, the
-    * testdata doesn't), regenerate the full hourly grid with `sequence`,
-    * and forward-fill close_price with `last(_, ignoreNulls)` over the
-    * time order. `is_filled` marks synthesized rows. The standard
-    * time-series gap-repair operator: grid generation is one row per
-    * missing slot (never a cross join), the fill is one ordered window.
-    * At 100 TB the window partitions by series key (symbol) exactly like
-    * the indicator windows; a single global series is the documented
-    * candle-level ceiling.
+  /** Calendar densification + forward fill (TechIndicators.gapFill) of
+    * each series' 1h closes, thinned deterministically first (drop hours
+    * ≡ 3 mod 5 — real feeds drop ticks, the testdata doesn't). The
+    * standard time-series gap-repair operator: grid generation is one row
+    * per missing slot (never a cross join), the fill is one ordered window
+    * per series.
     */
-  val gapFill: Q = (s, dir) => {
-    val candles = Ohlc.candles(Resample.fanout(
-        ForexPipeline.silverFrom(s, dir), Seq(Resample.byName("1h"))))
-      .select(col("candle_start"), col("close_price"))
+  def gapFill(key: Seq[String]): Q = (s, dir) => {
+    val thinned = closes(candles1h(s, dir, key), key)
       .filter(expr("(unix_micros(candle_start) DIV 3600000000L) % 5 != 3"))
-    val grid = candles
-      .agg(min(col("candle_start")).as("lo"), max(col("candle_start")).as("hi"))
-      .select(explode(expr("sequence(lo, hi, interval 1 hour)")).as("candle_start"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("candle_start"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    grid.join(candles, Seq("candle_start"), "left")
-      .withColumn("close_filled", last(col("close_price"), ignoreNulls = true).over(w))
-      .select(col("candle_start"), col("close_filled"),
-        col("close_price").isNull.cast("long").as("is_filled"))
-      .orderBy(col("candle_start"))
+    ordered(TechIndicators.gapFill(thinned, key), key, "candle_start")
   }
 
-  val gapFillSql: String =
-    s"""WITH $silverSql,
-       |c0 AS (
-       |  SELECT ${bucketSql("observed_at", Resample.byName("1h"))} AS candle_start,
-       |         arg_max(close_price, observed_at) AS close_price
-       |  FROM silver GROUP BY 1),
-       |c AS (
-       |  SELECT * FROM c0
+  def gapFillSql(key: Seq[String]): String =
+    s"""WITH ${ForexSql.closes1h(key)},
+       |cf AS (
+       |  SELECT * FROM c
        |  WHERE (epoch_us(candle_start) // 3600000000) % 5 != 3),
+       |spans AS (
+       |  SELECT ${ForexSql.by(key, "min(candle_start) AS lo")}, max(candle_start) AS hi
+       |  FROM cf GROUP BY ALL),
        |grid AS (
-       |  SELECT unnest(generate_series(
-       |           (SELECT min(candle_start) FROM c),
-       |           (SELECT max(candle_start) FROM c),
-       |           INTERVAL 1 HOUR)) AS candle_start),
-       |j AS (SELECT grid.candle_start, c.close_price FROM grid LEFT JOIN c USING (candle_start))
-       |SELECT candle_start,
-       |       last_value(close_price IGNORE NULLS) OVER (ORDER BY candle_start
+       |  SELECT ${ForexSql.by(key, "unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS candle_start")}
+       |  FROM spans),
+       |j AS (
+       |  SELECT grid.*, cf.close_price
+       |  FROM grid LEFT JOIN cf USING (${ForexSql.by(key, "candle_start")}))
+       |SELECT ${ForexSql.by(key, "candle_start")},
+       |       last_value(close_price IGNORE NULLS) OVER (${ForexSql.window(key)}
        |         ROWS UNBOUNDED PRECEDING) AS close_filled,
        |       CAST(close_price IS NULL AS BIGINT) AS is_filled
-       |FROM j ORDER BY candle_start""".stripMargin
+       |FROM j ORDER BY ${ForexSql.by(key, "candle_start")}""".stripMargin
 
   /** Unpivot/melt: wide OHLC candles to long (candle_start, field, value)
     * form — the feature-table shape ML pipelines join on. Same single-scan
@@ -368,8 +266,7 @@ object ForexQueries {
     * Generate); per-row work only, no shuffle before the output sort.
     */
   val candlesUnpivot: Q = (s, dir) =>
-    Ohlc.candles(Resample.fanout(
-        ForexPipeline.silverFrom(s, dir), Seq(Resample.byName("1h"))))
+    candles1h(s, dir, Nil)
       .select(col("candle_start"), explode(array(
         struct(lit("open").as("field"), col("open_price").as("value")),
         struct(lit("high").as("field"), col("high_price").as("value")),
@@ -379,33 +276,26 @@ object ForexQueries {
       .orderBy(col("candle_start"), col("field"))
 
   val candlesUnpivotSql: String =
-    s"""WITH $silverSql,
-       |c AS (
-       |  SELECT ${bucketSql("observed_at", Resample.byName("1h"))} AS candle_start,
-       |         arg_min(open_price, observed_at) AS open_price,
-       |         max(high_price) AS high_price,
-       |         min(low_price) AS low_price,
-       |         arg_max(close_price, observed_at) AS close_price
-       |  FROM silver GROUP BY 1)
-       |SELECT candle_start, 'open' AS field, open_price AS value FROM c
-       |UNION ALL SELECT candle_start, 'high', high_price FROM c
-       |UNION ALL SELECT candle_start, 'low', low_price FROM c
-       |UNION ALL SELECT candle_start, 'close', close_price FROM c
+    s"""WITH ${ForexSql.candles(Nil, Seq(OneHour))}
+       |SELECT candle_start, 'open' AS field, open_price AS value FROM candles
+       |UNION ALL SELECT candle_start, 'high', high_price FROM candles
+       |UNION ALL SELECT candle_start, 'low', low_price FROM candles
+       |UNION ALL SELECT candle_start, 'close', close_price FROM candles
        |ORDER BY candle_start, field""".stripMargin
 
   // ------------------------------------------------------------- registry
 
   val queries: Map[String, Q] = Map(
     "candles_rollup" -> candlesRollup,
-    "gap_fill" -> gapFill,
+    "gap_fill" -> gapFill(Nil),
     "candles_unpivot" -> candlesUnpivot,
     "stg_ticks" -> stgTicks,
     "fct_timeframes" -> fctTimeframes,
     "ohlc_1h" -> ohlc1h,
-    "ewma_1h" -> ewma1h,
+    "ewma_1h" -> ewma(Single),
     "ohlc_1h_fused" -> ohlc1hFused,
     "resample_buckets" -> resampleBuckets,
-    "indicators_1h" -> indicators1h,
+    "indicators_1h" -> indicators(Single),
     "indicators_1h_chunked" -> indicators1hChunked,
     "dedup_exact_rows" -> dedupExactRows,
     "watermark_filter" -> watermarkFilter,
@@ -413,16 +303,16 @@ object ForexQueries {
 
   val oracleSql: Map[String, String] = Map(
     "candles_rollup" -> candlesRollupSql, // rollup-from-1h vs direct-from-ticks
-    "gap_fill" -> gapFillSql,
+    "gap_fill" -> gapFillSql(Nil),
     "candles_unpivot" -> candlesUnpivotSql,
     "stg_ticks" -> stgTicksSql,
-    "fct_timeframes" -> fctTimeframesSql,
-    "ohlc_1h" -> ohlc1hSql,
-    "ewma_1h" -> ewma1hSql,
-    "ohlc_1h_fused" -> ohlc1hSql, // same semantics, custom aggregate physical op
+    "fct_timeframes" -> fctTimeframesSql(Nil),
+    "ohlc_1h" -> ohlc1hSql(Nil),
+    "ewma_1h" -> ewmaSql(Nil),
+    "ohlc_1h_fused" -> ohlc1hSql(Nil), // same semantics, custom aggregate physical op
     "resample_buckets" -> resampleBucketsSql,
-    "indicators_1h" -> indicators1hSql,
-    "indicators_1h_chunked" -> indicators1hSql, // same semantics, chunked plan
+    "indicators_1h" -> indicatorsSql(Nil),
+    "indicators_1h_chunked" -> indicatorsSql(Nil), // same semantics, chunked plan
     "dedup_exact_rows" -> dedupExactRowsSql,
     "watermark_filter" -> watermarkFilterSql,
     "union_fanout" -> unionFanoutSql)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.forex.{ForexPipeline, Ohlc, Resample, TechIndicators}
+import graft.forex.TechIndicators
 
 /** Advanced indicator queries (Bollinger, RSI, MACD) over 1h candles, each
   * with a DuckDB oracle. All indicator math is sequential-fold deterministic
@@ -15,15 +15,14 @@ object IndicatorQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  // the shared 1h candle fixture (ForexQueries.candles1hShared), pruned to
-  // the two columns every indicator here reads — the parquet scan reads
-  // only these
-  private def candles1h(s: SparkSession, dir: String): DataFrame =
-    ForexQueries.candles1hShared(s, dir)
-      .select(col("candle_start"), col("close_price"))
+  import ForexQueries.{Series, Single, ordered}
+  import ForexSql.{by, window}
 
-  /** Distinct 64-candle chunk count of the 1h grid, once per (JVM, dir) —
-    * two roles (ADVICE r13 #4 + VERDICT r13 next-round #4):
+  /** One 64-candle chunk in µs: the grid every chunked scan here splits on. */
+  private val ChunkUs = 3600000000L * 64
+
+  /** Most distinct 64-candle chunks in any one series of `closes`, once per
+    * (JVM, dir, key) — two roles (ADVICE r13 #4 + VERDICT r13 next-round #4):
     *
     *  - GUARD: the chunked oracles below mirror MonoidScan's FLAT base
     *    case, exact only while every series has ≤64 chunks. Beyond that
@@ -45,188 +44,159 @@ object IndicatorQueries {
   // registry (ADVICE r14).
   private val chunkCounts =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def chunksChecked(s: SparkSession, dir: String): Long = {
-    val n: Long = chunkCounts.computeIfAbsent(dir, _ =>
-      candles1h(s, dir)
-        .select(expr(s"unix_micros(candle_start) DIV ${3600000000L * 64}L"))
-        .distinct().count())
+  private def chunksChecked(dir: String, key: Seq[String], closes: DataFrame): Long = {
+    val n: Long = chunkCounts.computeIfAbsent(s"$dir|${key.mkString(",")}", _ => {
+      val r = closes
+        .select(key.map(col) :+ expr(s"unix_micros(candle_start) DIV ${ChunkUs}L").as("ck"): _*)
+        .distinct().groupBy(key.map(col): _*).count()
+        .agg(max(col("count"))).head()
+      if (r.isNullAt(0)) 0L else r.getLong(0)
+    })
     if (n > 64)
       throw new IllegalStateException(
-        s"chunked-indicator oracle depth exceeded: $n chunks > fanout 64. " +
-          "The DuckDB oracles mirror MonoidScan's flat base case; at this " +
-          "history length the engine takes the fanout-64 hierarchical " +
-          "association (documented in TechIndicators/MonoidScan scaladoc) " +
-          "whose ulp-level roundings differ — the oracle needs one more " +
-          "CTE level per 64x of history (affineScanSql association note)")
+        s"chunked-indicator oracle depth exceeded: $n chunks > fanout 64 in " +
+          "one series. The DuckDB oracles mirror MonoidScan's flat base " +
+          "case; at this history length the engine takes the fanout-64 " +
+          "hierarchical association (documented in TechIndicators/MonoidScan " +
+          "scaladoc) whose ulp-level roundings differ — the oracle needs one " +
+          "more CTE level per 64x of history (affineScanSql association note)")
     n
   }
 
-  /** 1h close-price candle CTE shared by the three oracles (same shape as
-    * ewma_1h's — bucket via the closed-form epoch arithmetic).
-    */
-  private val candles1hSql: String =
-    s"""c AS (
-       |  SELECT ${ForexQueries.bucketSql("observed_at", Resample.byName("1h"))} AS candle_start,
-       |         arg_max(close_price, observed_at) AS close_price
-       |  FROM silver GROUP BY 1)""".stripMargin
+  /** The indicator output columns every oracle here selects. */
+  private def out(key: Seq[String]): String = by(key, "candle_start", "close_price")
 
   // ------------------------------------------------------------- Bollinger
 
-  val bollinger1h: Q = (s, dir) =>
-    TechIndicators.bollinger(candles1h(s, dir)).orderBy(col("candle_start"))
+  def bollinger(sr: Series): Q = (s, dir) =>
+    ordered(TechIndicators.bollinger(sr.closes1h(s, dir), keyCols = sr.key),
+      sr.key, "candle_start")
 
-  val bollinger1hSql: String =
-    s"""WITH ${ForexQueries.silverSql},
-       |$candles1hSql,
+  def bollingerSql(key: Seq[String]): String =
+    s"""WITH ${ForexSql.closes1h(key)},
        |p AS (
-       |  SELECT candle_start, close_price,
-       |         list(close_price) OVER (ORDER BY candle_start
+       |  SELECT *, list(close_price) OVER (${window(key)}
        |           ROWS BETWEEN 19 PRECEDING AND CURRENT ROW) AS px
        |  FROM c),
        |m AS (
-       |  SELECT candle_start, close_price, px,
-       |         list_reduce(px, (acc, x) -> acc + x) / CAST(len(px) AS DOUBLE) AS bb_mid
+       |  SELECT *, list_reduce(px, (acc, x) -> acc + x) / CAST(len(px) AS DOUBLE) AS bb_mid
        |  FROM p),
        |sd AS (
-       |  SELECT candle_start, close_price, bb_mid,
+       |  SELECT *,
        |         sqrt(list_reduce(list_transform(px, x -> (x - bb_mid) * (x - bb_mid)),
        |                          (acc, x) -> acc + x) / CAST(len(px) AS DOUBLE)) AS bb_sd
        |  FROM m)
-       |SELECT candle_start, close_price,
+       |SELECT ${out(key)},
        |       ${graft.Parity.proundSql("bb_mid", 6)} AS bb_mid,
        |       ${graft.Parity.proundSql("bb_mid + 2.0 * bb_sd", 6)} AS bb_upper,
        |       ${graft.Parity.proundSql("bb_mid - 2.0 * bb_sd", 6)} AS bb_lower
-       |FROM sd ORDER BY candle_start""".stripMargin
+       |FROM sd ORDER BY ${by(key, "candle_start")}""".stripMargin
 
   /** Bollinger through the chunk-parallel frame assembly (bounded
     * ≤19-row carry-in) — SAME ORACLE as bollinger_1h: frame lists are
     * identical, so the physical strategy must not change a bit.
     */
   val bollingerChunked: Q = (s, dir) =>
-    TechIndicators.bollingerChunked(candles1h(s, dir)).orderBy(col("candle_start"))
+    TechIndicators.bollingerChunked(Single.closes1h(s, dir)).orderBy(col("candle_start"))
 
   // ------------------------------------------------------------------ RSI
 
-  val rsi1h: Q = (s, dir) =>
-    TechIndicators.rsi(candles1h(s, dir)).orderBy(col("candle_start"))
+  def rsi(sr: Series): Q = (s, dir) =>
+    ordered(TechIndicators.rsi(sr.closes1h(s, dir), keyCols = sr.key),
+      sr.key, "candle_start")
 
-  val rsi1hSql: String =
-    s"""WITH ${ForexQueries.silverSql},
-       |$candles1hSql,
-       |d AS (
-       |  SELECT candle_start, close_price,
-       |         close_price - lag(close_price) OVER (ORDER BY candle_start) AS diff
+  /** CTEs `d` (close diff) and `g` (gain, loss; first row dropped) over the
+    * 1h closes `c`: the Wilder inputs of both RSI oracles.
+    */
+  private def gainsSql(key: Seq[String]): String =
+    s"""d AS (
+       |  SELECT *, close_price - lag(close_price) OVER (${window(key)}) AS diff
        |  FROM c),
        |g AS (
-       |  SELECT candle_start, close_price,
-       |         greatest(diff, 0.0) AS gain, greatest(0.0 - diff, 0.0) AS loss
-       |  FROM d WHERE diff IS NOT NULL),
+       |  SELECT *, greatest(diff, 0.0) AS gain, greatest(0.0 - diff, 0.0) AS loss
+       |  FROM d WHERE diff IS NOT NULL)""".stripMargin
+
+  private val rsiSelect: String = graft.Parity.proundSql(
+    "CASE WHEN avg_loss = 0.0 THEN 100.0 " +
+      "ELSE 100.0 - 100.0 / (1.0 + avg_gain / avg_loss) END", 6) + " AS rsi_14"
+
+  def rsiSql(key: Seq[String]): String =
+    s"""WITH ${ForexSql.closes1h(key)},
+       |${gainsSql(key)},
        |p AS (
-       |  SELECT candle_start, close_price,
-       |         list(gain) OVER pw AS gl, list(loss) OVER pw AS ll
-       |  FROM g WINDOW pw AS (ORDER BY candle_start ROWS UNBOUNDED PRECEDING)),
+       |  SELECT *, list(gain) OVER pw AS gl, list(loss) OVER pw AS ll
+       |  FROM g WINDOW pw AS (${window(key)} ROWS UNBOUNDED PRECEDING)),
        |a AS (
-       |  SELECT candle_start, close_price,
+       |  SELECT *,
        |         list_reduce(gl, (acc, x) -> (acc * 13.0 + x) / 14.0) AS avg_gain,
        |         list_reduce(ll, (acc, x) -> (acc * 13.0 + x) / 14.0) AS avg_loss
        |  FROM p)
-       |SELECT candle_start, close_price,
-       |       ${graft.Parity.proundSql(
-               "CASE WHEN avg_loss = 0.0 THEN 100.0 " +
-               "ELSE 100.0 - 100.0 / (1.0 + avg_gain / avg_loss) END", 6)} AS rsi_14
-       |FROM a ORDER BY candle_start""".stripMargin
+       |SELECT ${out(key)}, $rsiSelect
+       |FROM a ORDER BY ${by(key, "candle_start")}""".stripMargin
 
   // ----------------------------------------------------------------- MACD
 
-  val macd1h: Q = (s, dir) =>
-    TechIndicators.macd(candles1h(s, dir)).orderBy(col("candle_start"))
+  def macd(sr: Series): Q = (s, dir) =>
+    ordered(TechIndicators.macd(sr.closes1h(s, dir), keyCols = sr.key),
+      sr.key, "candle_start")
 
-  val macd1hSql: String =
-    s"""WITH ${ForexQueries.silverSql},
-       |$candles1hSql,
+  def macdSql(key: Seq[String]): String =
+    s"""WITH ${ForexSql.closes1h(key)},
        |p AS (
-       |  SELECT candle_start, close_price,
-       |         list(close_price) OVER (ORDER BY candle_start
-       |           ROWS UNBOUNDED PRECEDING) AS px
+       |  SELECT *, list(close_price) OVER (${window(key)} ROWS UNBOUNDED PRECEDING) AS px
        |  FROM c),
        |m AS (
-       |  SELECT candle_start, close_price,
+       |  SELECT *,
        |         list_reduce(px, (acc, x) -> acc + (2.0 / 13.0) * (x - acc))
        |         - list_reduce(px, (acc, x) -> acc + (2.0 / 27.0) * (x - acc)) AS macd
        |  FROM p),
        |ms AS (
-       |  SELECT candle_start, close_price, macd,
-       |         list(macd) OVER (ORDER BY candle_start
-       |           ROWS UNBOUNDED PRECEDING) AS ml
+       |  SELECT *, list(macd) OVER (${window(key)} ROWS UNBOUNDED PRECEDING) AS ml
        |  FROM m),
        |sg AS (
-       |  SELECT candle_start, close_price, macd,
-       |         list_reduce(ml, (acc, x) -> acc + (2.0 / 10.0) * (x - acc)) AS signal
+       |  SELECT *, list_reduce(ml, (acc, x) -> acc + (2.0 / 10.0) * (x - acc)) AS signal
        |  FROM ms)
-       |SELECT candle_start, close_price,
+       |SELECT ${out(key)},
        |       ${graft.Parity.proundSql("macd", 6)} AS macd,
        |       ${graft.Parity.proundSql("signal", 6)} AS macd_signal,
        |       ${graft.Parity.proundSql("macd - signal", 6)} AS macd_hist
-       |FROM sg ORDER BY candle_start""".stripMargin
+       |FROM sg ORDER BY ${by(key, "candle_start")}""".stripMargin
 
   // --------------------------------------------------- chunk-parallel EWMA
 
-  val ewmaChunked: Q = (s, dir) =>
-    TechIndicators.ewmaChunked(candles1h(s, dir),
-        maxChunksHint = Some(chunksChecked(s, dir)))
-      .orderBy(col("candle_start"))
+  /** EWMA through the chunk-parallel affine scan; chunking composes with
+    * the key (the whale-symbol case: one instrument's series splits into
+    * time chunks WITHIN its partition, so no task ever sees a whole series).
+    */
+  def ewmaChunked(sr: Series): Q = (s, dir) => {
+    val closes = sr.closes1h(s, dir)
+    ordered(TechIndicators.ewmaChunked(closes, keyCols = sr.key,
+        maxChunksHint = Some(chunksChecked(dir, sr.key, closes))),
+      sr.key, "candle_start")
+  }
 
   /** Oracle in the SAME chunked association as the engine (see
-    * TechIndicators.ewmaChunked scaladoc): per-chunk affine prefix folds,
-    * cross-chunk composition seeded with the first close. Struct literals
-    * CAST to DOUBLE (bare 0.8 is DECIMAL in DuckDB).
+    * TechIndicators.ewmaChunked scaladoc).
     */
-  val ewmaChunkedSql: String = {
-    val w = 3600000000L * 64
-    s"""WITH ${ForexQueries.silverSql},
-       |$candles1hSql,
-       |ck AS (
-       |  SELECT candle_start, close_price, epoch_us(candle_start) // $w AS chunk_id
-       |  FROM c),
-       |p AS (
-       |  SELECT candle_start, close_price, chunk_id,
-       |         list(close_price) OVER (PARTITION BY chunk_id ORDER BY candle_start
-       |           ROWS UNBOUNDED PRECEDING) AS px
-       |  FROM ck),
-       |ab AS (
-       |  SELECT candle_start, close_price, chunk_id,
-       |         list_reduce(
-       |           list_transform(px, x -> {'a': CAST(0.8 AS DOUBLE), 'b': 0.2 * x}),
-       |           (acc, f) -> {'a': f.a * acc.a, 'b': f.a * acc.b + f.b}) AS abf
-       |  FROM p),
-       |lastc AS (SELECT chunk_id, arg_max(abf, candle_start) AS ab_total FROM ab GROUP BY 1),
-       |pv AS (
-       |  SELECT chunk_id,
-       |         coalesce(list(ab_total) OVER (ORDER BY chunk_id
-       |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), []) AS prev
-       |  FROM lastc),
-       |si AS (
-       |  SELECT chunk_id,
-       |         list_reduce(
-       |           list_prepend({'a': CAST(1.0 AS DOUBLE),
-       |                         'b': (SELECT arg_min(close_price, candle_start) FROM c)}, prev),
-       |           (acc, f) -> {'a': CAST(1.0 AS DOUBLE), 'b': f.a * acc.b + f.b}).b AS s_in
-       |  FROM pv)
-       |SELECT ab.candle_start, ab.close_price,
-       |       ${graft.Parity.proundSql("ab.abf.a * si.s_in + ab.abf.b", 6)} AS ewma
-       |FROM ab JOIN si USING (chunk_id) ORDER BY candle_start""".stripMargin
+  def ewmaChunkedSql(key: Seq[String]): String = {
+    val (a, b) = ("CAST(4 AS DOUBLE) / CAST(5 AS DOUBLE)", "CAST(1 AS DOUBLE) / CAST(5 AS DOUBLE)")
+    s"""WITH ${ForexSql.closes1h(key)},
+       |${affineScanSql(key, "ewma", "c", "close_price", Nil, a, b)}
+       |SELECT ${out(key)}, ${graft.Parity.proundSql("ewma", 6)} AS ewma
+       |FROM ewma_res ORDER BY ${by(key, "candle_start")}""".stripMargin
   }
 
   /** DuckDB mirror of TechIndicators.affineScan as a name-prefixed CTE
-    * chain over `src` (must have `candle_start` and `valCol`; `extraCols`
-    * are carried through). Exposes `<p>_res` with column `<p>` = the scan
-    * value. Literal arithmetic mirrors the Spark lambdas exactly; a and b
-    * arrive as SQL expressions — callers pass exact-integer-ratio CASTs
-    * (e.g. CAST(13 AS DOUBLE) / CAST(14 AS DOUBLE)), never 17-digit
-    * decimal literals: DuckDB types a bare long literal DECIMAL first, and
-    * the decimal→double hop can double-round 1 ulp off Spark's direct
-    * double parse (ADVICE r4). The Scala side computes the same ratio in
-    * doubles, so both engines perform the identical IEEE division.
+    * chain over `src` (must have the key, `candle_start` and `valCol`;
+    * `extraCols` are carried through), one scan per series of `key`.
+    * Exposes `<p>_res` with column `<p>` = the scan value. Literal
+    * arithmetic mirrors the Spark lambdas exactly; a and b arrive as SQL
+    * expressions — callers pass exact-integer-ratio CASTs (e.g.
+    * CAST(13 AS DOUBLE) / CAST(14 AS DOUBLE)), never 17-digit decimal
+    * literals: DuckDB types a bare long literal DECIMAL first, and the
+    * decimal→double hop can double-round 1 ulp off Spark's direct double
+    * parse (ADVICE r4). The Scala side computes the same ratio in doubles,
+    * so both engines perform the identical IEEE division.
     *
     * Association note (r13): the `_pv`/`_si` CTEs emit the flat seeded
     * fold over chunk totals — exactly MonoidScan's BASE case, which the
@@ -236,97 +206,86 @@ object IndicatorQueries {
     * deterministic in the data); mirroring that would add one more level
     * of this same CTE pattern per 64× of history.
     */
-  private def affineScanSql(p: String, src: String, valCol: String,
-      extraCols: Seq[String], aSql: String, bSql: String, w: Long): String = {
-    val extra = extraCols.map(c => s"$c, ").mkString
-    val extraA = extraCols.map(c => s"ab.$c, ").mkString
+  private def affineScanSql(key: Seq[String], p: String, src: String,
+      valCol: String, extraCols: Seq[String], aSql: String, bSql: String): String = {
+    val kc = by(key, "chunk_id")
     s"""${p}_ck AS (
-       |  SELECT $extra candle_start, $valCol,
-       |         epoch_us(candle_start) // $w AS chunk_id
+       |  SELECT ${by(key ++ extraCols, "candle_start", valCol)},
+       |         epoch_us(candle_start) // $ChunkUs AS chunk_id
        |  FROM $src),
        |${p}_p AS (
-       |  SELECT *, list($valCol) OVER (PARTITION BY chunk_id ORDER BY candle_start
+       |  SELECT *, list($valCol) OVER (${window(key :+ "chunk_id")}
        |    ROWS UNBOUNDED PRECEDING) AS px
        |  FROM ${p}_ck),
        |${p}_ab AS (
-       |  SELECT $extra candle_start, $valCol, chunk_id,
+       |  SELECT * EXCLUDE (px),
        |         list_reduce(
        |           list_transform(px, x -> {'a': ($aSql), 'b': ($bSql) * x}),
        |           (acc, f) -> {'a': f.a * acc.a, 'b': f.a * acc.b + f.b}) AS abf
        |  FROM ${p}_p),
-       |${p}_last AS (SELECT chunk_id, arg_max(abf, candle_start) AS tot FROM ${p}_ab GROUP BY 1),
+       |${p}_last AS (SELECT $kc, arg_max(abf, candle_start) AS tot FROM ${p}_ab GROUP BY ALL),
+       |${p}_first AS (
+       |  SELECT ${by(key, s"arg_min($valCol, candle_start) AS x0")} FROM $src GROUP BY ALL),
        |${p}_pv AS (
-       |  SELECT chunk_id,
-       |         coalesce(list(tot) OVER (ORDER BY chunk_id
+       |  SELECT $kc,
+       |         coalesce(list(tot) OVER (${window(key, "chunk_id")}
        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), []) AS prev
        |  FROM ${p}_last),
        |${p}_si AS (
-       |  SELECT chunk_id,
+       |  SELECT ${key.map("pv." + _ + ", ").mkString}pv.chunk_id,
        |         list_reduce(
-       |           list_prepend({'a': CAST(1.0 AS DOUBLE),
-       |                         'b': (SELECT arg_min($valCol, candle_start) FROM $src)}, prev),
+       |           list_prepend({'a': CAST(1.0 AS DOUBLE), 'b': s0.x0}, prev),
        |           (acc, f) -> {'a': CAST(1.0 AS DOUBLE), 'b': f.a * acc.b + f.b}).b AS s_in
-       |  FROM ${p}_pv),
+       |  FROM ${p}_pv pv JOIN ${p}_first s0 ON ${ForexSql.keyEq(key, "pv", "s0")}),
        |${p}_res AS (
-       |  SELECT $extraA ab.candle_start, ab.$valCol,
-       |         ab.abf.a * si.s_in + ab.abf.b AS $p
-       |  FROM ${p}_ab ab JOIN ${p}_si si USING (chunk_id))""".stripMargin
+       |  SELECT ab.* EXCLUDE (chunk_id, abf), ab.abf.a * si.s_in + ab.abf.b AS $p
+       |  FROM ${p}_ab ab JOIN ${p}_si si USING ($kc))""".stripMargin
   }
 
   /** RSI via two chunk-parallel Wilder scans (TechIndicators.rsiChunked):
     * the scale-out form of rsi_1h, oracle-checked in its own chunked
     * association.
     */
-  val rsiChunked: Q = (s, dir) =>
-    TechIndicators.rsiChunked(candles1h(s, dir),
-        maxChunksHint = Some(chunksChecked(s, dir)))
+  val rsiChunked: Q = (s, dir) => {
+    val closes = Single.closes1h(s, dir)
+    TechIndicators.rsiChunked(closes,
+        maxChunksHint = Some(chunksChecked(dir, Nil, closes)))
       .orderBy(col("candle_start"))
+  }
 
   val rsiChunkedSql: String = {
-    val w = 3600000000L * 64
     val a = "CAST(13 AS DOUBLE) / CAST(14 AS DOUBLE)"
     val b = "CAST(1 AS DOUBLE) / CAST(14 AS DOUBLE)"
-    s"""WITH ${ForexQueries.silverSql},
-       |$candles1hSql,
-       |d AS (
-       |  SELECT candle_start, close_price,
-       |         close_price - lag(close_price) OVER (ORDER BY candle_start) AS diff
-       |  FROM c),
-       |g AS (
-       |  SELECT candle_start, close_price,
-       |         greatest(diff, 0.0) AS gain, greatest(0.0 - diff, 0.0) AS loss
-       |  FROM d WHERE diff IS NOT NULL),
-       |${affineScanSql("avg_gain", "g", "gain", Seq("close_price", "loss"), a, b, w)},
-       |${affineScanSql("avg_loss", "avg_gain_res", "loss", Seq("close_price", "avg_gain"), a, b, w)}
-       |SELECT candle_start, close_price,
-       |       ${graft.Parity.proundSql(
-                "CASE WHEN avg_loss = 0.0 THEN 100.0 " +
-                "ELSE 100.0 - 100.0 / (1.0 + avg_gain / avg_loss) END", 6)} AS rsi_14
+    s"""WITH ${ForexSql.closes1h(Nil)},
+       |${gainsSql(Nil)},
+       |${affineScanSql(Nil, "avg_gain", "g", "gain", Seq("close_price", "loss"), a, b)},
+       |${affineScanSql(Nil, "avg_loss", "avg_gain_res", "loss", Seq("close_price", "avg_gain"), a, b)}
+       |SELECT ${out(Nil)}, $rsiSelect
        |FROM avg_loss_res ORDER BY candle_start""".stripMargin
   }
 
   /** MACD via three composed affine scans (TechIndicators.macdChunked). */
-  val macdChunked: Q = (s, dir) =>
-    TechIndicators.macdChunked(candles1h(s, dir),
-        maxChunksHint = Some(chunksChecked(s, dir)))
+  val macdChunked: Q = (s, dir) => {
+    val closes = Single.closes1h(s, dir)
+    TechIndicators.macdChunked(closes,
+        maxChunksHint = Some(chunksChecked(dir, Nil, closes)))
       .orderBy(col("candle_start"))
+  }
 
   val macdChunkedSql: String = {
-    val w = 3600000000L * 64
     def ab(n: Int) = (
       s"CAST(${n - 1} AS DOUBLE) / CAST(${n + 1} AS DOUBLE)",
       s"CAST(2 AS DOUBLE) / CAST(${n + 1} AS DOUBLE)")
     val (af, bf) = ab(12)
     val (as_, bs) = ab(26)
     val (ag, bg) = ab(9)
-    s"""WITH ${ForexQueries.silverSql},
-       |$candles1hSql,
-       |${affineScanSql("ema_fast", "c", "close_price", Seq(), af, bf, w)},
-       |${affineScanSql("ema_slow", "ema_fast_res", "close_price", Seq("ema_fast"), as_, bs, w)},
+    s"""WITH ${ForexSql.closes1h(Nil)},
+       |${affineScanSql(Nil, "ema_fast", "c", "close_price", Nil, af, bf)},
+       |${affineScanSql(Nil, "ema_slow", "ema_fast_res", "close_price", Seq("ema_fast"), as_, bs)},
        |m AS (
        |  SELECT candle_start, close_price, ema_fast - ema_slow AS macd_raw
        |  FROM ema_slow_res),
-       |${affineScanSql("sig", "m", "macd_raw", Seq("close_price"), ag, bg, w)}
+       |${affineScanSql(Nil, "sig", "m", "macd_raw", Seq("close_price"), ag, bg)}
        |SELECT candle_start, close_price,
        |       ${graft.Parity.proundSql("macd_raw", 6)} AS macd,
        |       ${graft.Parity.proundSql("sig", 6)} AS macd_signal,
@@ -339,13 +298,14 @@ object IndicatorQueries {
     * per-chunk {A, c} prefix folds, flat seeded cross-chunk composition
     * (= MonoidScan's ≤64-chunk base case on the 12-chunk sf grids).
     */
-  val holtChunked: Q = (s, dir) =>
-    TechIndicators.holtChunked(candles1h(s, dir),
-        maxChunksHint = Some(chunksChecked(s, dir)))
+  val holtChunked: Q = (s, dir) => {
+    val closes = Single.closes1h(s, dir)
+    TechIndicators.holtChunked(closes,
+        maxChunksHint = Some(chunksChecked(dir, Nil, closes)))
       .orderBy(col("candle_start"))
+  }
 
   val holtChunkedSql: String = {
-    val w = 3600000000L * 64
     // NOTE: the per-row matrix-affine folds mirror as RECURSIVE CTEs, not
     // list_reduce: DuckDB 1.0's list_reduce mutates a STRUCT accumulator
     // field by field IN PLACE, so a lambda whose later fields read earlier
@@ -354,10 +314,9 @@ object IndicatorQueries {
     // affine oracles dodge this by layout ('b' never reads acc.a); the
     // recursion builds a fresh struct per row and replays the identical
     // left-to-right association as Spark's sequential aggregate().
-    s"""WITH RECURSIVE ${ForexQueries.silverSql},
-       |$candles1hSql,
+    s"""WITH RECURSIVE ${ForexSql.closes1h(Nil)},
        |hk AS (
-       |  SELECT candle_start, close_price, epoch_us(candle_start) // $w AS chunk_id
+       |  SELECT candle_start, close_price, epoch_us(candle_start) // $ChunkUs AS chunk_id
        |  FROM c),
        |he AS (
        |  SELECT chunk_id, candle_start, close_price,
@@ -407,21 +366,21 @@ object IndicatorQueries {
   }
 
   val queries: Map[String, Q] = Map(
-    "bollinger_1h" -> bollinger1h,
+    "bollinger_1h" -> bollinger(Single),
     "bollinger_chunked" -> bollingerChunked,
-    "rsi_1h" -> rsi1h,
-    "macd_1h" -> macd1h,
-    "ewma_chunked" -> ewmaChunked,
+    "rsi_1h" -> rsi(Single),
+    "macd_1h" -> macd(Single),
+    "ewma_chunked" -> ewmaChunked(Single),
     "rsi_chunked" -> rsiChunked,
     "macd_chunked" -> macdChunked,
     "holt_chunked" -> holtChunked)
 
   val oracleSql: Map[String, String] = Map(
-    "bollinger_1h" -> bollinger1hSql,
-    "bollinger_chunked" -> bollinger1hSql, // same semantics, chunked frame assembly
-    "rsi_1h" -> rsi1hSql,
-    "macd_1h" -> macd1hSql,
-    "ewma_chunked" -> ewmaChunkedSql,
+    "bollinger_1h" -> bollingerSql(Nil),
+    "bollinger_chunked" -> bollingerSql(Nil), // same semantics, chunked frame assembly
+    "rsi_1h" -> rsiSql(Nil),
+    "macd_1h" -> macdSql(Nil),
+    "ewma_chunked" -> ewmaChunkedSql(Nil),
     "rsi_chunked" -> rsiChunkedSql,
     "macd_chunked" -> macdChunkedSql,
     "holt_chunked" -> holtChunkedSql)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.forex.{ForexPipeline, Resample}
+import graft.forex.ForexPipeline
 
 /** Multi-symbol candle pipeline queries (VERDICT r4 item #1).
   *
@@ -18,403 +18,17 @@ import graft.forex.{ForexPipeline, Resample}
   * pinned at 7. No chunking machinery needed; chunked scans remain the
   * fallback for a single whale series.
   *
-  * `event_type` (5 distinct values) is the testdata's symbol proxy.
-  * Oracles mirror ForexQueries' CTE builders with `symbol` threaded
-  * through every stage.
+  * The keyed results run the single-series query bodies and oracles with
+  * the key ([[ForexQueries.Keyed]], ForexPipeline.SymbolKey); the queries
+  * defined here are the cross-symbol ones. `event_type` (5 distinct
+  * values) is the testdata's symbol proxy.
   */
 object MultiSymQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** DuckDB multi-symbol silver: typed projection + keyed dedup per
-    * (symbol, observed_at) — ForexPipeline.silverMulti's twin.
-    */
-  private[queries] val silverMultiSql: String =
-    """silver AS (
-      |  SELECT symbol, observed_at, open_price, high_price, low_price, close_price FROM (
-      |    SELECT event_type AS symbol, CAST(ts AS TIMESTAMP) AS observed_at,
-      |           value AS open_price, value AS high_price,
-      |           value AS low_price, value AS close_price,
-      |           row_number() OVER (PARTITION BY event_type, CAST(ts AS TIMESTAMP)
-      |                              ORDER BY event_id DESC) AS rn
-      |    FROM events)
-      |  WHERE rn = 1)""".stripMargin
-
-  private def fannedMultiSql(tfs: Seq[Resample.Timeframe]): String = {
-    val branches = tfs.map { tf =>
-      s"""  SELECT symbol, '${tf.name}' AS timeframe,
-         |         ${ForexQueries.bucketSql("observed_at", tf)} AS candle_start,
-         |         observed_at, open_price, high_price, low_price, close_price FROM silver""".stripMargin
-    }
-    "fanned AS (\n" + branches.mkString("\n  UNION ALL\n") + ")"
-  }
-
-  private val candlesMultiSql: String =
-    """candles AS (
-      |  SELECT symbol, timeframe, candle_start,
-      |         arg_min(open_price, observed_at) AS open_price,
-      |         max(high_price)                  AS high_price,
-      |         min(low_price)                   AS low_price,
-      |         arg_max(close_price, observed_at) AS close_price,
-      |         count(*)                         AS ticks_5m_count
-      |  FROM fanned GROUP BY 1, 2, 3)""".stripMargin
-
-  /** Indicators.sma over the (symbol, timeframe) partition key. */
-  private def smaMultiSql(n: Int): String = {
-    val frame = s"PARTITION BY symbol, timeframe ORDER BY candle_start ROWS BETWEEN ${n - 1} PRECEDING AND CURRENT ROW"
-    val avg = s"""CAST(sum(CAST(close_price AS DECIMAL(25,10))) OVER ($frame) AS DOUBLE)
-       |         / count(*) OVER ($frame)""".stripMargin
-    graft.Parity.proundSql(avg, 6) + s" AS sma_$n"
-  }
-
-  private def indicatorsMultiSql(tfs: Seq[Resample.Timeframe],
-      orderBy: String): String =
-    s"""WITH $silverMultiSql,
-       |${fannedMultiSql(tfs)},
-       |$candlesMultiSql
-       |SELECT md5(symbol || '|' || timeframe || '|' ||
-       |           strftime(candle_start, '%Y-%m-%d %H:%M:%S')) AS unique_id,
-       |       symbol, timeframe, candle_start, open_price, high_price, low_price,
-       |       close_price, ticks_5m_count,
-       |       close_price - lag(close_price) OVER
-       |         (PARTITION BY symbol, timeframe ORDER BY candle_start) AS price_diff,
-       |       ${smaMultiSql(20)},
-       |       ${smaMultiSql(50)}
-       |FROM candles
-       |ORDER BY $orderBy""".stripMargin
-
-  // ---------------------------------------------------------------- queries
-
-  /** Full multi-symbol gold model: 5 symbols × 7 timeframes, every window
-    * partitioned by (symbol, timeframe).
-    */
-  val fctTimeframesMultisym: Q = (s, dir) =>
-    ForexPipeline.goldMultiFrom(s, dir)
-      .orderBy(col("symbol"), col("timeframe"), col("candle_start"))
-
-  val fctTimeframesMultisymSql: String =
-    indicatorsMultiSql(Resample.timeframes, "symbol, timeframe, candle_start")
-
-  /** Indicator stage per symbol over 1h candles. */
-  val indicatorsMultisym: Q = (s, dir) => {
-    val key = Seq("symbol")
-    val silver = ForexPipeline.silverMultiFrom(s, dir)
-    val fanned = Resample.fanout(silver, Seq(Resample.byName("1h")), key)
-    graft.forex.Indicators.enrich(
-        graft.forex.Ohlc.candles(fanned, key), key)
-      .orderBy(col("symbol"), col("candle_start"))
-  }
-
-  val indicatorsMultisymSql: String =
-    indicatorsMultiSql(Seq(Resample.byName("1h")), "symbol, candle_start")
-
-  /** Per-symbol 1h close-price candles shared by the recursive-indicator
-    * queries below (Spark side).
-    */
-  private def candles1hMulti(s: SparkSession, dir: String) =
-    graft.forex.Ohlc.candles(
-        Resample.fanout(ForexPipeline.silverMultiFrom(s, dir),
-          Seq(Resample.byName("1h")), Seq("symbol")), Seq("symbol"))
-      .select(col("symbol"), col("candle_start"), col("close_price"))
-
-  /** Matching DuckDB CTE `c` (same shape as IndicatorQueries.candles1hSql
-    * with symbol threaded through) — the ONE definition every multisym
-    * indicator oracle composes, so a fix to the bucket or tie-break
-    * reaches all of them.
-    */
-  private val candles1hMultiSql: String =
-    s"""c AS (
-       |  SELECT symbol,
-       |         ${ForexQueries.bucketSql("observed_at", Resample.byName("1h"))} AS candle_start,
-       |         arg_max(close_price, observed_at) AS close_price
-       |  FROM silver GROUP BY 1, 2)""".stripMargin
-
-  /** Recursive EWMA per symbol — the prefix-fold recurrence of ewma_1h with
-    * the fold window partitioned by symbol: recursion parallelizes across
-    * symbols with no reassociation (each symbol's fold is the sequential
-    * association, so the oracle is the same fold per partition).
-    */
-  val ewmaMultisym: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("symbol")).orderBy(col("candle_start"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    candles1hMulti(s, dir)
-      .withColumn("px", collect_list(col("close_price")).over(w))
-      .select(col("symbol"), col("candle_start"), col("close_price"),
-        graft.Parity.pround(
-          expr("aggregate(slice(px, 2, size(px) - 1), px[0], (acc, x) -> 0.2 * x + 0.8 * acc)"),
-          6).as("ewma"))
-      .orderBy(col("symbol"), col("candle_start"))
-  }
-
-  val ewmaMultisymSql: String =
-    s"""WITH $silverMultiSql,
-       |$candles1hMultiSql,
-       |pre AS (
-       |  SELECT symbol, candle_start, close_price,
-       |         list(close_price) OVER (PARTITION BY symbol ORDER BY candle_start
-       |           ROWS UNBOUNDED PRECEDING) AS px
-       |  FROM c)
-       |SELECT symbol, candle_start, close_price,
-       |       ${graft.Parity.proundSql("list_reduce(px, (acc, x) -> 0.2 * x + 0.8 * acc)", 6)} AS ewma
-       |FROM pre ORDER BY symbol, candle_start""".stripMargin
-
-  /** RSI per symbol: the Wilder recursion's lag and prefix folds all
-    * partition by symbol — recursive indicators parallelize across the
-    * instrument universe with no reassociation (each symbol's fold is the
-    * sequential association).
-    */
-  val rsiMultisym: Q = (s, dir) =>
-    graft.forex.TechIndicators.rsi(candles1hMulti(s, dir), keyCols = Seq("symbol"))
-      .orderBy(col("symbol"), col("candle_start"))
-
-  val rsiMultisymSql: String =
-    s"""WITH $silverMultiSql,
-       |$candles1hMultiSql,
-       |d AS (
-       |  SELECT symbol, candle_start, close_price,
-       |         close_price - lag(close_price) OVER
-       |           (PARTITION BY symbol ORDER BY candle_start) AS diff
-       |  FROM c),
-       |g AS (
-       |  SELECT symbol, candle_start, close_price,
-       |         greatest(diff, 0.0) AS gain, greatest(0.0 - diff, 0.0) AS loss
-       |  FROM d WHERE diff IS NOT NULL),
-       |p AS (
-       |  SELECT symbol, candle_start, close_price,
-       |         list(gain) OVER pw AS gl, list(loss) OVER pw AS ll
-       |  FROM g WINDOW pw AS (PARTITION BY symbol ORDER BY candle_start
-       |    ROWS UNBOUNDED PRECEDING)),
-       |a AS (
-       |  SELECT symbol, candle_start, close_price,
-       |         list_reduce(gl, (acc, x) -> (acc * 13.0 + x) / 14.0) AS avg_gain,
-       |         list_reduce(ll, (acc, x) -> (acc * 13.0 + x) / 14.0) AS avg_loss
-       |  FROM p)
-       |SELECT symbol, candle_start, close_price,
-       |       ${graft.Parity.proundSql(
-               "CASE WHEN avg_loss = 0.0 THEN 100.0 " +
-               "ELSE 100.0 - 100.0 / (1.0 + avg_gain / avg_loss) END", 6)} AS rsi_14
-       |FROM a ORDER BY symbol, candle_start""".stripMargin
-
-  /** Bollinger bands per symbol: frame window partitioned by symbol. */
-  val bollingerMultisym: Q = (s, dir) =>
-    graft.forex.TechIndicators.bollinger(candles1hMulti(s, dir), keyCols = Seq("symbol"))
-      .orderBy(col("symbol"), col("candle_start"))
-
-  val bollingerMultisymSql: String =
-    s"""WITH $silverMultiSql,
-       |$candles1hMultiSql,
-       |p AS (
-       |  SELECT symbol, candle_start, close_price,
-       |         list(close_price) OVER (PARTITION BY symbol ORDER BY candle_start
-       |           ROWS BETWEEN 19 PRECEDING AND CURRENT ROW) AS px
-       |  FROM c),
-       |m AS (
-       |  SELECT symbol, candle_start, close_price, px,
-       |         list_reduce(px, (acc, x) -> acc + x) / CAST(len(px) AS DOUBLE) AS bb_mid
-       |  FROM p),
-       |sd AS (
-       |  SELECT symbol, candle_start, close_price, bb_mid,
-       |         sqrt(list_reduce(list_transform(px, x -> (x - bb_mid) * (x - bb_mid)),
-       |                          (acc, x) -> acc + x) / CAST(len(px) AS DOUBLE)) AS bb_sd
-       |  FROM m)
-       |SELECT symbol, candle_start, close_price,
-       |       ${graft.Parity.proundSql("bb_mid", 6)} AS bb_mid,
-       |       ${graft.Parity.proundSql("bb_mid + 2.0 * bb_sd", 6)} AS bb_upper,
-       |       ${graft.Parity.proundSql("bb_mid - 2.0 * bb_sd", 6)} AS bb_lower
-       |FROM sd ORDER BY symbol, candle_start""".stripMargin
-
-  /** MACD per symbol: both EMA folds and the signal fold partition by
-    * symbol.
-    */
-  val macdMultisym: Q = (s, dir) =>
-    graft.forex.TechIndicators.macd(candles1hMulti(s, dir), keyCols = Seq("symbol"))
-      .orderBy(col("symbol"), col("candle_start"))
-
-  val macdMultisymSql: String =
-    s"""WITH $silverMultiSql,
-       |$candles1hMultiSql,
-       |p AS (
-       |  SELECT symbol, candle_start, close_price,
-       |         list(close_price) OVER (PARTITION BY symbol ORDER BY candle_start
-       |           ROWS UNBOUNDED PRECEDING) AS px
-       |  FROM c),
-       |m AS (
-       |  SELECT symbol, candle_start, close_price,
-       |         list_reduce(px, (acc, x) -> acc + (2.0 / 13.0) * (x - acc))
-       |         - list_reduce(px, (acc, x) -> acc + (2.0 / 27.0) * (x - acc)) AS macd
-       |  FROM p),
-       |ms AS (
-       |  SELECT symbol, candle_start, close_price, macd,
-       |         list(macd) OVER (PARTITION BY symbol ORDER BY candle_start
-       |           ROWS UNBOUNDED PRECEDING) AS ml
-       |  FROM m),
-       |sg AS (
-       |  SELECT symbol, candle_start, close_price, macd,
-       |         list_reduce(ml, (acc, x) -> acc + (2.0 / 10.0) * (x - acc)) AS signal
-       |  FROM ms)
-       |SELECT symbol, candle_start, close_price,
-       |       ${graft.Parity.proundSql("macd", 6)} AS macd,
-       |       ${graft.Parity.proundSql("signal", 6)} AS macd_signal,
-       |       ${graft.Parity.proundSql("macd - signal", 6)} AS macd_hist
-       |FROM sg ORDER BY symbol, candle_start""".stripMargin
-
-  /** Per-symbol gap repair: each symbol gets its own dense hourly grid
-    * (span = that symbol's [min, max]) and its own forward fill — grid
-    * generation is one `sequence` row per symbol (never a cross join) and
-    * the fill window partitions by symbol, the exact shape gap_fill's
-    * scaladoc promises at 100 TB.
-    */
-  val gapFillMultisym: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
-    val candles = candles1hMulti(s, dir)
-      .filter(expr("(unix_micros(candle_start) DIV 3600000000L) % 5 != 3"))
-    val grid = candles
-      .groupBy(col("symbol"))
-      .agg(min(col("candle_start")).as("lo"), max(col("candle_start")).as("hi"))
-      .select(col("symbol"),
-        explode(expr("sequence(lo, hi, interval 1 hour)")).as("candle_start"))
-    val w = Window.partitionBy(col("symbol")).orderBy(col("candle_start"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    grid.join(candles, Seq("symbol", "candle_start"), "left")
-      .withColumn("close_filled", last(col("close_price"), ignoreNulls = true).over(w))
-      .select(col("symbol"), col("candle_start"), col("close_filled"),
-        col("close_price").isNull.cast("long").as("is_filled"))
-      .orderBy(col("symbol"), col("candle_start"))
-  }
-
-  val gapFillMultisymSql: String =
-    s"""WITH $silverMultiSql,
-       |$candles1hMultiSql,
-       |cf AS (
-       |  SELECT * FROM c
-       |  WHERE (epoch_us(candle_start) // 3600000000) % 5 != 3),
-       |spans AS (
-       |  SELECT symbol, min(candle_start) AS lo, max(candle_start) AS hi
-       |  FROM cf GROUP BY 1),
-       |grid AS (
-       |  SELECT symbol, unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS candle_start
-       |  FROM spans),
-       |j AS (
-       |  SELECT grid.symbol, grid.candle_start, cf.close_price
-       |  FROM grid LEFT JOIN cf USING (symbol, candle_start))
-       |SELECT symbol, candle_start,
-       |       last_value(close_price IGNORE NULLS) OVER (PARTITION BY symbol
-       |         ORDER BY candle_start ROWS UNBOUNDED PRECEDING) AS close_filled,
-       |       CAST(close_price IS NULL AS BIGINT) AS is_filled
-       |FROM j ORDER BY symbol, candle_start""".stripMargin
-
-  /** Chunk-parallel EWMA per symbol — chunking COMPOSED with the series
-    * key, the whale-symbol case: one instrument's series too long for a
-    * single sorted task splits into time chunks WITHIN its symbol
-    * partition, so parallelism is |symbols| × |chunks| and no task ever
-    * sees a whole series. Same reassociated affine-scan arithmetic as
-    * ewma_chunked, so it carries its own chunked-association oracle with
-    * every window partitioned by symbol and a per-symbol seed.
-    */
-  /** Max distinct 64-candle chunk count over symbols, once per (JVM, dir):
-    * the guard + scan hint of IndicatorQueries.chunksChecked, keyed per
-    * symbol (ADVICE r13 #4 — the chunked oracle mirrors the flat base
-    * case, exact only at ≤64 chunks per series).
-    */
-  private val chunkCountsMulti =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def chunksCheckedMulti(s: SparkSession, dir: String): Long = {
-    val n: Long = chunkCountsMulti.computeIfAbsent(dir, _ => {
-      val r = candles1hMulti(s, dir)
-        .select(col("symbol"),
-          expr(s"unix_micros(candle_start) DIV ${3600000000L * 64}L").as("ck"))
-        .distinct().groupBy(col("symbol")).count()
-        .agg(max(col("count"))).head()
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    })
-    if (n > 64)
-      throw new IllegalStateException(
-        s"ewma_chunked_multisym oracle depth exceeded: $n chunks > fanout " +
-          "64 for some symbol — the oracle mirrors MonoidScan's flat base " +
-          "case; longer histories take the documented fanout-64 " +
-          "hierarchical association (one more CTE level per 64x)")
-    n
-  }
-
-  val ewmaChunkedMultisym: Q = (s, dir) =>
-    graft.forex.TechIndicators.ewmaChunked(
-        candles1hMulti(s, dir), keyCols = Seq("symbol"),
-        maxChunksHint = Some(chunksCheckedMulti(s, dir)))
-      .orderBy(col("symbol"), col("candle_start"))
-
-  val ewmaChunkedMultisymSql: String = {
-    val w = 3600000000L * 64
-    s"""WITH $silverMultiSql,
-       |$candles1hMultiSql,
-       |ck AS (
-       |  SELECT symbol, candle_start, close_price,
-       |         epoch_us(candle_start) // $w AS chunk_id
-       |  FROM c),
-       |p AS (
-       |  SELECT *, list(close_price) OVER (PARTITION BY symbol, chunk_id
-       |    ORDER BY candle_start ROWS UNBOUNDED PRECEDING) AS px
-       |  FROM ck),
-       |ab AS (
-       |  SELECT symbol, candle_start, close_price, chunk_id,
-       |         list_reduce(
-       |           list_transform(px, x -> {'a': CAST(0.8 AS DOUBLE), 'b': 0.2 * x}),
-       |           (acc, f) -> {'a': f.a * acc.a, 'b': f.a * acc.b + f.b}) AS abf
-       |  FROM p),
-       |lastc AS (
-       |  SELECT symbol, chunk_id, arg_max(abf, candle_start) AS tot
-       |  FROM ab GROUP BY 1, 2),
-       |firsts AS (
-       |  SELECT symbol, arg_min(close_price, candle_start) AS first_close
-       |  FROM c GROUP BY 1),
-       |pv AS (
-       |  SELECT symbol, chunk_id,
-       |         coalesce(list(tot) OVER (PARTITION BY symbol ORDER BY chunk_id
-       |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), []) AS prev
-       |  FROM lastc),
-       |si AS (
-       |  SELECT pv.symbol, pv.chunk_id,
-       |         list_reduce(
-       |           list_prepend({'a': CAST(1.0 AS DOUBLE), 'b': fc.first_close}, prev),
-       |           (acc, f) -> {'a': CAST(1.0 AS DOUBLE), 'b': f.a * acc.b + f.b}).b AS s_in
-       |  FROM pv JOIN firsts fc USING (symbol))
-       |SELECT ab.symbol, ab.candle_start, ab.close_price,
-       |       ${graft.Parity.proundSql("ab.abf.a * si.s_in + ab.abf.b", 6)} AS ewma
-       |FROM ab JOIN si ON ab.symbol = si.symbol AND ab.chunk_id = si.chunk_id
-       |ORDER BY ab.symbol, ab.candle_start""".stripMargin
-  }
-
-  /** STREAMING multi-symbol candles at the gate: the silver multi-symbol
-    * ticks flow as a file stream through the (symbol, window) grouped OHLC —
-    * streaming state and shuffle key on the instrument universe, the same
-    * parallelism story as the batch multisym pipeline — and the bounded
-    * complete-mode run must equal the batch per-symbol candle query
-    * bit-for-bit.
-    */
-  val streamOhlcMultisym: Q = (s, dir) => {
-    val base = PipelineQueries.ensureFixture(s, "stream_ohlc_multisym", dir) { b =>
-      ForexPipeline.silverMultiFrom(s, dir)
-        .coalesce(8) // bounded source file count for the stream listing
-        .write.mode("overwrite").parquet(b)
-    }
-    PipelineQueries.runBoundedStream(s, "graft_stream_ohlc_multisym",
-      () => graft.streaming.ForexStream
-        .candlesComplete(graft.streaming.ForexStream.ticksMulti(s, base),
-          Resample.byName("1h"), keyCols = Seq("symbol")),
-      "complete").orderBy(col("symbol"), col("candle_start"))
-  }
-
-  val streamOhlcMultisymSql: String =
-    s"""WITH $silverMultiSql
-       |SELECT symbol, '1h' AS timeframe,
-       |       ${ForexQueries.bucketSql("observed_at", Resample.byName("1h"))} AS candle_start,
-       |       arg_min(open_price, observed_at)  AS open_price,
-       |       max(high_price)                   AS high_price,
-       |       min(low_price)                    AS low_price,
-       |       arg_max(close_price, observed_at) AS close_price,
-       |       count(*)                          AS ticks_5m_count
-       |FROM silver GROUP BY 1, 2, 3
-       |ORDER BY symbol, candle_start""".stripMargin
+  import ForexQueries.Keyed
+  private val Key = ForexPipeline.SymbolKey
 
   /** STREAMING stateful EWMA: the per-symbol recurrence maintained as
     * custom flatMapGroupsWithState state (O(1) per symbol — last ts +
@@ -425,7 +39,7 @@ object MultiSymQueries {
     */
   val streamEwma: Q = (s, dir) => {
     val base = PipelineQueries.ensureFixture(s, "stream_ewma", dir) { b =>
-      candles1hMulti(s, dir)
+      Keyed.closes1h(s, dir)
         .coalesce(4) // bounded source file count for the stream listing
         .write.mode("overwrite").parquet(b)
     }
@@ -473,7 +87,7 @@ object MultiSymQueries {
     import org.apache.spark.sql.types.DecimalType
     def sx(c: org.apache.spark.sql.Column) =
       sum(c.cast(DecimalType(30, 10))).cast("double")
-    val c = candles1hMulti(s, dir)
+    val c = Keyed.closes1h(s, dir)
     val a = c.select(col("symbol").as("symbol_a"), col("candle_start"),
       col("close_price").as("x"))
     val b = c.select(col("symbol").as("symbol_b"), col("candle_start"),
@@ -499,8 +113,7 @@ object MultiSymQueries {
 
   val priceCorrelationSql: String = {
     def sx(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(30,10))) AS DOUBLE)"
-    s"""WITH $silverMultiSql,
-       |$candles1hMultiSql,
+    s"""WITH ${ForexSql.closes1h(Key)},
        |j AS (
        |  SELECT a.symbol AS symbol_a, b.symbol AS symbol_b,
        |         a.close_price AS x, b.close_price AS y
@@ -735,29 +348,29 @@ object MultiSymQueries {
     "max_drawdown" -> maxDrawdown,
     "price_correlation" -> priceCorrelation,
     "stream_ewma" -> streamEwma,
-    "fct_timeframes_multisym" -> fctTimeframesMultisym,
-    "indicators_multisym" -> indicatorsMultisym,
-    "ewma_multisym" -> ewmaMultisym,
-    "rsi_multisym" -> rsiMultisym,
-    "bollinger_multisym" -> bollingerMultisym,
-    "macd_multisym" -> macdMultisym,
-    "gap_fill_multisym" -> gapFillMultisym,
-    "ewma_chunked_multisym" -> ewmaChunkedMultisym,
-    "stream_ohlc_multisym" -> streamOhlcMultisym)
+    "fct_timeframes_multisym" -> ForexQueries.fctTimeframesOf(Key),
+    "indicators_multisym" -> ForexQueries.indicators(Keyed),
+    "ewma_multisym" -> ForexQueries.ewma(Keyed),
+    "rsi_multisym" -> IndicatorQueries.rsi(Keyed),
+    "bollinger_multisym" -> IndicatorQueries.bollinger(Keyed),
+    "macd_multisym" -> IndicatorQueries.macd(Keyed),
+    "gap_fill_multisym" -> ForexQueries.gapFill(Key),
+    "ewma_chunked_multisym" -> IndicatorQueries.ewmaChunked(Keyed),
+    "stream_ohlc_multisym" -> PipelineQueries.streamOhlc("stream_ohlc_multisym", Key))
 
   val oracleSql: Map[String, String] = Map(
     "acf_hourly" -> acfHourlySql,
     "ols_trend" -> olsTrendSql,
     "max_drawdown" -> maxDrawdownSql,
     "price_correlation" -> priceCorrelationSql,
-    "fct_timeframes_multisym" -> fctTimeframesMultisymSql,
-    "indicators_multisym" -> indicatorsMultisymSql,
-    "ewma_multisym" -> ewmaMultisymSql,
-    "stream_ewma" -> ewmaMultisymSql, // stateful stream == batch prefix fold
-    "rsi_multisym" -> rsiMultisymSql,
-    "bollinger_multisym" -> bollingerMultisymSql,
-    "macd_multisym" -> macdMultisymSql,
-    "gap_fill_multisym" -> gapFillMultisymSql,
-    "ewma_chunked_multisym" -> ewmaChunkedMultisymSql,
-    "stream_ohlc_multisym" -> streamOhlcMultisymSql)
+    "fct_timeframes_multisym" -> ForexQueries.fctTimeframesSql(Key),
+    "indicators_multisym" -> ForexQueries.indicatorsSql(Key),
+    "ewma_multisym" -> ForexQueries.ewmaSql(Key),
+    "stream_ewma" -> ForexQueries.ewmaSql(Key), // stateful stream == batch prefix fold
+    "rsi_multisym" -> IndicatorQueries.rsiSql(Key),
+    "bollinger_multisym" -> IndicatorQueries.bollingerSql(Key),
+    "macd_multisym" -> IndicatorQueries.macdSql(Key),
+    "gap_fill_multisym" -> ForexQueries.gapFillSql(Key),
+    "ewma_chunked_multisym" -> IndicatorQueries.ewmaChunkedSql(Key),
+    "stream_ohlc_multisym" -> ForexQueries.ohlc1hSql(Key))
 }

@@ -73,13 +73,15 @@ object PipelineQueries {
     base
   }
 
-  /** Shared silver-tick stream source for `stream_ohlc_1h` and
-    * `stream_to_store` — one builder so the fixture definition exists
-    * exactly once (both queries must consume the identical source).
+  /** Silver-tick stream source fixture `name` of every series under
+    * `key` — one builder so the fixture definition exists exactly once
+    * (`stream_ohlc_1h` and `stream_to_store` must consume the identical
+    * source).
     */
-  private def silverStreamSource(s: SparkSession, dir: String): String =
-    ensureFixture(s, "stream_ohlc_1h", dir) { b =>
-      graft.forex.ForexPipeline.silverFrom(s, dir)
+  private def silverStreamSource(s: SparkSession, dir: String, name: String,
+      key: Seq[String]): String =
+    ensureFixture(s, name, dir) { b =>
+      graft.forex.ForexPipeline.silverFrom(s, dir, key)
         .coalesce(8) // bounded source file count for the stream listing
         .write.mode("overwrite").parquet(b)
     }
@@ -90,19 +92,11 @@ object PipelineQueries {
     * partition column.
     */
   private val goldTableSql: String =
-    s"""WITH ${ForexQueries.silverSql},
-       |${ForexQueries.fannedSql},
-       |${ForexQueries.candlesSql}
-       |SELECT md5(timeframe || '|' || strftime(candle_start, '%Y-%m-%d %H:%M:%S')) AS unique_id,
-       |       timeframe, candle_start, open_price, high_price, low_price, close_price,
-       |       ticks_5m_count,
-       |       close_price - lag(close_price) OVER
-       |         (PARTITION BY timeframe ORDER BY candle_start) AS price_diff,
-       |       ${ForexQueries.smaSql(20)},
-       |       ${ForexQueries.smaSql(50)},
+    s"""WITH ${ForexSql.gold(Nil, graft.forex.Resample.timeframes)}
+       |SELECT *,
        |       TIMESTAMP '1970-01-01 00:00:00' AS dbt_updated_at,
        |       CAST(candle_start AS DATE) AS p_date
-       |FROM candles
+       |FROM gold
        |ORDER BY timeframe, candle_start""".stripMargin
 
   private def readGold(s: SparkSession, warehouse: String): DataFrame =
@@ -222,20 +216,23 @@ object PipelineQueries {
       |FROM raw
       |ORDER BY datetime, open""".stripMargin
 
-  /** The STREAMING engine against the batch oracle: silver ticks flow
-    * through `readStream` → tumbling `window()` OHLC → complete-mode memory
-    * sink (`Trigger.AvailableNow`), and the final table must equal the batch
-    * 1h-candle query bit-for-bit — it shares ohlc_1h's DuckDB oracle.
-    * Complete mode emits every window (nothing withheld past the watermark),
-    * which is what makes a bounded streaming run exactly comparable.
+  /** The STREAMING engine against the batch oracle: silver ticks of every
+    * series under `key` flow through `readStream` → tumbling `window()`
+    * OHLC → complete-mode memory sink (`Trigger.AvailableNow`), and the
+    * final table must equal the batch 1h-candle query bit-for-bit — it
+    * shares ohlc_1h's DuckDB oracle. With a key, streaming state and
+    * shuffle key on (symbol, window), the same parallelism story as the
+    * batch keyed pipeline. Complete mode emits every window (nothing
+    * withheld past the watermark), which is what makes a bounded streaming
+    * run exactly comparable. `name` is the query's and its fixture's name.
     */
-  val streamOhlc1h: Q = (s, dir) => {
-    val base = silverStreamSource(s, dir)
-    runBoundedStream(s, "graft_stream_ohlc_1h",
+  def streamOhlc(name: String, key: Seq[String]): Q = (s, dir) => {
+    val base = silverStreamSource(s, dir, name, key)
+    ForexQueries.ordered(runBoundedStream(s, s"graft_$name",
       () => graft.streaming.ForexStream
-        .candlesComplete(graft.streaming.ForexStream.ticks(s, base),
-          graft.forex.Resample.byName("1h")),
-      "complete").orderBy(col("candle_start"))
+        .candlesComplete(graft.streaming.ForexStream.ticks(s, base, key),
+          graft.forex.Resample.byName("1h"), keyCols = key),
+      "complete"), key, "candle_start")
   }
 
   /** STREAM-STREAM interval join at the gate: purchases and clicks flow as
@@ -374,7 +371,7 @@ object PipelineQueries {
     * contents argument, verified against the oracle instead of asserted.
     */
   val streamToStore: Q = (s, dir) => {
-    val base = silverStreamSource(s, dir)
+    val base = silverStreamSource(s, dir, "stream_ohlc_1h", Nil)
     val store = scratch(s, "stream_to_store_tbl")
     awaitBounded(s, "stream_to_store") {
       graft.streaming.ForexStream.writeToStore(
@@ -407,13 +404,7 @@ object PipelineQueries {
   val qualityReportSql: String = {
     val tfs = Seq("5m", "15m", "30m", "1h", "4h", "12h", "24h")
       .map(t => s"'$t'").mkString(", ")
-    s"""WITH ${ForexQueries.silverSql},
-       |${ForexQueries.fannedSql},
-       |${ForexQueries.candlesSql},
-       |gold AS (
-       |  SELECT md5(timeframe || '|' || strftime(candle_start, '%Y-%m-%d %H:%M:%S')) AS unique_id,
-       |         timeframe, candle_start, open_price, high_price, low_price, close_price
-       |  FROM candles)
+    s"""WITH ${ForexSql.gold(Nil, graft.forex.Resample.timeframes)}
        |SELECT 'accepted_values(timeframe)' AS check_name,
        |       CAST(sum(CASE WHEN timeframe IN ($tfs) OR timeframe IS NULL THEN 0 ELSE 1 END) AS BIGINT) AS violations FROM gold
        |UNION ALL
@@ -464,7 +455,7 @@ object PipelineQueries {
   }
 
   val compactRoundtripSql: String =
-    s"""WITH ${ForexQueries.silverSql}
+    s"""WITH ${ForexSql.silver(Nil)}
        |SELECT * FROM silver
        |WHERE epoch_us(observed_at) <
        |      (SELECT min(epoch_us(CAST(ts AS TIMESTAMP))) + 10 * 86400000000 FROM events)
@@ -539,7 +530,7 @@ object PipelineQueries {
     * range(0,4) on the slide grid).
     */
   val streamSlidingOhlc: Q = (s, dir) => {
-    val base = silverStreamSource(s, dir)
+    val base = silverStreamSource(s, dir, "stream_ohlc_1h", Nil)
     runBoundedStream(s, "graft_stream_sliding_ohlc",
       () => graft.streaming.ForexStream.slidingCandles(
         graft.streaming.ForexStream.ticks(s, base)),
@@ -547,18 +538,14 @@ object PipelineQueries {
   }
 
   val streamSlidingOhlcSql: String =
-    s"""WITH ${ForexQueries.silverSql},
+    s"""WITH ${ForexSql.silver(Nil)},
        |e AS (
        |  SELECT observed_at, open_price, high_price, low_price, close_price,
        |         make_timestamp((epoch_us(observed_at) - (epoch_us(observed_at) % 900000000))
        |                        - k * 900000000) AS window_start
        |  FROM silver CROSS JOIN range(0, 4) r(k))
        |SELECT window_start,
-       |       arg_min(open_price, observed_at) AS open_price,
-       |       max(high_price)                  AS high_price,
-       |       min(low_price)                   AS low_price,
-       |       arg_max(close_price, observed_at) AS close_price,
-       |       count(*)                         AS ticks_5m_count
+       |       ${ForexSql.ohlcAggs}
        |FROM e GROUP BY 1 ORDER BY window_start""".stripMargin
 
   /** STREAMING dedup at the gate: raw event timestamps (with duplicates)
@@ -1236,7 +1223,7 @@ object PipelineQueries {
     "staging_view" -> stagingView,
     "backfill_day" -> backfillDay,
     "ingest_bronze" -> ingestBronze,
-    "stream_ohlc_1h" -> streamOhlc1h,
+    "stream_ohlc_1h" -> streamOhlc("stream_ohlc_1h", Nil),
     "stream_join_attribution" -> streamJoinAttribution,
     "stream_attribution_outer" -> streamAttributionOuter,
     "stream_to_store" -> streamToStore,
@@ -1262,10 +1249,10 @@ object PipelineQueries {
     "staging_view" -> goldTableSql,
     "backfill_day" -> goldTableSql,
     "ingest_bronze" -> ingestBronzeSql,
-    "stream_ohlc_1h" -> ForexQueries.ohlc1hSql, // streaming vs the batch oracle
+    "stream_ohlc_1h" -> ForexQueries.ohlc1hSql(Nil), // streaming vs the batch oracle
     "stream_join_attribution" -> streamJoinAttributionSql, // streaming vs batch join
     "stream_attribution_outer" -> streamAttributionOuterSql, // watermark-driven null emission vs batch LEFT JOIN
-    "stream_to_store" -> ForexQueries.ohlc1hSql, // stream->MERGE store vs batch candles
+    "stream_to_store" -> ForexQueries.ohlc1hSql(Nil), // stream->MERGE store vs batch candles
     "quality_report" -> qualityReportSql,
     "compact_roundtrip" -> compactRoundtripSql)
 }

@@ -61,16 +61,7 @@ object StoreQueries {
     target
   }
 
-  private val silverSql: String =
-    """silver AS (
-      |  SELECT observed_at, open_price, high_price, low_price, close_price FROM (
-      |    SELECT CAST(ts AS TIMESTAMP) AS observed_at,
-      |           value AS open_price, value AS high_price,
-      |           value AS low_price, value AS close_price,
-      |           row_number() OVER (PARTITION BY CAST(ts AS TIMESTAMP)
-      |                              ORDER BY event_id DESC) AS rn
-      |    FROM events)
-      |  WHERE rn = 1)""".stripMargin
+  private val silverSql: String = ForexSql.silver(Nil)
 
   val mergeUpsert: Q = (s, dir) => {
     // silver feeds THREE subtrees (the bounds agg and both batches) — each
@@ -132,7 +123,7 @@ object StoreQueries {
     */
   val mergeUpsertMultisym: Q = (s, dir) => {
     val silver = graft.Scratch.table(
-      ForexPipeline.silverMultiFrom(s, dir), "merge-silver-multi")
+      ForexPipeline.silverFrom(s, dir, ForexPipeline.SymbolKey), "merge-silver-multi")
     val target = storeRoot(s, "merge_upsert_multisym")
     val p = new org.apache.hadoop.fs.Path(target)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -156,7 +147,7 @@ object StoreQueries {
   }
 
   val mergeUpsertMultisymSql: String =
-    s"""WITH ${MultiSymQueries.silverMultiSql},
+    s"""WITH ${ForexSql.silver(ForexPipeline.SymbolKey)},
        |bounds AS (
        |  SELECT min(epoch_us(observed_at)) AS mn, max(epoch_us(observed_at)) AS mx
        |  FROM silver),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 import org.apache.spark.sql.types._
 
-import graft.forex.Resample
+import graft.forex.{Ohlc, Resample}
 import graft.store.IncrementalStore
 
 /** Structured Streaming realization of the reference pipeline.
@@ -34,18 +34,12 @@ object ForexStream {
     StructField("low_price", DoubleType),
     StructField("close_price", DoubleType)))
 
-  /** File-stream of silver ticks from a directory of parquet files. */
-  def ticks(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(tickSchema).parquet(dir)
-
-  /** Multi-symbol silver ticks: the same stream with the instrument key
-    * (the reference stamps `symbol` on every tick, extract_forex.py:138).
+  /** File-stream of silver ticks from a directory of parquet files, with
+    * the series key columns (`symbol`, ForexPipeline.SymbolKey) first.
     */
-  val multiTickSchema: StructType =
-    StructType(StructField("symbol", StringType) +: tickSchema.fields.toSeq)
-
-  def ticksMulti(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(multiTickSchema).parquet(dir)
+  def ticks(spark: SparkSession, dir: String, keyCols: Seq[String] = Nil): DataFrame =
+    spark.readStream.schema(StructType(
+      keyCols.map(StructField(_, StringType)) ++ tickSchema.fields)).parquet(dir)
 
   /** `window()` parameters reproducing Resample.bucket's grid: width =
     * timeframe width, startTime = anchor shift so boundaries land on the
@@ -61,12 +55,7 @@ object ForexStream {
   private def ohlcOverWindow(grouped: org.apache.spark.sql.RelationalGroupedDataset,
       tf: Resample.Timeframe, keyCols: Seq[String] = Nil): DataFrame =
     grouped
-      .agg(
-        min_by(col("open_price"), col("observed_at")).as("open_price"),
-        max(col("high_price")).as("high_price"),
-        min(col("low_price")).as("low_price"),
-        max_by(col("close_price"), col("observed_at")).as("close_price"),
-        count(lit(1)).as("ticks_5m_count"))
+      .agg(Ohlc.tickAggs.head, Ohlc.tickAggs.tail: _*)
       .select(keyCols.map(col) ++ Seq(
         lit(tf.name).as("timeframe"), col("w.start").as("candle_start"),
         col("open_price"), col("high_price"), col("low_price"),
@@ -110,12 +99,7 @@ object ForexStream {
       slide: String = "15 minutes"): DataFrame =
     ticksStream
       .groupBy(window(col("observed_at"), width, slide).as("w"))
-      .agg(
-        min_by(col("open_price"), col("observed_at")).as("open_price"),
-        max(col("high_price")).as("high_price"),
-        min(col("low_price")).as("low_price"),
-        max_by(col("close_price"), col("observed_at")).as("close_price"),
-        count(lit(1)).as("ticks_5m_count"))
+      .agg(Ohlc.tickAggs.head, Ohlc.tickAggs.tail: _*)
       .select(col("w.start").as("window_start"), col("open_price"),
         col("high_price"), col("low_price"), col("close_price"),
         col("ticks_5m_count"))

@@ -13,8 +13,9 @@ import graft.{SparkSpec, Tables}
 class MultiSymbolSpec extends SparkSpec {
 
   private lazy val events = Tables.events(spark, sf0001).cache()
-  private lazy val goldMulti = ForexPipeline.goldMulti(
-    ForexPipeline.silverMulti(events)).cache()
+  private val key = ForexPipeline.SymbolKey
+  private lazy val goldMulti = ForexPipeline.gold(
+    ForexPipeline.silver(events, key), key).cache()
 
   private val compareCols = Seq("timeframe", "candle_start", "open_price",
     "high_price", "low_price", "close_price", "ticks_5m_count",
@@ -37,22 +38,29 @@ class MultiSymbolSpec extends SparkSpec {
 
   test("keyed recursive indicators: per-symbol slice equals single-series run") {
     val candles = Ohlc.candles(
-        Resample.fanout(ForexPipeline.silverMulti(events),
-          Seq(Resample.byName("1h")), Seq("symbol")), Seq("symbol"))
+        Resample.fanout(ForexPipeline.silver(events, key),
+          Seq(Resample.byName("1h")), key), key)
       .select(col("symbol"), col("candle_start"), col("close_price")).cache()
     val symbols = events.select("event_type").distinct()
       .collect().map(_.getString(0)).sorted
+    // gap fill over a thinned series, so the grid has slots to fill
+    val thinned =
+      candles.filter(expr("(unix_micros(candle_start) DIV 3600000000L) % 5 != 3"))
     val keyed = Seq(
-      TechIndicators.rsi(candles, keyCols = Seq("symbol")),
-      TechIndicators.bollinger(candles, keyCols = Seq("symbol")),
-      TechIndicators.macd(candles, keyCols = Seq("symbol"))).map(_.cache())
+      TechIndicators.rsi(candles, keyCols = key),
+      TechIndicators.bollinger(candles, keyCols = key),
+      TechIndicators.macd(candles, keyCols = key),
+      TechIndicators.ewma(candles, keyCols = key),
+      TechIndicators.gapFill(thinned, keyCols = key)).map(_.cache())
     symbols.foreach { sym =>
       val solo = candles.filter(col("symbol") === sym).drop("symbol")
       val single = Seq(
         TechIndicators.rsi(solo),
         TechIndicators.bollinger(solo),
-        TechIndicators.macd(solo))
-      keyed.zip(single).zip(Seq("rsi", "bollinger", "macd")).foreach {
+        TechIndicators.macd(solo),
+        TechIndicators.ewma(solo),
+        TechIndicators.gapFill(thinned.filter(col("symbol") === sym).drop("symbol")))
+      keyed.zip(single).zip(Seq("rsi", "bollinger", "macd", "ewma", "gap fill")).foreach {
         case ((m, s0), name) =>
           val slice = m.filter(col("symbol") === sym).drop("symbol")
           assert(slice.exceptAll(s0).isEmpty && s0.exceptAll(slice).isEmpty,
@@ -63,7 +71,7 @@ class MultiSymbolSpec extends SparkSpec {
     // slice is bit-identical to the single-series chunked scan (same
     // chunked association per symbol, nothing leaks across partitions)
     val chunkedKeyed =
-      TechIndicators.ewmaChunked(candles, keyCols = Seq("symbol")).cache()
+      TechIndicators.ewmaChunked(candles, keyCols = key).cache()
     symbols.foreach { sym =>
       val solo = TechIndicators.ewmaChunked(
         candles.filter(col("symbol") === sym).drop("symbol"))
