@@ -63,6 +63,15 @@ object IndicatorQueries {
     n
   }
 
+  /** A chunked scan over the 1h closes of `sr`, handed their verified
+    * chunk count as its `maxChunksHint`.
+    */
+  private def chunked(sr: Series)(scan: (DataFrame, Option[Long]) => DataFrame): Q =
+    (s, dir) => {
+      val closes = sr.closes1h(s, dir)
+      ordered(scan(closes, Some(chunksChecked(dir, sr.key, closes))), sr.key, "candle_start")
+    }
+
   /** The indicator output columns every oracle here selects. */
   private def out(key: Seq[String]): String = by(key, "candle_start", "close_price")
 
@@ -168,12 +177,8 @@ object IndicatorQueries {
     * the key (the whale-symbol case: one instrument's series splits into
     * time chunks WITHIN its partition, so no task ever sees a whole series).
     */
-  def ewmaChunked(sr: Series): Q = (s, dir) => {
-    val closes = sr.closes1h(s, dir)
-    ordered(TechIndicators.ewmaChunked(closes, keyCols = sr.key,
-        maxChunksHint = Some(chunksChecked(dir, sr.key, closes))),
-      sr.key, "candle_start")
-  }
+  def ewmaChunked(sr: Series): Q = chunked(sr)((c, hint) =>
+    TechIndicators.ewmaChunked(c, keyCols = sr.key, maxChunksHint = hint))
 
   /** Oracle in the SAME chunked association as the engine (see
     * TechIndicators.ewmaChunked scaladoc).
@@ -246,12 +251,8 @@ object IndicatorQueries {
     * the scale-out form of rsi_1h, oracle-checked in its own chunked
     * association.
     */
-  val rsiChunked: Q = (s, dir) => {
-    val closes = Single.closes1h(s, dir)
-    TechIndicators.rsiChunked(closes,
-        maxChunksHint = Some(chunksChecked(dir, Nil, closes)))
-      .orderBy(col("candle_start"))
-  }
+  val rsiChunked: Q = chunked(Single)((c, hint) =>
+    TechIndicators.rsiChunked(c, maxChunksHint = hint))
 
   val rsiChunkedSql: String = {
     val a = "CAST(13 AS DOUBLE) / CAST(14 AS DOUBLE)"
@@ -265,12 +266,8 @@ object IndicatorQueries {
   }
 
   /** MACD via three composed affine scans (TechIndicators.macdChunked). */
-  val macdChunked: Q = (s, dir) => {
-    val closes = Single.closes1h(s, dir)
-    TechIndicators.macdChunked(closes,
-        maxChunksHint = Some(chunksChecked(dir, Nil, closes)))
-      .orderBy(col("candle_start"))
-  }
+  val macdChunked: Q = chunked(Single)((c, hint) =>
+    TechIndicators.macdChunked(c, maxChunksHint = hint))
 
   val macdChunkedSql: String = {
     def ab(n: Int) = (
@@ -298,12 +295,8 @@ object IndicatorQueries {
     * per-chunk {A, c} prefix folds, flat seeded cross-chunk composition
     * (= MonoidScan's ≤64-chunk base case on the 12-chunk sf grids).
     */
-  val holtChunked: Q = (s, dir) => {
-    val closes = Single.closes1h(s, dir)
-    TechIndicators.holtChunked(closes,
-        maxChunksHint = Some(chunksChecked(dir, Nil, closes)))
-      .orderBy(col("candle_start"))
-  }
+  val holtChunked: Q = chunked(Single)((c, hint) =>
+    TechIndicators.holtChunked(c, maxChunksHint = hint))
 
   val holtChunkedSql: String = {
     // NOTE: the per-row matrix-affine folds mirror as RECURSIVE CTEs, not
