@@ -80,7 +80,7 @@ object ForexQueries {
   def fctTimeframesOf(key: Seq[String]): Q = (s, dir) =>
     ordered(ForexPipeline.goldFrom(s, dir, key), key, "timeframe", "candle_start")
 
-  /** The single series' gold: the driver's entry query. */
+  /** The single series' gold, the query `SparkEntry.entry` runs. */
   val fctTimeframes: Q = fctTimeframesOf(Nil)
 
   def fctTimeframesSql(key: Seq[String]): String =

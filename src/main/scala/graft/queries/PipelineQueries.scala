@@ -74,7 +74,7 @@ object PipelineQueries {
   }
 
   /** Silver-tick stream source fixture `name` of every series under
-    * `key` — one builder so the fixture definition exists exactly once
+    * `key` — one function so the fixture definition exists exactly once
     * (`stream_ohlc_1h` and `stream_to_store` must consume the identical
     * source).
     */
