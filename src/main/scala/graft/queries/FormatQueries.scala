@@ -378,14 +378,8 @@ object FormatQueries {
     * with no loss and no duplication.
     */
   val streamDsv2Sink: Q = (s, _) => {
-    val target = StoreQueries.scratchPath(s, s"graft_store/dsv2_sink_stream")
-    val (fs, root) = {
-      val p = new org.apache.hadoop.fs.Path(target)
-      (p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
-    }
-    fs.delete(root, true)
-    val ckpt = StoreQueries.scratchPath(s, s"graft_store/dsv2_sink_stream_ckpt")
-    fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
+    val target = StoreQueries.freshScratch(s, "graft_store/dsv2_sink_stream")
+    val ckpt = StoreQueries.freshScratch(s, "graft_store/dsv2_sink_stream_ckpt")
     PipelineQueries.awaitBounded(s, "stream_dsv2_sink") {
       s.readStream.format("graft-ticks")
         .option("rows", "10000").option("pages", "8")

@@ -38,18 +38,9 @@ object MultiSymQueries {
     * so it shares `ewma_multisym`'s oracle.
     */
   val streamEwma: Q = (s, dir) => {
-    val base = PipelineQueries.ensureFixture(s, "stream_ewma", dir) { b =>
+    val (base, schema) = graft.Scratch.fixtureFiles(s, s"stream_ewma|$dir")(
       Keyed.closes1h(s, dir)
-        .coalesce(4) // bounded source file count for the stream listing
-        .write.mode("overwrite").parquet(b)
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("symbol",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("candle_start",
-        org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("close_price",
-        org.apache.spark.sql.types.DoubleType)))
+        .coalesce(4)) // bounded source file count for the stream listing
     // append-mode result read back from persisted files through the
     // production sink (the stream_dedup routing; VERDICT r13 missing #1's
     // principle — this was the last append-mode memory read-back)

@@ -403,7 +403,7 @@ object SketchQueries {
   private def loadHistory(s: SparkSession, name: String, items: DataFrame,
       dayCol: String, clusterBy: Seq[String],
       inputMaterialized: Boolean): (String, DataFrame, DataFrame) = {
-    val target = StoreQueries.freshStoreRoot(s, name)
+    val target = StoreQueries.freshScratch(s, s"graft_store/$name")
     val mat =
       if (inputMaterialized) items else Scratch.table(items, s"storeday-$name")
     val d0 = mat.agg(min(col(dayCol)).as("__d0"))
@@ -477,14 +477,12 @@ object SketchQueries {
   private def streamedStore(s: SparkSession, name: String, dir: String,
       items: DataFrame, clusterBy: Seq[String], fixtureName: String = null,
       filesPerTrigger: Option[Int] = Some(1)): DataFrame = {
-    val base = PipelineQueries.ensureFixture(s,
-        Option(fixtureName).getOrElse(name), dir) { b =>
-      items.repartitionByRange(4, col("day"))
-        .write.mode("overwrite").parquet(b)
-    }
+    val (base, schema) = Scratch.fixtureFiles(s,
+        s"${Option(fixtureName).getOrElse(name)}|$dir")(
+      items.repartitionByRange(4, col("day")))
     PipelineQueries.runBoundedStreamToDayStore(s, s"graft_$name",
       () => {
-        val r = s.readStream.schema(items.schema)
+        val r = s.readStream.schema(schema)
         filesPerTrigger.fold(r)(n => r.option("maxFilesPerTrigger", n))
           .parquet(base)
       },

@@ -50,15 +50,16 @@ object StoreQueries {
       case None => s"${sys.props("java.io.tmpdir")}/$rel"
     }
 
-  /** Delete-and-return a query's scratch-store root (idempotent runs:
-    * each store query owns a fixed name and rebuilds it from empty).
+  /** Delete-and-return scratch path `rel` (idempotent runs: each query
+    * owns its fixed store, warehouse and checkpoint names and rebuilds them
+    * from empty).
     */
-  private[queries] def freshStoreRoot(s: SparkSession, name: String): String = {
-    val target = storeRoot(s, name)
-    val p = new org.apache.hadoop.fs.Path(target)
+  private[queries] def freshScratch(s: SparkSession, rel: String): String = {
+    val dir = scratchPath(s, rel)
+    val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
-    target
+    dir
   }
 
   private val silverSql: String = ForexSql.silver(Nil)
@@ -68,10 +69,7 @@ object StoreQueries {
     // would re-run the scan + dedup window; scratch-materialize it once
     // (graft.Scratch: the write-once-read-many shape, no block manager)
     val silver = graft.Scratch.table(ForexPipeline.silverFrom(s, dir), "merge-silver")
-    val target = storeRoot(s, "merge_upsert")
-    val p = new org.apache.hadoop.fs.Path(target)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true) // idempotent scratch table
+    val target = freshScratch(s, "graft_store/merge_upsert")
     // driver-side scalar bounds (SURVEY-sanctioned one-row collect)
     val row = silver.agg(
       min(unix_micros(col("observed_at"))), max(unix_micros(col("observed_at")))).first()
@@ -124,10 +122,7 @@ object StoreQueries {
   val mergeUpsertMultisym: Q = (s, dir) => {
     val silver = graft.Scratch.table(
       ForexPipeline.silverFrom(s, dir, ForexPipeline.SymbolKey), "merge-silver-multi")
-    val target = storeRoot(s, "merge_upsert_multisym")
-    val p = new org.apache.hadoop.fs.Path(target)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true) // idempotent scratch table
+    val target = freshScratch(s, "graft_store/merge_upsert_multisym")
     val row = silver.agg(
       min(unix_micros(col("observed_at"))), max(unix_micros(col("observed_at")))).first()
     val (mn, mx) = (row.getLong(0), row.getLong(1))
@@ -368,15 +363,10 @@ object StoreQueries {
     */
   val zorderStore: Q = (s, dir) => {
     val silver = graft.Scratch.table(ForexPipeline.silverFrom(s, dir), "zorder-silver")
-    val target = storeRoot(s, "zorder_store")
-    val p = new org.apache.hadoop.fs.Path(target)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true) // idempotent scratch table
+    val target = freshScratch(s, "graft_store/zorder_store")
     IncrementalStore.overwriteDayPartitions(silver, target, "observed_at")
-    // bounded day-list collect (the compaction pattern: days, never rows)
-    val days = IncrementalStore.readTable(s, target)
-      .select(col(IncrementalStore.PartitionCol)).distinct()
-      .collect().map(_.getDate(0)).sortBy(_.getTime).toSeq
+    // the day list is one directory listing, no Spark job
+    val days = IncrementalStore.listDays(s, target).map(java.sql.Date.valueOf)
     IncrementalStore.zorderDays(s, target, days, "observed_at", "close_price")
     IncrementalStore.readTable(s, target)
       .select(col("observed_at"), col("open_price"), col("high_price"),
@@ -566,10 +556,7 @@ object StoreQueries {
     */
   val storeRetention: Q = (s, dir) => {
     val silver = graft.Scratch.table(ForexPipeline.silverFrom(s, dir), "retention-silver")
-    val target = storeRoot(s, "store_retention")
-    val p = new org.apache.hadoop.fs.Path(target)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
+    val target = freshScratch(s, "graft_store/store_retention")
     IncrementalStore.upsertByKey(silver, target, "observed_at", Seq("observed_at"))
     IncrementalStore.retainDays(s, target, java.time.LocalDate.parse("2024-01-15"))
     IncrementalStore.readTable(s, target)
@@ -671,10 +658,7 @@ object StoreQueries {
     * compliance check — all zeros or the purge failed).
     */
   val gdprPurge: Q = (s, dir) => {
-    val target = storeRoot(s, "gdpr_purge")
-    val p = new org.apache.hadoop.fs.Path(target)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true) // idempotent scratch store
+    val target = freshScratch(s, "graft_store/gdpr_purge")
     val ev = graft.Tables.events(s, dir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
@@ -699,6 +683,8 @@ object StoreQueries {
       IncrementalStore.overwriteDayPartitions(survivors, target, "ts")
       // fully-purged days: overwrite can't empty them — drop the directory
       // (bounded: one fs call per such day)
+      val fs = new org.apache.hadoop.fs.Path(target)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
       dayStats.filter(_.getAs[Long]("n_keep") == 0L).map(_.getDate(0)).foreach { d =>
         fs.delete(new org.apache.hadoop.fs.Path(
           target, s"${IncrementalStore.PartitionCol}=$d"), true)

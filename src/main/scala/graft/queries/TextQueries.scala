@@ -2362,7 +2362,7 @@ object TextQueries {
       def layout(df: DataFrame, offset: Long, ingestDay: java.sql.Date) =
         shiftedLayout(df, offset)
           .withColumn("ingest_day", lit(ingestDay))
-      val target = StoreQueries.freshStoreRoot(s, storeName)
+      val target = StoreQueries.freshScratch(s, s"graft_store/$storeName")
       IncrementalStore.overwriteDayPartitions(
         layout(toks.filter(col("doc_id") <= cut), 0L, PackIngestDays.head),
         target, "ingest_day", clusterBy = Seq("doc_id"))

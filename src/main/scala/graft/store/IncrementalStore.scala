@@ -31,13 +31,6 @@ object IncrementalStore {
 
   final val PartitionCol = "p_date"
 
-  /** Bumped whenever the on-disk write layout changes (file arrangement,
-    * sort order, partitioning): cached fixture warehouses tag themselves
-    * with it so a warehouse persisted by an older layout rebuilds instead
-    * of being reused.
-    */
-  final val LayoutVersion = "range-layout-v3"
-
   /** Read a store table back (partition column retained for pruning). */
   def readTable(spark: SparkSession, target: String): DataFrame =
     spark.read.parquet(target)

@@ -34,26 +34,94 @@ class ScratchSpec extends SparkSpec {
     } finally spark.conf.unset(Scratch.ScratchDirConf)
   }
 
-  test("fixture: derives ONCE per key, later calls serve from the files") {
+  /** One form of the fixture registry: serve `xs` under `key`, calling
+    * `built` on every build; returns the values served and the fixture's
+    * root directory.
+    */
+  private type Form = (String, Seq[Long], () => Unit) => (Set[Long], java.io.File)
+
+  private val dataFrameForm: Form = (key, xs, built) => {
     import spark.implicits._
-    var derivations = 0
-    def build() = Scratch.fixture(spark, "spec-fixture|reuse") {
-      derivations += 1
-      (1L to 25L).toDF("x")
-    }
-    val first = build().collect().map(_.getLong(0)).toSet
-    val second = build().collect().map(_.getLong(0)).toSet
-    assert(derivations === 1, "second call must not re-derive")
-    assert(first === (1L to 25L).toSet)
-    assert(second === first)
+    val df = Scratch.fixture(spark, key) { built(); xs.toDF("x") }
+    val file = df.inputFiles.head
+    (df.collect().map(_.getLong(0)).toSet,
+      new java.io.File(new java.net.URI(file.stripSuffix("/" + file.split('/').last)).getPath))
   }
 
-  test("fixture: keys isolate — per-sfDir fixtures never bleed") {
+  // the stream_attribution_outer shape: two subdirectories, then one more
+  // file moved into one of them after its write, and no marker at the root
+  private val dirForm: Form = (key, xs, built) => {
     import spark.implicits._
-    val a = Scratch.fixture(spark, "spec-fixture|dirA")((1L to 3L).toDF("x"))
-    val b = Scratch.fixture(spark, "spec-fixture|dirB")((4L to 6L).toDF("x"))
-    assert(a.collect().map(_.getLong(0)).toSet === Set(1L, 2L, 3L))
-    assert(b.collect().map(_.getLong(0)).toSet === Set(4L, 5L, 6L))
+    val (root, schema) = Scratch.fixtureDir(spark, key) { b =>
+      built()
+      val (a, rest) = xs.splitAt(xs.size / 2)
+      a.toDF("x").write.parquet(s"$b/a")
+      rest.init.toDF("x").write.parquet(s"$b/b")
+      rest.takeRight(1).toDF("x").coalesce(1).write.parquet(s"${b}_late")
+      val late = new java.io.File(s"${b}_late").listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      assert(late.renameTo(new java.io.File(s"$b/b/zz_late.parquet")))
+      xs.toDF("x").schema
+    }
+    (spark.read.schema(schema).parquet(s"$root/a", s"$root/b")
+      .collect().map(_.getLong(0)).toSet, new java.io.File(root))
+  }
+
+  private def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete()
+  }
+
+  for ((form, serve) <- Seq("fixture" -> dataFrameForm, "fixtureDir" -> dirForm)) {
+    test(s"$form: derives ONCE per key, later calls serve from the files") {
+      var derivations = 0
+      def build() = serve(s"spec-$form|reuse", 1L to 25L, () => derivations += 1)._1
+      val first = build()
+      val second = build()
+      assert(derivations === 1, "second call must not re-derive")
+      assert(first === (1L to 25L).toSet)
+      assert(second === first)
+    }
+
+    test(s"$form: keys isolate — per-sfDir fixtures never bleed") {
+      val a = serve(s"spec-$form|dirA", 1L to 3L, () => ())._1
+      val b = serve(s"spec-$form|dirB", 4L to 6L, () => ())._1
+      assert(a === Set(1L, 2L, 3L))
+      assert(b === Set(4L, 5L, 6L))
+    }
+
+    test(s"$form: an externally deleted fixture dir is rebuilt, not a dangling read") {
+      var derivations = 0
+      def build() = serve(s"spec-$form|rebuild", 1L to 5L, () => derivations += 1)
+      val (_, dir) = build()
+      assert(derivations === 1)
+      deleteTree(dir)
+      val again = build()._1
+      assert(derivations === 2, "deleted fixture must re-derive")
+      assert(again === (1L to 5L).toSet)
+    }
+
+    test(s"$form: a PARTIALLY deleted dir (no _SUCCESS) rebuilds — commit " +
+        "marker, not bare existence, gates the cache (ADVICE r14)") {
+      var derivations = 0
+      def build() = serve(s"spec-$form|partial", 1L to 7L, () => derivations += 1)
+      val (_, dir) = build()
+      assert(derivations === 1)
+      // simulate a half-deleted fixture: data files remain, commit marker gone
+      val marker = new java.io.File(dir, "_SUCCESS")
+      assert(marker.exists(), "a served fixture must have a _SUCCESS marker")
+      assert(marker.delete())
+      val again = build()._1
+      assert(derivations === 2, "uncommitted fixture dir must re-derive")
+      assert(again === (1L to 7L).toSet)
+    }
+
+    test(s"$form: fixtures of two source dirs, served A, B, A, build twice") {
+      var derivations = 0
+      for (d <- Seq("A", "B", "A"))
+        serve(s"spec-$form-alternate|dir$d", 1L to 3L, () => derivations += 1)
+      assert(derivations === 2, "returning to dir A must not rebuild it")
+    }
   }
 
   test("fixture: honors spark.graft.scratch.dir — cluster runs materialize " +
@@ -70,52 +138,6 @@ class ScratchSpec extends SparkSpec {
       while (children.hasNext) names += children.next().getFileName.toString
       assert(names.exists(_.startsWith("graft-fix-")), names.toString)
     } finally spark.conf.unset(Scratch.ScratchDirConf)
-  }
-
-  test("fixture: an externally deleted fixture dir is rebuilt, not a dangling read") {
-    import spark.implicits._
-    var derivations = 0
-    def build() = Scratch.fixture(spark, "spec-fixture|rebuild") {
-      derivations += 1
-      (1L to 5L).toDF("x")
-    }
-    val path = {
-      build()
-      // recover the materialized location via the plan's file index
-      val df = build()
-      df.inputFiles.head.stripSuffix("/" + df.inputFiles.head.split('/').last)
-    }
-    assert(derivations === 1)
-    val dir = new java.io.File(new java.net.URI(path).getPath)
-    dir.listFiles().foreach(_.delete())
-    dir.delete()
-    val again = build().collect().map(_.getLong(0)).toSet
-    assert(derivations === 2, "deleted fixture must re-derive")
-    assert(again === (1L to 5L).toSet)
-  }
-
-  test("fixture: a PARTIALLY deleted dir (no _SUCCESS) rebuilds — commit " +
-      "marker, not bare existence, gates the cache (ADVICE r14)") {
-    import spark.implicits._
-    var derivations = 0
-    def build() = Scratch.fixture(spark, "spec-fixture|partial") {
-      derivations += 1
-      (1L to 7L).toDF("x")
-    }
-    val path = {
-      build()
-      val df = build()
-      df.inputFiles.head.stripSuffix("/" + df.inputFiles.head.split('/').last)
-    }
-    assert(derivations === 1)
-    // simulate a half-deleted fixture: data files remain, commit marker gone
-    val dir = new java.io.File(new java.net.URI(path).getPath)
-    val marker = new java.io.File(dir, "_SUCCESS")
-    assert(marker.exists(), "parquet write must leave a _SUCCESS marker")
-    assert(marker.delete())
-    val again = build().collect().map(_.getLong(0)).toSet
-    assert(derivations === 2, "uncommitted fixture dir must re-derive")
-    assert(again === (1L to 7L).toSet)
   }
 
   test("fixture: distinct keys build without serializing behind each " +

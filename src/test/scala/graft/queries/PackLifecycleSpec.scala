@@ -82,7 +82,7 @@ class PackLifecycleSpec extends SparkSpec {
     val b = docs.agg(min(col("doc_id")), max(col("doc_id"))).first()
     val cut = b.getLong(0) + (b.getLong(1) - b.getLong(0)) / 2L
     val day = (i: Int) => java.sql.Date.valueOf(s"2024-02-0${i + 1}")
-    val target = StoreQueries.freshStoreRoot(spark, "spec_pack_replay")
+    val target = StoreQueries.freshScratch(spark, "graft_store/spec_pack_replay")
     def runBatch(pred: org.apache.spark.sql.Column, bid: Long): Unit = {
       val tp = new org.apache.hadoop.fs.Path(target)
       val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -121,7 +121,7 @@ class PackLifecycleSpec extends SparkSpec {
   test("retention floor: a late straggler below the floor cannot " +
       "resurrect a swept day partition; at/above-floor rows still merge") {
     val d = (i: Int) => java.sql.Date.valueOf(s"2024-03-0$i")
-    val target = StoreQueries.freshStoreRoot(spark, "spec_floor17")
+    val target = StoreQueries.freshScratch(spark, "graft_store/spec_floor17")
     IncrementalStore.mergeBatchDayPartitions(
       itemsDf(Seq((d(1), 1L, 1.0), (d(2), 2L, 2.0), (d(3), 3L, 3.0))),
       0L, target, "day", clusterBy = Seq("k"))
@@ -149,7 +149,7 @@ class PackLifecycleSpec extends SparkSpec {
   test("retention floor: null-day rows are never floored (mirroring " +
       "retainDays' null-partition skip)") {
     val d = (i: Int) => java.sql.Date.valueOf(s"2024-04-0$i")
-    val target = StoreQueries.freshStoreRoot(spark, "spec_floor17_null")
+    val target = StoreQueries.freshScratch(spark, "graft_store/spec_floor17_null")
     IncrementalStore.mergeBatchDayPartitions(
       itemsDf(Seq((d(2), 1L, 1.0), (null, 2L, 2.0), (d(1), 3L, 3.0))),
       0L, target, "day", clusterBy = Seq("k"),

@@ -46,7 +46,7 @@ class Round16OpsSpec extends SparkSpec {
       StoreQueries.storeRoot(spark, "stream_kll_store"))
       .select(col("event_type"), col("day"), col("level"), col("value"),
         col("tid"), col("w"))
-    val oneShot = StoreQueries.freshStoreRoot(spark, "spec_kll_oneshot16")
+    val oneShot = StoreQueries.freshScratch(spark, "graft_store/spec_kll_oneshot16")
     IncrementalStore.overwriteDayPartitions(kllItems(sf0001), oneShot,
       "day", clusterBy = Seq("event_type"))
     val expect = IncrementalStore.readTable(spark, oneShot)
@@ -62,7 +62,7 @@ class Round16OpsSpec extends SparkSpec {
       kllItems(sf0001), "day", clusterBy = Seq("event_type"))
       .select(col("event_type"), col("day"), col("level"), col("value"),
         col("tid"), col("w"))
-    val oneShot = StoreQueries.freshStoreRoot(spark, "spec_oneshot16b")
+    val oneShot = StoreQueries.freshScratch(spark, "graft_store/spec_oneshot16b")
     IncrementalStore.overwriteDayPartitions(kllItems(sf0001), oneShot,
       "day", clusterBy = Seq("event_type"))
     val expect = IncrementalStore.readTable(spark, oneShot)
@@ -128,7 +128,7 @@ class Round16OpsSpec extends SparkSpec {
     val items = graft.Scratch.table(kllItems(sf0001), "tt16-items")
     val d0 = items.agg(min(col("day"))).head().getDate(0).toLocalDate
     val cut = java.sql.Date.valueOf(d0.plusDays(10))
-    val target = StoreQueries.freshStoreRoot(spark, "spec_kll_tt16")
+    val target = StoreQueries.freshScratch(spark, "graft_store/spec_kll_tt16")
     items.filter(col("day") <= cut)
       .write.mode("overwrite").parquet(s"$target/gen=1")
     items.filter(col("day") > cut)

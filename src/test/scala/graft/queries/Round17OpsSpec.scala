@@ -47,7 +47,7 @@ class Round17OpsSpec extends SparkSpec {
         .option("maxFilesPerTrigger", 1).parquet(base),
       "day", clusterBy = Seq("k"))
       .select(col("day"), col("k"), col("v"))
-    val oneShot = StoreQueries.freshStoreRoot(spark, "spec_splitday17_oneshot")
+    val oneShot = StoreQueries.freshScratch(spark, "graft_store/spec_splitday17_oneshot")
     IncrementalStore.overwriteDayPartitions(itemsDf(fragA ++ fragB), oneShot,
       "day", clusterBy = Seq("k"))
     val expect = IncrementalStore.readTable(spark, oneShot)
@@ -65,7 +65,7 @@ class Round17OpsSpec extends SparkSpec {
 
   test("mergeBatchDayPartitions: a REPLAYED batch purges its own prior " +
       "rows (no duplicates), while a NEW batch touching an open day merges") {
-    val target = StoreQueries.freshStoreRoot(spark, "spec_replay17")
+    val target = StoreQueries.freshScratch(spark, "graft_store/spec_replay17")
     IncrementalStore.mergeBatchDayPartitions(itemsDf(fragA), 0L, target,
       "day", clusterBy = Seq("k"))
     IncrementalStore.mergeBatchDayPartitions(itemsDf(fragB), 1L, target,

@@ -7,7 +7,8 @@ import graft.{GraftSession, SparkEntry, SparkSpec}
   * strategy or optimizer lists. The queries below each change session
   * state while they run (the native joins' operators, the bounded streams'
   * shuffle partitions, compact_roundtrip's AQE switch); the sketch family's
-  * queries write governed stores and run bounded streams.
+  * queries write governed stores and run bounded streams, and the stream
+  * queries read their sources from the fixture registry.
   */
 class SessionIsolationSpec extends SparkSpec {
 
@@ -34,6 +35,21 @@ class SessionIsolationSpec extends SparkSpec {
     val before = state()
     for (q <- SketchQueries.queries.keys.toSeq.sorted) {
       assert(SparkEntry.queries(q)(spark, sf0001).count() > 0L, q)
+      assert(state() === before, s"$q changed the session")
+    }
+  }
+
+  test("the stream queries whose sources come from the fixture registry " +
+      "leave the session unchanged") {
+    spark.conf.unset(Aqe)
+    val before = state()
+    for (q <- Seq("stream_ohlc_multisym", "stream_join_attribution",
+        "stream_attribution_outer", "stream_to_store", "stream_sliding_ohlc",
+        "stream_dedup", "stream_kll", "stream_seq_pack", "stream_hll",
+        "stream_hist", "stream_cms", "stream_asof", "stream_gaps",
+        "stream_topk", "stream_open_gaps", "stream_neardup", "stream_funnel",
+        "stream_ewma", "stream_dsv2_sink")) {
+      SparkEntry.queries(q)(spark, sf0001).count()
       assert(state() === before, s"$q changed the session")
     }
   }
