@@ -112,12 +112,13 @@ object ForexIncremental {
     * SMAs of up to 49 following days stale whenever the backfill actually
     * changed the day. Cost stays O(1) in table size: ~52 silver days and
     * <=60 gold partitions' predecessor columns read, ~51 day-partitions
-    * rewritten, independent of history length.
+    * rewritten, independent of history length. Returns the candle-day
+    * range rewritten, as [[rewriteGold]] does.
     */
   def runGoldBackfill(
       spark: SparkSession, silverDir: String, goldDir: String,
       date: LocalDate,
-      now: Timestamp = new Timestamp(0L)): Unit = {
+      now: Timestamp = new Timestamp(0L)): Option[(LocalDate, LocalDate)] = {
     val last = IncrementalStore.listDays(spark, silverDir).filter(_.isAfter(date))
       .take(BackfillForwardDays).lastOption.getOrElse(date)
     rewriteGold(spark, silverDir, goldDir, date.minusDays(1), last, now)
@@ -130,13 +131,16 @@ object ForexIncremental {
     * 4h/12h candles starting late on the day before, which absorb the
     * newest gold day's ticks before 02:00 (the +2h shift). An empty gold
     * table is built from every silver day, starting the day before the
-    * first for the same reason. Re-running is idempotent.
+    * first for the same reason. Re-running is idempotent. Returns the
+    * candle-day range rewritten, as [[rewriteGold]] does; None without
+    * silver days.
     */
   def runGold(
       spark: SparkSession, silverDir: String, goldDir: String,
-      now: Timestamp = new Timestamp(0L)): Unit = {
+      now: Timestamp = new Timestamp(0L)): Option[(LocalDate, LocalDate)] = {
     val silverDays = IncrementalStore.listDays(spark, silverDir)
-    if (silverDays.nonEmpty) {
+    if (silverDays.isEmpty) None
+    else {
       val from = IncrementalStore.listDays(spark, goldDir).lastOption
         .getOrElse(silverDays.head)
       rewriteGold(spark, silverDir, goldDir, from.minusDays(1), silverDays.last, now)
@@ -164,13 +168,17 @@ object ForexIncremental {
     * holidays — is seen in metrics observed by the write itself, and the
     * rewrite runs again over twice the window. Without stored gold (a full
     * refresh) every candle comes from silver.
+    *
+    * Returns Some((first, last)) when it wrote: no gold partition outside
+    * that range changed. None when silver holds no day of [first, last + 1]:
+    * then nothing is written.
     */
   private def rewriteGold(
       spark: SparkSession, silverDir: String, goldDir: String,
-      first: LocalDate, last: LocalDate, now: Timestamp): Unit = {
+      first: LocalDate, last: LocalDate, now: Timestamp): Option[(LocalDate, LocalDate)] = {
     val silverDays = IncrementalStore.listDays(spark, silverDir)
       .filter(d => !d.isBefore(first) && !d.isAfter(last.plusDays(1)))
-    if (silverDays.isEmpty) return
+    if (silverDays.isEmpty) return None
     val silver = IncrementalStore.readDays(spark, silverDir, silverDays)
       .select("observed_at", "open_price", "high_price", "low_price", "close_price")
     val candleDay = to_date(col("candle_start"))
@@ -214,5 +222,6 @@ object ForexIncremental {
       if (short) rewrite(window * 2)
     }
     rewrite(LookbackDays)
+    Some((first, last))
   }
 }

@@ -63,6 +63,15 @@ object IncrementalStore {
       .sortBy(_.toEpochDay)
   }
 
+  /** Whether the table has a null-day partition, the one [[listDays]] leaves
+    * out: it holds exactly the rows whose `tsCol` was null when written. One
+    * driver-side existence check; no Spark job runs.
+    */
+  def hasNullDay(spark: SparkSession, target: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(s"$target/$PartitionCol=$NullPartition")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
   /** Read only the given day partitions of a store table (each must exist;
     * partition column retained). The reader is handed the day directories
     * themselves, so Spark lists and scans just those — a `p_date` filter

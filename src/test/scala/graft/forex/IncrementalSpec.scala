@@ -6,7 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{PipelineRunner, SparkSpec, Tables}
 import graft.store.IncrementalStore
 
 /** MERGE-semantics regression tests (SURVEY §5 item 4): two-batch
@@ -217,5 +217,28 @@ class IncrementalSpec extends SparkSpec {
     val (silverOnce, goldOnce) = oneShot(restated)
     assert(storeRows(silverInc) === silverOnce)
     assert(storeRows(goldInc) === goldOnce)
+  }
+
+  test("checks: a daily run reads the files of the days it rewrote, however long the history") {
+    def checkedFiles(days: Int): Int = {
+      val ev = longEvents(days)
+      val (silverDir, goldDir) = (tmp(), tmp())
+      ForexIncremental.runSilver(landedBy(ev, days - 1), silverDir)
+      ForexIncremental.runGold(spark, silverDir, goldDir)
+      val before = dayFiles(goldDir)
+      ForexIncremental.runSilver(landedBy(ev, days), silverDir)
+      val rewritten = ForexIncremental.runGold(spark, silverDir, goldDir)
+      val after = dayFiles(goldDir)
+      val written = after.keySet.filter(d => before.get(d) != after.get(d))
+        .flatMap(d => after(d).filter(_.endsWith(".parquet")).map(d -> _))
+      val read = PipelineRunner.checkedGold(spark, goldDir, full = false, rewritten)
+        .get.inputFiles.toSet.map { (f: String) =>
+          val p = new org.apache.hadoop.fs.Path(f)
+          java.time.LocalDate.parse(p.getParent.getName.stripPrefix("p_date=")) -> p.getName
+        }
+      assert(read === written)
+      read.size
+    }
+    assert(checkedFiles(70) === checkedFiles(140))
   }
 }
