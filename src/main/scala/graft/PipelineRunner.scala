@@ -147,11 +147,11 @@ object PipelineRunner {
     require(dates.isEmpty || !has("--staging-view"),
       usage("--staging-view rebuilds gold from every day, so it takes no --date"))
     val Seq(eventsDir, warehouse) = dirs
+    val backfill = dates.headOption.map(d => LocalDate.parse(d.stripPrefix("--date=")))
     val spark = GraftSession.builder().appName("graft-pipeline").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     runOnce(spark, eventsDir, warehouse, has("--full-refresh"),
-      new Timestamp(System.currentTimeMillis()),
-      dates.headOption.map(d => LocalDate.parse(d.stripPrefix("--date="))),
+      new Timestamp(System.currentTimeMillis()), backfill,
       has("--staging-view"), has("--full-audit"))
     val goldDir = s"$warehouse/fct_timeframes"
     // partitions from the directory listing, not a scan: runOnce has just

@@ -41,7 +41,7 @@ class PipelineSpec extends SparkSpec {
     val saved = System.err
     System.setErr(new java.io.PrintStream(buf, true))
     try body finally System.setErr(saved)
-    """\[graft\] gold checks\([^)]*\): scope=(full|none|days \[[^]]*\])""".r
+    """\[graft\] gold checks\([^)]*\): scope=(full|none|days \[[^\]]*\])""".r
       .findAllMatchIn(buf.toString).map(_.group(1)).toSeq
   }
 
