@@ -154,10 +154,10 @@ object PipelineRunner {
       new Timestamp(System.currentTimeMillis()), backfill,
       has("--staging-view"), has("--full-audit"))
     val goldDir = s"$warehouse/fct_timeframes"
-    // partitions from the directory listing, not a scan: runOnce has just
-    // enforced not_null(candle_start), so gold has no null-day partition,
-    // the only one listDays leaves out
-    println(s"[pipeline] gold rows=${IncrementalStore.readTable(spark, goldDir).count()} " +
+    // rows from the footers and partitions from the directory listing, not
+    // a scan: runOnce has just enforced not_null(candle_start), so gold has
+    // no null-day partition, the only one listDays leaves out
+    println(s"[pipeline] gold rows=${IncrementalStore.rowCount(spark, goldDir)} " +
       s"partitions=${IncrementalStore.listDays(spark, goldDir).size}")
     spark.stop()
   }

@@ -18,7 +18,8 @@ import graft.store.IncrementalStore
   * Silver (stg_eurusd.sql:14-40): strict high-watermark — only ticks with
   * `observed_at > max(observed_at)` enter the batch; late rows at or below
   * the watermark are dropped (reference semantics, SURVEY §2.10). The
-  * watermark scans silver's newest day partition only.
+  * watermark comes from the column statistics in the footers of silver's
+  * newest day partition, without a Spark job.
   *
   * Gold (fct_eurusd_timeframes.sql:15-86): every gold write recomputes a
   * range of candle days and wholesale-replaces exactly those day
@@ -194,9 +195,10 @@ object ForexIncremental {
         else {
           val newest = row_number().over(
             Window.partitionBy("timeframe").orderBy(col("candle_start").desc))
-          // per timeframe, how many predecessors the window held; max, not
-          // count: a node below the write's range exchange can run twice
-          // (boundary sampling), and a max does not double
+          // per timeframe, how many predecessors the window held, as the
+          // max row number: a max stays right were this node run twice (a
+          // write layout that samples its input would run it once more),
+          // where a count would double
           val held = Resample.timeframes.map(tf =>
             max(when(col("timeframe") === tf.name, col("__n"))).as(tf.name))
           val preds = IncrementalStore.readDays(spark, goldDir, predDays)

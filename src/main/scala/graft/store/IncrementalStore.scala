@@ -2,8 +2,20 @@ package graft.store
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DateType, StructType}
 
 /** MERGE-semantics incremental writes on plain Parquet (SURVEY §4.3).
   *
@@ -24,16 +36,37 @@ import org.apache.spark.sql.functions._
   *
   * At 100 TB: a daily batch touches O(1) day-partitions; the rewrite is
   * O(batch + touched-partition size), independent of table history size.
-  * The table's day list comes from one directory listing ([[listDays]]),
-  * and [[highWatermark]] scans only the newest day.
+  *
+  * Bookkeeping starts no Spark job. It is answered from the directory
+  * tree and the parquet footers the store's files already hold:
+  *  - the day list is one directory listing ([[listDays]]);
+  *  - a read's schema is the Spark row schema in the footer of the file
+  *    Spark's own inference would open ([[readTable]], [[readDays]]);
+  *  - the watermark is the maximum of the newest day's `tsCol` column
+  *    statistics ([[highWatermark]]);
+  *  - the row count is the sum of the footers' row counts ([[rowCount]]);
+  *  - a write's layout comes from AQE's rebalance, which samples nothing
+  *    ([[dayLayout]]).
+  * Footers are read with Spark's own footer reader (a few KB per file). A
+  * file whose footer cannot answer (no Spark schema, no usable statistics)
+  * falls back to the Spark job it replaces.
   */
 object IncrementalStore {
 
   final val PartitionCol = "p_date"
 
-  /** Read a store table back (partition column retained for pruning). */
-  def readTable(spark: SparkSession, target: String): DataFrame =
-    spark.read.parquet(target)
+  /** Read a store table back (partition column retained for pruning). Its
+    * schema comes from one footer ([[footerSchema]]), so no job infers it.
+    * A table whose only partition is the null day is left to inference,
+    * which types its `p_date` as a string.
+    */
+  def readTable(spark: SparkSession, target: String): DataFrame = {
+    val root = new Path(target)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dirs = partitionDirs(fs, root)
+      .filterNot(_.forall(_.getName == s"$PartitionCol=$NullPartition"))
+    reader(spark, fs, dirs).parquet(target)
+  }
 
   /** Directory name of the null-day partition: a null `tsCol` makes
     * `to_date` null at write time, and Hive-style partitioning spells it so.
@@ -72,61 +105,203 @@ object IncrementalStore {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
+  /** Whether Spark's file listing keeps a file or directory of this name:
+    * it skips names starting with `_` or `.` and files being copied, but
+    * keeps parquet summary files (`_metadata`, `_common_metadata`).
+    */
+  private def listed(name: String): Boolean =
+    !(name.startsWith("_") || name.startsWith(".") || name.endsWith("._COPYING_")) ||
+      name.startsWith("_metadata") || name.startsWith("_common_metadata")
+
+  /** The `p_date=` directories of a store root; None when the root is
+    * absent or holds anything else Spark's listing keeps.
+    */
+  private def partitionDirs(fs: FileSystem, root: Path): Option[Seq[Path]] =
+    if (!fs.exists(root)) None
+    else {
+      val seen = fs.listStatus(root).toSeq.filter(st => listed(st.getPath.getName))
+      Option.when(seen.forall(st =>
+        st.isDirectory && st.getPath.getName.startsWith(s"$PartitionCol=")))(seen.map(_.getPath))
+    }
+
+  /** The data files of one day directory; None when it is absent or holds
+    * anything else Spark's listing keeps (a subdirectory, a summary file).
+    */
+  private def dataFiles(fs: FileSystem, dir: Path): Option[Seq[FileStatus]] =
+    if (!fs.exists(dir)) None
+    else {
+      val seen = fs.listStatus(dir).toSeq.filter(st => listed(st.getPath.getName))
+      Option.unless(seen.exists(st => st.isDirectory || st.getPath.getName.startsWith("_")))(seen)
+    }
+
+  /** One file's footer, read by Spark's own footer reader: a few KB from
+    * the end of the file. parquet-mr's `ParquetFileReader.open` costs about
+    * 50 times more bytes read per file.
+    */
+  private def footer(spark: SparkSession, file: FileStatus,
+      filter: ParquetMetadataConverter.MetadataFilter): ParquetMetadata =
+    ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration), filter)
+
+  /** The schema Spark's inference gives a read of the day directories
+    * `dirs`, taken from one footer on the driver instead of a job. That
+    * inference (`ParquetUtils.inferSchema`) reads the first data file by
+    * path, here the first file of the first directory by path that holds
+    * one: its Spark row schema (`org.apache.spark.sql.parquet.row.metadata`),
+    * then `p_date` as a date.
+    *
+    * None, and the caller lets Spark infer, when a directory on the way is
+    * absent or holds anything but data files, when no data file exists,
+    * when the footer has no Spark schema, or under session settings that
+    * make inference read more files or type `p_date` otherwise (merged
+    * schemas, string partition values).
+    */
+  private def footerSchema(spark: SparkSession, fs: FileSystem,
+      dirs: Seq[Path]): Option[StructType] = {
+    def on(key: String, default: Boolean) = spark.conf.get(key, default.toString).toBoolean
+    if (on("spark.sql.parquet.mergeSchema", false) ||
+        !on("spark.sql.sources.partitionColumnTypeInference.enabled", true)) return None
+    val first = dirs.sortBy(_.toString).iterator.map(dataFiles(fs, _))
+      .find(_.forall(_.nonEmpty)).flatten.map(_.minBy(_.getPath.toString))
+    for {
+      file <- first
+      json <- Option(footer(spark, file, ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        .getFileMetaData.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      data <- Try(DataType.fromJson(json)).toOption.collect { case s: StructType => s }
+      if !data.fieldNames.contains(PartitionCol)
+    } yield data.add(PartitionCol, DateType)
+  }
+
+  /** `spark.read`, given the footer schema of `dirs` when there is one. */
+  private def reader(spark: SparkSession, fs: FileSystem,
+      dirs: Option[Seq[Path]]): DataFrameReader =
+    dirs.flatMap(footerSchema(spark, fs, _)).fold(spark.read)(spark.read.schema(_))
+
   /** Read only the given day partitions of a store table (each must exist;
     * partition column retained). The reader is handed the day directories
     * themselves, so Spark lists and scans just those — a `p_date` filter
     * over [[readTable]] prunes the scan too, but its partition discovery
-    * first lists every day of history.
+    * first lists every day of history. The schema comes from the footer of
+    * the earliest day's first file ([[footerSchema]]), so no job infers it.
     */
   def readDays(spark: SparkSession, target: String,
       days: Seq[java.time.LocalDate]): DataFrame = {
     require(days.nonEmpty, s"readDays($target): no days given")
-    spark.read.option("basePath", target).parquet(days.map(dayPath(target, _)): _*)
+    val dirs = days.map(dayPath(target, _))
+    val fs = new Path(target).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    reader(spark, fs, Some(dirs.distinct.map(new Path(_))))
+      .option("basePath", target).parquet(dirs: _*)
   }
 
   /** P3/P4 watermark: max(tsCol) of the target, None if it holds no day
     * (absent or empty table, or null-day rows only). The store partitions
     * on `p_date = to_date(tsCol)`, so the maximum lies in the NEWEST day
-    * partition, and only that day's files are scanned, not the whole
-    * column. The null-day partition holds only null `tsCol` values, which
-    * `max` ignores anyway.
+    * partition. It is the maximum of that day's `tsCol` column-chunk
+    * statistics, read from its footers on the driver: no Spark job runs
+    * and no row is read. The null-day partition holds only null `tsCol`
+    * values, which `max` ignores anyway.
+    *
+    * Statistics answer only when every row group of the day carries them
+    * for an INT64 `TIMESTAMP(MICROS)` UTC column, the type [[write]] pins,
+    * from a file written without legacy datetime rebasing. Otherwise the
+    * day's rows are aggregated by a Spark job, as before.
     */
   def highWatermark(spark: SparkSession, target: String, tsCol: String): Option[Timestamp] =
     listDays(spark, target).lastOption.flatMap { newest =>
-      val row = readDays(spark, target, Seq(newest)).agg(max(col(tsCol))).first()
-      if (row.isNullAt(0)) None else Some(row.getTimestamp(0))
+      val dir = new Path(dayPath(target, newest))
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      dataFiles(fs, dir).filter(_.nonEmpty)
+        .flatMap(files => statisticsMax(
+          files.map(footer(spark, _, ParquetMetadataConverter.NO_FILTER)), tsCol))
+        .getOrElse {
+          val row = readDays(spark, target, Seq(newest)).agg(max(col(tsCol))).first()
+          if (row.isNullAt(0)) None else Some(row.getTimestamp(0))
+        }
     }
+
+  /** The maximum of timestamp column `name` over the column-chunk
+    * statistics of `footers`: Some(None) when every chunk holds nulls only,
+    * None when some row group has no usable statistics for it (see
+    * [[highWatermark]]).
+    */
+  private def statisticsMax(footers: Seq[ParquetMetadata],
+      name: String): Option[Option[Timestamp]] = {
+    val chunks = footers.flatMap { f =>
+      // written with legacy rebasing: the reader shifts old values
+      if (f.getFileMetaData.getKeyValueMetaData.containsKey("org.apache.spark.legacyDateTime"))
+        Seq(None)
+      else f.getBlocks.asScala.map(_.getColumns.asScala.find(_.getPath.toDotString == name))
+    }
+    val maxima = chunks.map(_.flatMap { c =>
+      val micros = c.getPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT64 &&
+        (c.getPrimitiveType.getLogicalTypeAnnotation match {
+          case t: TimestampLogicalTypeAnnotation =>
+            t.getUnit == TimeUnit.MICROS && t.isAdjustedToUTC
+          case _ => false
+        })
+      val st = c.getStatistics
+      if (!micros || st == null || st.isEmpty) None
+      else Some(Option.when(st.hasNonNullValue)(st.genericGetMax.asInstanceOf[Long]))
+    })
+    if (maxima.contains(None)) None
+    else Some(maxima.flatMap(_.flatten).maxOption.map(DateTimeUtils.toJavaTimestamp))
+  }
+
+  /** Rows in the table, `readTable(spark, target).count()`, from the row
+    * counts in its data files' footers: every file of every `p_date=`
+    * directory, the null day included. No Spark job runs and no row is
+    * read. A root that holds anything else is counted by that scan.
+    */
+  def rowCount(spark: SparkSession, target: String): Long = {
+    val root = new Path(target)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = partitionDirs(fs, root).map(_.map(dataFiles(fs, _)))
+      .filterNot(_.contains(None)).map(_.flatMap(_.get))
+    files.fold(readTable(spark, target).count())(_.map(
+      footer(spark, _, ParquetMetadataConverter.NO_FILTER).getBlocks.asScala
+        .map(_.getRowCount).sum).sum)
+  }
 
   private def withPartition(df: DataFrame, tsCol: String): DataFrame =
     df.withColumn(PartitionCol, to_date(col(tsCol)))
 
-  /** Batch layout for incremental writes: RANGE-partition by
-    * (day, cluster..., ts) and sort identically within partitions.
+  /** Batch layout for incremental writes: AQE's rebalance on the day,
+    * then a sort by (day, cluster..., ts) within each partition.
     *
-    *  - File count per day-partition is bounded by the range slices that
-    *    cover the day (~ max(tasks, days) files across the whole batch),
-    *    not by shuffle fan-out: a hash-partitioned batch writes one file
-    *    per shuffle task into EVERY touched day — 32 tasks x 35 days ~ 1100
-    *    tiny files at spec scale, and unbounded small-file decay at 100 TB.
-    *    A big day still spans many range slices (many tasks, many files),
-    *    so write parallelism survives skew.
+    *  - File count per day-partition is one per task that holds the day.
+    *    Rebalance hashes whole days to tasks and AQE coalesces small tasks,
+    *    so a batch writes about one file per day. A hash-partitioned batch
+    *    on other keys would write one file per shuffle task into EVERY
+    *    touched day: 32 tasks x 35 days ~ 1100 tiny files at spec scale, and
+    *    unbounded small-file decay at 100 TB.
+    *  - No job samples the batch first, as `repartitionByRange` does on
+    *    every write to pick its boundaries, however small the batch.
     *  - Rows reach the writer already sorted by the partition column, so
     *    FileFormatWriter skips its defensive per-task sort.
     *  - Within each file rows are cluster- and time-ordered, so parquet
     *    row-group min/max stats prune on exactly the predicates the store
     *    serves (day, cluster key, time range) — the cluster_by analog of
     *    fct_eurusd_timeframes.sql:11 taken to the file layout.
+    *
+    * Trade-off against the range layout this replaced: AQE splits a day
+    * larger than its advisory partition size (64 MB by default) by map
+    * output, not by key, so that day's files get overlapping `ts` ranges
+    * where range slices were disjoint, and pruning by time within the day
+    * reads more of them. A big day still spans many tasks, so write
+    * parallelism survives skew. No store table of this repository comes
+    * near that size per day.
     */
-  private def rangeLayout(df: DataFrame, tsCol: String,
-      clusterBy: Seq[String]): DataFrame = {
-    val keys = (PartitionCol +: clusterBy :+ tsCol).map(col)
-    df.repartitionByRange(keys: _*).sortWithinPartitions(keys: _*)
-  }
+  private def dayLayout(df: DataFrame, tsCol: String,
+      clusterBy: Seq[String]): DataFrame =
+    df.hint("rebalance", col(PartitionCol))
+      .sortWithinPartitions((PartitionCol +: clusterBy :+ tsCol).map(col): _*)
 
   private def write(arranged: DataFrame, target: String): Unit = {
     // the parquet writer takes its timestamp type from the session conf
     // only (no per-write option), so this one stays session-wide;
-    // GraftSession and Verify start their sessions with the same value
+    // GraftSession and Verify start their sessions with the same value.
+    // highWatermark reads the min/max statistics of the INT64
+    // TIMESTAMP(MICROS) columns this pins (INT96 has none)
     arranged.sparkSession.conf.set(
       "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     arranged.write
@@ -143,7 +318,7 @@ object IncrementalStore {
   def overwriteDayPartitions(
       batch: DataFrame, target: String, tsCol: String,
       clusterBy: Seq[String] = Nil): Unit =
-    write(rangeLayout(withPartition(batch, tsCol), tsCol, clusterBy), target)
+    write(dayLayout(withPartition(batch, tsCol), tsCol, clusterBy), target)
 
   /** Rows written by [[mergeBatchDayPartitions]] carry the micro-batch id
     * that produced them — the store-side bookkeeping that makes a replayed
@@ -230,7 +405,7 @@ object IncrementalStore {
       fs.exists(new org.apache.hadoop.fs.Path(root, dirName(d))))
     if (open.isEmpty) {
       // fast path: every touched day is new — the day-complete case
-      write(rangeLayout(withPartition(tagged, tsCol), tsCol, clusterBy),
+      write(dayLayout(withPartition(tagged, tsCol), tsCol, clusterBy),
         target)
     } else {
       val openDates = open.flatten
@@ -249,12 +424,12 @@ object IncrementalStore {
       // explicit schema: the staged relation can be empty (a replay that
       // was the day's only writer), where inference has nothing to read
       val priorBack = spark.read.schema(prior.schema).parquet(stage)
-      write(rangeLayout(withPartition(priorBack.unionByName(tagged), tsCol),
+      write(dayLayout(withPartition(priorBack.unionByName(tagged), tsCol),
         tsCol, clusterBy), target)
     }
   }
 
-  /** Day-scoped small-file compaction. The merge path's range layout bounds
+  /** Day-scoped small-file compaction. The merge path's day layout bounds
     * files per batch, but day directories still accumulate files from
     * multi-task writes of big days, append-style producers (bronze ingest,
     * per-micro-batch streaming sinks), and external writers — the classic
@@ -411,11 +586,11 @@ object IncrementalStore {
     val part = withPartition(batch, tsCol)
     def writeObserved(df: DataFrame): Map[String, Long] = {
       val obs = org.apache.spark.sql.Observation(s"graft-merge")
-      // observe ABOVE the range layout: repartitionByRange runs a SAMPLING
-      // pass over its child to pick boundaries, so a CollectMetrics node
-      // below the exchange would accumulate every row twice — above it,
-      // each written row passes exactly once
-      val observed = rangeLayout(df, tsCol, clusterBy).observe(obs,
+      // observe above the layout, on the rows as the writer receives
+      // them: each written row passes exactly once, even were the plan
+      // below the exchange run twice (a layout that samples its input, as
+      // repartitionByRange does, runs it once more)
+      val observed = dayLayout(df, tsCol, clusterBy).observe(obs,
         count(lit(1)).as("rows_written"),
         min(unix_micros(col(tsCol))).as("min_ts_us"),
         max(unix_micros(col(tsCol))).as("max_ts_us"))

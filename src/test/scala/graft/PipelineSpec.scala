@@ -159,6 +159,19 @@ class PipelineSpec extends SparkSpec {
       Seq(s"days [${day.minusDays(1)}, $last]"))
   }
 
+  test("a daily run starts at most 11 Spark jobs, and the report's row count none") {
+    val wh = tmp()
+    val goldDir = s"$wh/fct_timeframes"
+    PipelineRunner.runOnce(spark, sf0001, wh)
+    // no new ticks: a daily run over the spec's warehouse as it stands
+    val jobs = SparkSpec.jobsStarted(spark)(PipelineRunner.runOnce(spark, sf0001, wh))
+    assert(jobs.size <= 11, jobs.mkString("jobs started:\n", "\n", ""))
+    var rows = 0L
+    assert(SparkSpec.jobsStarted(spark) { rows = IncrementalStore.rowCount(spark, goldDir) } === Nil)
+    assert(rows === IncrementalStore.readTable(spark, goldDir).count())
+    assert(rows > 0L)
+  }
+
   private def mainRefuses(args: String*): Unit = {
     val e = intercept[IllegalArgumentException](
       PipelineRunner.main((Seq(s"${tmp()}/absent", tmp()) ++ args).toArray))

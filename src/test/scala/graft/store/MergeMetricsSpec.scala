@@ -114,28 +114,10 @@ class MergeMetricsSpec extends SparkSpec {
     val noon0 = java.time.Instant.parse("2024-03-01T12:00:00Z").getEpochSecond * 1000000L
     IncrementalStore.overwriteDayPartitions(spark.range(40).select(col("id").as("k"),
       timestamp_micros(lit(noon0) + col("id") * 86400000000L).as("ts")), dir, "ts")
-    def listingJobs(): Int = {
-      val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          descriptions.add(Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
+    def listingJobs(): Int =
+      graft.SparkSpec.jobsStarted(spark) {
         assert(IncrementalStore.readTable(spark, dir).count() === 40L)
-        // the bus delivers in order: once the marker job is seen, so is
-        // every job the read started
-        spark.sparkContext.setJobDescription("listing-probe-marker")
-        try spark.sparkContext.parallelize(Seq(1), 1).count()
-        finally spark.sparkContext.setJobDescription(null)
-        val deadline = System.nanoTime() + 30L * 1000000000L
-        while (!descriptions.contains("listing-probe-marker") && System.nanoTime() < deadline)
-          Thread.sleep(20)
-        assert(descriptions.contains("listing-probe-marker"))
-        descriptions.toArray.count(_.toString.startsWith("Listing leaf files"))
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
+      }.count(_.startsWith("Listing leaf files"))
     val (key, value) = graft.GraftSession.DriverListing
     val prior = spark.conf.getOption(key)
     spark.conf.unset(key)
