@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -105,38 +106,31 @@ object IncrementalStore {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Whether Spark's file listing keeps a file or directory of this name:
-    * it skips names starting with `_` or `.` and files being copied, but
-    * keeps parquet summary files (`_metadata`, `_common_metadata`).
+  /** The entries of `dir` that Spark's file listing reads: it skips names
+    * starting with `_` or `.` (`_SUCCESS`, `_staging`, checksums) and files
+    * being copied. None when `dir` is absent.
     */
-  private def listed(name: String): Boolean =
-    !(name.startsWith("_") || name.startsWith(".") || name.endsWith("._COPYING_")) ||
-      name.startsWith("_metadata") || name.startsWith("_common_metadata")
+  private def listed(fs: FileSystem, dir: Path): Option[Seq[FileStatus]] =
+    Option.when(fs.exists(dir))(fs.listStatus(dir).toSeq.filterNot { st =>
+      val name = st.getPath.getName
+      name.startsWith("_") || name.startsWith(".") || name.endsWith("._COPYING_")
+    })
 
   /** The `p_date=` directories of a store root; None when the root is
-    * absent or holds anything else Spark's listing keeps.
+    * absent or holds anything else.
     */
   private def partitionDirs(fs: FileSystem, root: Path): Option[Seq[Path]] =
-    if (!fs.exists(root)) None
-    else {
-      val seen = fs.listStatus(root).toSeq.filter(st => listed(st.getPath.getName))
-      Option.when(seen.forall(st =>
-        st.isDirectory && st.getPath.getName.startsWith(s"$PartitionCol=")))(seen.map(_.getPath))
-    }
+    listed(fs, root).filter(_.forall(st =>
+      st.isDirectory && st.getPath.getName.startsWith(s"$PartitionCol=")))
+      .map(_.map(_.getPath))
 
-  /** The data files of one day directory; None when it is absent or holds
-    * anything else Spark's listing keeps (a subdirectory, a summary file).
-    */
-  private def dataFiles(fs: FileSystem, dir: Path): Option[Seq[FileStatus]] =
-    if (!fs.exists(dir)) None
-    else {
-      val seen = fs.listStatus(dir).toSeq.filter(st => listed(st.getPath.getName))
-      Option.unless(seen.exists(st => st.isDirectory || st.getPath.getName.startsWith("_")))(seen)
-    }
+  /** The data files of one day directory (none when it is absent). */
+  private def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    listed(fs, dir).getOrElse(Nil).filter(_.isFile)
 
   /** One file's footer, read by Spark's own footer reader: a few KB from
     * the end of the file. parquet-mr's `ParquetFileReader.open` costs about
-    * 50 times more bytes read per file.
+    * 25 times the bytes per file (docs/SCALE.md, "Reading `run_read_mb`").
     */
   private def footer(spark: SparkSession, file: FileStatus,
       filter: ParquetMetadataConverter.MetadataFilter): ParquetMetadata =
@@ -150,8 +144,7 @@ object IncrementalStore {
     * one: its Spark row schema (`org.apache.spark.sql.parquet.row.metadata`),
     * then `p_date` as a date.
     *
-    * None, and the caller lets Spark infer, when a directory on the way is
-    * absent or holds anything but data files, when no data file exists,
+    * None, and the caller lets Spark infer, when no data file exists,
     * when the footer has no Spark schema, or under session settings that
     * make inference read more files or type `p_date` otherwise (merged
     * schemas, string partition values).
@@ -162,13 +155,12 @@ object IncrementalStore {
     if (on("spark.sql.parquet.mergeSchema", false) ||
         !on("spark.sql.sources.partitionColumnTypeInference.enabled", true)) return None
     val first = dirs.sortBy(_.toString).iterator.map(dataFiles(fs, _))
-      .find(_.forall(_.nonEmpty)).flatten.map(_.minBy(_.getPath.toString))
+      .find(_.nonEmpty).map(_.minBy(_.getPath.toString))
     for {
       file <- first
       json <- Option(footer(spark, file, ParquetMetadataConverter.SKIP_ROW_GROUPS)
         .getFileMetaData.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
       data <- Try(DataType.fromJson(json)).toOption.collect { case s: StructType => s }
-      if !data.fieldNames.contains(PartitionCol)
     } yield data.add(PartitionCol, DateType)
   }
 
@@ -210,7 +202,7 @@ object IncrementalStore {
     listDays(spark, target).lastOption.flatMap { newest =>
       val dir = new Path(dayPath(target, newest))
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      dataFiles(fs, dir).filter(_.nonEmpty)
+      Some(dataFiles(fs, dir)).filter(_.nonEmpty)
         .flatMap(files => statisticsMax(
           files.map(footer(spark, _, ParquetMetadataConverter.NO_FILTER)), tsCol))
         .getOrElse {
@@ -239,27 +231,28 @@ object IncrementalStore {
             t.getUnit == TimeUnit.MICROS && t.isAdjustedToUTC
           case _ => false
         })
-      val st = c.getStatistics
+      val st: Statistics[_] = c.getStatistics
       if (!micros || st == null || st.isEmpty) None
       else Some(Option.when(st.hasNonNullValue)(st.genericGetMax.asInstanceOf[Long]))
     })
-    if (maxima.contains(None)) None
-    else Some(maxima.flatMap(_.flatten).maxOption.map(DateTimeUtils.toJavaTimestamp))
+    Option.unless(maxima.contains(None))(
+      maxima.flatMap(_.flatten).maxOption.map(DateTimeUtils.toJavaTimestamp))
   }
 
-  /** Rows in the table, `readTable(spark, target).count()`, from the row
-    * counts in its data files' footers: every file of every `p_date=`
-    * directory, the null day included. No Spark job runs and no row is
-    * read. A root that holds anything else is counted by that scan.
+  /** Rows in the table, from the row counts in its data files' footers:
+    * every file of every `p_date=` directory, the null day included, as
+    * `readTable(spark, target).count()` counts them. No Spark job runs and
+    * no row is read. A root that is absent or holds anything else is
+    * counted by that scan.
     */
   def rowCount(spark: SparkSession, target: String): Long = {
     val root = new Path(target)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = partitionDirs(fs, root).map(_.map(dataFiles(fs, _)))
-      .filterNot(_.contains(None)).map(_.flatMap(_.get))
-    files.fold(readTable(spark, target).count())(_.map(
-      footer(spark, _, ParquetMetadataConverter.NO_FILTER).getBlocks.asScala
-        .map(_.getRowCount).sum).sum)
+    partitionDirs(fs, root).fold(readTable(spark, target).count())(_
+      .flatMap(dataFiles(fs, _))
+      .map(footer(spark, _, ParquetMetadataConverter.NO_FILTER).getBlocks.asScala
+        .map(_.getRowCount).sum)
+      .sum)
   }
 
   private def withPartition(df: DataFrame, tsCol: String): DataFrame =

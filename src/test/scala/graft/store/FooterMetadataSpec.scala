@@ -108,6 +108,11 @@ class FooterMetadataSpec extends SparkSpec {
     assert(IncrementalStore.readDays(spark, dir, days3.take(1)).columns.contains("extra"))
     assertReadsAsInferred(dir, days3)
     assertReadsAsInferred(dir, days3.take(1))
+    // settings under which inference reads every file or types p_date
+    // as a string: the footer cannot answer, and inference runs
+    for (conf <- Seq("spark.sql.parquet.mergeSchema" -> "true",
+        "spark.sql.sources.partitionColumnTypeInference.enabled" -> "false"))
+      GraftSession.withConf(spark, conf)(assertReadsAsInferred(dir, days3))
   }
 
   /** The watermark as the Spark job before footers computed it: the
@@ -174,7 +179,21 @@ class FooterMetadataSpec extends SparkSpec {
     }
   }
 
-  test("readDays(...).schema, readTable(...).schema and highWatermark start no Spark job") {
+  test("highWatermark before 1582: statistics without rebasing, the aggregate after legacy rebasing") {
+    for ((mode, fromStatistics) <- Seq("CORRECTED" -> true, "LEGACY" -> false)) {
+      val dir = tmp()
+      GraftSession.withConf(spark, "spark.sql.parquet.datetimeRebaseModeInWrite" -> mode) {
+        val t0 = java.time.Instant.parse("1500-03-01T10:00:00Z").getEpochSecond * 1000000L
+        IncrementalStore.overwriteDayPartitions(spark.range(3).select(col("id").as("k"),
+          timestamp_micros(lit(t0) + col("id") * 1000000L).as("ts")), dir, "ts")
+      }
+      val (wm, jobs) = watermarkJobs(dir)
+      assert(jobs.isEmpty === fromStatistics, mode)
+      assert(wm === aggregateWatermark(dir), mode)
+    }
+  }
+
+  test("readDays(...).schema, readTable(...).schema, highWatermark and rowCount start no Spark job") {
     val dir = tmp()
     IncrementalStore.upsertByKey(batch(0 until 60), dir, "ts", Seq("k"))
     val jobs = SparkSpec.jobsStarted(spark) {
