@@ -15,11 +15,6 @@ import org.apache.spark.sql.SparkSession
   *  - `Verify`: µs parquet writes and [[CodegenCache]];
   *  - the test suites' shared session: an app name, a temporary warehouse
   *    directory and µs parquet writes.
-  *
-  * `IncrementalStore.write` and `Ingest.writeBronze` still set
-  * `spark.sql.parquet.outputTimestampType` themselves: Spark 4.1 reads it
-  * from the session conf only (there is no per-write option), and the
-  * sessions of `Bench` and `PlanDump` do not start with it.
   */
 object GraftSession {
 

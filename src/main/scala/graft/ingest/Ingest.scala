@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.GraftSession
+
 /** Bronze ingest — Spark equivalent of the reference extractor's
   * validate/prepare/save path (scripts/extract_forex.py:112-199).
   *
@@ -83,19 +85,19 @@ object Ingest {
   /** save_to_gcs_parquet layout parity (extract_forex.py:144-199): snappy
     * parquet under hive partitions `year=YYYY/month=M` derived from the tick
     * time, timestamps coerced to µs (the reference's ns→µs cast,
-    * extract_forex.py:173-179, is native in Spark; the writer option pins the
-    * parquet physical type so downstream readers agree).
+    * extract_forex.py:173-179, is native in Spark; the write pins the
+    * parquet physical type, for itself alone, so downstream readers agree).
     */
-  def writeBronze(prepared: DataFrame, baseDir: String): Unit = {
-    val spark = prepared.sparkSession
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    prepared
-      .withColumn("year", year(col("datetime")))
-      .withColumn("month", month(col("datetime")))
-      .write
-      .mode("append")
-      .partitionBy("year", "month")
-      .option("compression", "snappy")
-      .parquet(baseDir)
-  }
+  def writeBronze(prepared: DataFrame, baseDir: String): Unit =
+    GraftSession.withConf(prepared.sparkSession,
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+      prepared
+        .withColumn("year", year(col("datetime")))
+        .withColumn("month", month(col("datetime")))
+        .write
+        .mode("append")
+        .partitionBy("year", "month")
+        .option("compression", "snappy")
+        .parquet(baseDir)
+    }
 }

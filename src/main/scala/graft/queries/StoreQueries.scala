@@ -366,8 +366,8 @@ object StoreQueries {
     val target = freshScratch(s, "graft_store/zorder_store")
     IncrementalStore.overwriteDayPartitions(silver, target, "observed_at")
     // the day list is one directory listing, no Spark job
-    val days = IncrementalStore.listDays(s, target).map(java.sql.Date.valueOf)
-    IncrementalStore.zorderDays(s, target, days, "observed_at", "close_price")
+    IncrementalStore.zorderDays(s, target, IncrementalStore.listDays(s, target),
+      "observed_at", "close_price")
     IncrementalStore.readTable(s, target)
       .select(col("observed_at"), col("open_price"), col("high_price"),
         col("low_price"), col("close_price"), col("p_date"))

@@ -1,6 +1,7 @@
 package graft.store
 
 import java.sql.Timestamp
+import java.time.LocalDate
 
 import scala.jdk.CollectionConverters._
 import scala.util.Try
@@ -12,28 +13,36 @@ import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DateType, StructType}
+import org.apache.spark.storage.StorageLevel
+
+import graft.GraftSession
 
 /** MERGE-semantics incremental writes on plain Parquet (SURVEY §4.3).
   *
   * The reference materializes silver/gold via dbt `incremental_strategy='merge'`
   * on day-partitioned tables (stg_eurusd.sql:1-12, fct_eurusd_timeframes.sql:1-13).
   * Vanilla Spark/Parquet has no MERGE, so we reproduce it with *dynamic
-  * partition overwrite* scoped to the batch's day-partitions:
+  * partition overwrite* scoped to the batch's day-partitions. Both merges,
+  * [[upsertByKey]] and [[mergeBatchDayPartitions]], run one core
+  * ([[mergeDays]]), the MERGE of Delta Lake (Armbrust et al., PVLDB 2020):
+  * read the touched files, keep the surviving rows, write them back with
+  * the new ones.
   *
-  *  1. derive `p_date = to_date(tsCol)` and collect the batch's distinct days
-  *     (bounded: one driver-side collect of a day list, never row data);
-  *  2. `upsertByKey` anti-joins the existing rows of ONLY those day-partitions
-  *     (a read of just those day directories, skipped when none exists yet)
-  *     against the batch keys and unions the batch — exact MERGE upsert
-  *     cost-bounded to touched days;
-  *  3. write `mode=overwrite` with the per-write option
+  *  1. derive `p_date = to_date(tsCol)` and collect the batch's distinct days,
+  *     the null day included (bounded: one driver-side collect of a day
+  *     list, never row data);
+  *  2. find which of them the table holds, from one listing of its root,
+  *     and read back ONLY those day-partitions (skipped when none exists);
+  *  3. keep the stored rows that survive (no batch row has their key, or
+  *     another micro-batch wrote them) and union the batch;
+  *  4. write `mode=overwrite` with the per-write option
   *     `partitionOverwriteMode=dynamic`, which rewrites exactly the touched
-  *     `p_date=` directories.
+  *     `p_date=` directories, in the job that read them.
   *
   * At 100 TB: a daily batch touches O(1) day-partitions; the rewrite is
   * O(batch + touched-partition size), independent of table history size.
@@ -74,40 +83,44 @@ object IncrementalStore {
     */
   private final val NullPartition = "__HIVE_DEFAULT_PARTITION__"
 
-  private def dayPath(target: String, day: java.time.LocalDate): String =
-    s"$target/$PartitionCol=$day"
+  /** The directory of one partition; the null day is None. */
+  private def dayPath(target: String, day: Option[LocalDate]): String =
+    s"$target/$PartitionCol=${day.fold(NullPartition)(_.toString)}"
 
-  /** The table's day partitions, oldest first, from one driver-side listing
-    * of its `p_date=` directories: no Spark job runs and no file is opened.
-    * Names are parsed as ISO dates, not compared lexically, so a malformed
-    * foreign directory fails loudly instead of being silently skipped. The
-    * null-day partition has no day and is left out. An absent table has no
-    * days.
+  /** The table's partitions, the null day as None, in listing order, from
+    * one driver-side listing of its `p_date=` directories: no Spark job
+    * runs and no file is opened. Names are parsed as ISO dates, not
+    * compared lexically, so a malformed foreign directory fails loudly
+    * instead of being silently skipped. An absent table has none.
     */
-  def listDays(spark: SparkSession, target: String): Seq[java.time.LocalDate] = {
-    val p = new org.apache.hadoop.fs.Path(target)
+  private def partitions(spark: SparkSession, target: String): Seq[Option[LocalDate]] = {
+    val p = new Path(target)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return Nil
     val prefix = s"$PartitionCol="
     fs.listStatus(p).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
       .map(_.getPath.getName.stripPrefix(prefix))
-      .filter(_ != NullPartition)
-      .map(java.time.LocalDate.parse)
-      .sortBy(_.toEpochDay)
+      .map(name => Option.unless(name == NullPartition)(LocalDate.parse(name)))
   }
+
+  /** The table's day partitions, oldest first ([[partitions]]). The
+    * null-day partition has no day and is left out.
+    */
+  def listDays(spark: SparkSession, target: String): Seq[LocalDate] =
+    partitions(spark, target).flatten.sortBy(_.toEpochDay)
 
   /** Whether the table has a null-day partition, the one [[listDays]] leaves
     * out: it holds exactly the rows whose `tsCol` was null when written. One
     * driver-side existence check; no Spark job runs.
     */
   def hasNullDay(spark: SparkSession, target: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$target/$PartitionCol=$NullPartition")
+    val p = new Path(dayPath(target, None))
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** The entries of `dir` that Spark's file listing reads: it skips names
-    * starting with `_` or `.` (`_SUCCESS`, `_staging`, checksums) and files
+    * starting with `_` or `.` (`_SUCCESS`, checksums) and files
     * being copied. None when `dir` is absent.
     */
   private def listed(fs: FileSystem, dir: Path): Option[Seq[FileStatus]] =
@@ -176,8 +189,12 @@ object IncrementalStore {
     * first lists every day of history. The schema comes from the footer of
     * the earliest day's first file ([[footerSchema]]), so no job infers it.
     */
-  def readDays(spark: SparkSession, target: String,
-      days: Seq[java.time.LocalDate]): DataFrame = {
+  def readDays(spark: SparkSession, target: String, days: Seq[LocalDate]): DataFrame =
+    readPartitions(spark, target, days.map(Some(_)))
+
+  /** [[readDays]] of partitions that may include the null day (None). */
+  private def readPartitions(spark: SparkSession, target: String,
+      days: Seq[Option[LocalDate]]): DataFrame = {
     require(days.nonEmpty, s"readDays($target): no days given")
     val dirs = days.map(dayPath(target, _))
     val fs = new Path(target).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -200,7 +217,7 @@ object IncrementalStore {
     */
   def highWatermark(spark: SparkSession, target: String, tsCol: String): Option[Timestamp] =
     listDays(spark, target).lastOption.flatMap { newest =>
-      val dir = new Path(dayPath(target, newest))
+      val dir = new Path(dayPath(target, Some(newest)))
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       Some(dataFiles(fs, dir)).filter(_.nonEmpty)
         .flatMap(files => statisticsMax(
@@ -289,21 +306,20 @@ object IncrementalStore {
     df.hint("rebalance", col(PartitionCol))
       .sortWithinPartitions((PartitionCol +: clusterBy :+ tsCol).map(col): _*)
 
-  private def write(arranged: DataFrame, target: String): Unit = {
+  private def write(arranged: DataFrame, target: String): Unit =
     // the parquet writer takes its timestamp type from the session conf
-    // only (no per-write option), so this one stays session-wide;
-    // GraftSession and Verify start their sessions with the same value.
+    // only (no per-write option), so it is set for this write alone;
     // highWatermark reads the min/max statistics of the INT64
     // TIMESTAMP(MICROS) columns this pins (INT96 has none)
-    arranged.sparkSession.conf.set(
-      "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    arranged.write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(PartitionCol)
-      .option("compression", "snappy")
-      .parquet(target)
-  }
+    GraftSession.withConf(arranged.sparkSession,
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+      arranged.write
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(PartitionCol)
+        .option("compression", "snappy")
+        .parquet(target)
+    }
 
   /** Replace the batch's day-partitions wholesale (gold path: the batch is a
     * complete recompute of every candle-day it contains).
@@ -319,32 +335,22 @@ object IncrementalStore {
     */
   final val BatchIdCol = "__batch_id"
 
-  /** Hidden staging dir inside the table root (underscore-prefixed names
-    * are invisible to partition discovery, like `_SUCCESS`).
-    */
-  private def stagingPath(target: String) = s"$target/_staging"
-
   /** Streaming-sink MERGE of one micro-batch into a day-partitioned table —
     * [[overwriteDayPartitions]] hardened for sources whose micro-batches
     * may SPLIT a day (late data, small triggers): a bare per-batch dynamic
     * overwrite would replace an already-open day with its newest fragment
     * (VERDICT r16 missing #1 — the day-completeness contract lived in the
-    * caller's source layout, not the engine). Here the engine owns it:
+    * caller's source layout, not the engine). Here the engine owns it, in
+    * the store's one merge ([[mergeDays]]):
     *
     *  - every written row is tagged with the micro-batch id ([[BatchIdCol]]);
-    *  - the batch's touched days are a bounded driver-side list (the
-    *    retention day-list pattern), probed for existence as `p_date=`
-    *    DIRECTORY checks — pure metadata, so a day-complete source pays
-    *    exactly the unhardened cost (no day it touches ever exists yet and
-    *    the plain overwrite runs unchanged);
-    *  - a touched day that already EXISTS triggers read-modify-write: the
-    *    open days' stored rows are read back partition-pruned, rows this
-    *    batch id wrote before are PURGED (a replayed batch must not
+    *  - a day-complete source pays exactly the unhardened cost: no day it
+    *    touches is stored yet, so nothing is read and the plain overwrite
+    *    runs;
+    *  - a touched day that is already OPEN is read back, and its stored rows
+    *    survive unless this batch id wrote them (a replayed batch must not
     *    duplicate itself — that purge is what keeps the sink effectively
-    *    once without a transaction log), the survivors are staged under
-    *    `_staging` (the overwrite plan must never read the files it is
-    *    about to replace), and prior ∪ batch is written as one
-    *    partition-scoped dynamic overwrite.
+    *    once without a transaction log).
     *
     * Cost at 100 TB: fragments of a day are re-read O(fragments-per-day)
     * times — bounded by trigger cadence, and only for days that actually
@@ -354,8 +360,8 @@ object IncrementalStore {
     * `retentionFloor`: days strictly OLDER than the floor are dropped
     * from the batch before any write. Without it, the merge and
     * [[retainDays]] interact badly on late data: the sweep deletes a day
-    * directory, a straggler row for that day then arrives, the existence
-    * probe sees "new day" and takes the fast path — RESURRECTING as a
+    * directory, a straggler row for that day then arrives, the listing
+    * sees "new day" and takes the fast path — RESURRECTING as a
     * single fragment a day retention declared dead (and the next sweep
     * deletes it again, a write/delete livelock on every late straggler).
     * A caller with a retention policy passes the same cutoff here: the
@@ -366,59 +372,22 @@ object IncrementalStore {
   def mergeBatchDayPartitions(
       batch: DataFrame, batchId: Long, target: String, tsCol: String,
       clusterBy: Seq[String] = Nil,
-      retentionFloor: Option[java.time.LocalDate] = None): Unit = {
-    val spark = batch.sparkSession
-    // touched-day list: bounded collect (days per micro-batch)
-    val allDays = batch.select(to_date(col(tsCol)).as("__d")).distinct()
-      .collect().map(r => Option(r.getDate(0))).toSeq
-    val (lateDays, days) = retentionFloor match {
-      case Some(f) =>
-        val fd = java.sql.Date.valueOf(f)
-        allDays.partition(_.exists(_.before(fd)))
-      case None => (Nil, allDays)
-    }
+      retentionFloor: Option[LocalDate] = None): Unit = {
+    val part = withPartition(batch.withColumn(BatchIdCol, lit(batchId)), tsCol)
+    val (lateDays, days) = batchDays(part)
+      .partition(d => retentionFloor.exists(f => d.exists(_.isBefore(f))))
     if (lateDays.nonEmpty)
       System.err.println(
         s"[graft] mergeBatchDayPartitions($target) batch $batchId: " +
           s"dropping ${lateDays.size} late day(s) below retention floor " +
           s"${retentionFloor.get}: ${lateDays.flatten.mkString(", ")}")
-    val floored = retentionFloor match {
-      case Some(f) if lateDays.nonEmpty =>
-        batch.filter(col(tsCol).isNull ||
-          to_date(col(tsCol)) >= lit(java.sql.Date.valueOf(f)))
-      case _ => batch
-    }
-    val tagged = floored.withColumn(BatchIdCol, lit(batchId))
-    if (days.isEmpty) return
-    val root = new org.apache.hadoop.fs.Path(target)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dirName(d: Option[java.sql.Date]): String =
-      s"$PartitionCol=${d.map(_.toString).getOrElse(NullPartition)}"
-    val open = days.filter(d =>
-      fs.exists(new org.apache.hadoop.fs.Path(root, dirName(d))))
-    if (open.isEmpty) {
-      // fast path: every touched day is new — the day-complete case
-      write(dayLayout(withPartition(tagged, tsCol), tsCol, clusterBy),
-        target)
-    } else {
-      val openDates = open.flatten
-      val dayPred = {
-        val inOpen =
-          if (openDates.isEmpty) lit(false)
-          else col(PartitionCol).isin(openDates: _*)
-        if (open.contains(None)) inOpen || col(PartitionCol).isNull else inOpen
-      }
-      val prior = readTable(spark, target)
-        .filter(dayPred)
-        .filter(col(BatchIdCol) =!= batchId)
-        .drop(PartitionCol)
-      val stage = stagingPath(target)
-      prior.write.mode("overwrite").parquet(stage)
-      // explicit schema: the staged relation can be empty (a replay that
-      // was the day's only writer), where inference has nothing to read
-      val priorBack = spark.read.schema(prior.schema).parquet(stage)
-      write(dayLayout(withPartition(priorBack.unionByName(tagged), tsCol),
-        tsCol, clusterBy), target)
+    if (days.nonEmpty) {
+      val floored =
+        if (lateDays.isEmpty) part
+        else part.filter(col(PartitionCol).isNull ||
+          col(PartitionCol) >= lit(java.sql.Date.valueOf(retentionFloor.get)))
+      mergeDays(floored, Some(days), target, tsCol, clusterBy)((stored, _) =>
+        stored.filter(col(BatchIdCol) =!= batchId))
     }
   }
 
@@ -428,9 +397,10 @@ object IncrementalStore {
     * per-micro-batch streaming sinks), and external writers — the classic
     * warehouse decay mode; at 100 TB unbounded file counts dominate scan
     * open/footer costs.
-    * Compaction re-reads ONLY the given days (partition-pruned) and rewrites
-    * each as one file (or one per cluster key when `clusterBy` is set),
-    * byte-identical data, bounded by the touched days like the merge itself.
+    * Compaction re-reads ONLY the given days ([[readDays]]; each must
+    * exist) and rewrites each as one file (or one per cluster key when
+    * `clusterBy` is set), byte-identical data, bounded by the touched days
+    * like the merge itself.
     *
     * Pass the SAME `clusterBy` the table is written with (the store keeps
     * the cluster spec at call sites, like upsertByKey): compacting a
@@ -438,10 +408,10 @@ object IncrementalStore {
     * drop the cluster-sorted layout its row-group pruning relies on.
     */
   def compactDays(
-      spark: SparkSession, target: String, days: Seq[java.sql.Date],
+      spark: SparkSession, target: String, days: Seq[LocalDate],
       clusterBy: Seq[String] = Nil): Unit = {
-    val pruned = readTable(spark, target)
-      .filter(col(PartitionCol).isin(days: _*))
+    if (days.isEmpty) return
+    val pruned = readDays(spark, target, days)
     // one shuffle partition per day (or per day x cluster-key hash) → one
     // output file per day directory / cluster run
     val arranged =
@@ -466,11 +436,10 @@ object IncrementalStore {
     * string per dropped day — the day-list collect pattern).
     */
   def retainDays(spark: SparkSession, target: String,
-      cutoff: java.time.LocalDate): Seq[String] = {
-    val fs = new org.apache.hadoop.fs.Path(target)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      cutoff: LocalDate): Seq[String] = {
+    val fs = new Path(target).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dropped = listDays(spark, target).filter(_.isBefore(cutoff))
-      .map(d => new org.apache.hadoop.fs.Path(dayPath(target, d)))
+      .map(d => new Path(dayPath(target, Some(d))))
     dropped.foreach(fs.delete(_, true))
     dropped.map(_.getName)
   }
@@ -531,11 +500,10 @@ object IncrementalStore {
     * bytes in production).
     */
   def zorderDays(
-      spark: SparkSession, target: String, days: Seq[java.sql.Date],
+      spark: SparkSession, target: String, days: Seq[LocalDate],
       dimX: String, dimY: String, filesPerDay: Int = 4): Unit = {
     if (days.isEmpty) return
-    val pruned = readTable(spark, target)
-      .filter(col(PartitionCol).isin(days: _*))
+    val pruned = readDays(spark, target, days)
     val (cx, cy) = (zCoord(pruned, dimX), zCoord(pruned, dimY))
     val r = pruned.agg(count(lit(1)), min(cx), max(cx), min(cy), max(cy)).head()
     if (r.getLong(0) == 0L) return // truly no rows in the given days
@@ -557,10 +525,9 @@ object IncrementalStore {
 
   /** MERGE upsert on `keyCols` bounded to the batch's day-partitions
     * (silver path: existing rows of touched days survive unless replaced by
-    * a batch row with the same key). Only the touched days that already
-    * exist are read back ([[readDays]]); when none exists — a daily batch
-    * landing new days — the read and the anti-join are skipped and the
-    * batch is written as is, which is what the anti-join would produce.
+    * a batch row with the same key; a left-anti join in [[mergeDays]]). The
+    * null day is a touched day like any other, so a null-`tsCol` row
+    * replaces only the stored null-day row with its key.
     *
     * Returns OPERATION METRICS — the commit-info row every
     * table format (Delta `operationMetrics`, Iceberg snapshot summary)
@@ -574,42 +541,62 @@ object IncrementalStore {
     */
   def upsertByKey(
       batch: DataFrame, target: String, tsCol: String, keyCols: Seq[String],
-      clusterBy: Seq[String] = Nil): Map[String, Long] = {
-    val spark = batch.sparkSession
-    val part = withPartition(batch, tsCol)
+      clusterBy: Seq[String] = Nil): Map[String, Long] =
+    mergeDays(withPartition(batch, tsCol), None, target, tsCol, clusterBy)(
+      (stored, part) => stored.join(part, keyCols, "left_anti"))
+
+  /** The batch's distinct days, the null day as None: one bounded collect. */
+  private def batchDays(part: DataFrame): Seq[Option[LocalDate]] =
+    part.select(PartitionCol).distinct().collect().toSeq
+      .map(r => Option(r.getDate(0)).map(_.toLocalDate))
+
+  /** The store's one MERGE, behind [[upsertByKey]] and
+    * [[mergeBatchDayPartitions]]: writes the batch `part` (with `p_date`)
+    * and the stored rows of its days that `survivors(stored, part)` keeps,
+    * as one observed dynamic overwrite of those days ([[dayLayout]]), and
+    * returns the write's metrics.
+    *
+    * Which partitions the table holds comes from one listing of its root.
+    * The batch's days are `days` when the caller already collected them;
+    * otherwise they are collected here, and only when the table holds a
+    * partition at all. The batch is then persisted first, as it feeds the
+    * collect, the survivors and the write. When none of the batch's days is
+    * stored, the batch is written as is, which is what the merge would
+    * write; otherwise the stored days, the null day included, are read back
+    * and overwritten in the same job.
+    */
+  private def mergeDays(part: DataFrame, days: Option[Seq[Option[LocalDate]]],
+      target: String, tsCol: String, clusterBy: Seq[String])(
+      survivors: (DataFrame, DataFrame) => DataFrame): Map[String, Long] = {
+    val spark = part.sparkSession
+    val stored = partitions(spark, target).toSet
     def writeObserved(df: DataFrame): Map[String, Long] = {
-      val obs = org.apache.spark.sql.Observation(s"graft-merge")
+      val obs = Observation("graft-merge")
       // observe above the layout, on the rows as the writer receives
       // them: each written row passes exactly once, even were the plan
       // below the exchange run twice (a layout that samples its input, as
       // repartitionByRange does, runs it once more)
-      val observed = dayLayout(df, tsCol, clusterBy).observe(obs,
-        count(lit(1)).as("rows_written"),
-        min(unix_micros(col(tsCol))).as("min_ts_us"),
-        max(unix_micros(col(tsCol))).as("max_ts_us"))
-      write(observed, target)
+      // (a date `tsCol`, as the streaming sinks' `day`, counts from midnight)
+      val us = unix_micros(col(tsCol).cast("timestamp"))
+      write(dayLayout(df, tsCol, clusterBy).observe(obs, count(lit(1)).as("rows_written"),
+        min(us).as("min_ts_us"), max(us).as("max_ts_us")), target)
       // an empty write observes NULL min/max (count stays 0) — drop the
       // null entries rather than NPE on the cast
       obs.get.collect { case (k, v: Long) => k -> v }.toMap
     }
-    val stored = listDays(spark, target).toSet
-    if (stored.isEmpty) writeObserved(part)
-    else {
-      // the batch feeds three computations (day-list collect, anti-join
-      // probe, merged write) — persist it once rather than re-running its
-      // whole lineage (a source scan + dedup at warehouse scale) per use;
-      // the batch itself is one micro-batch of data, bounded by design
-      val cached = part.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val open = cached.select(PartitionCol).distinct().collect().toSeq
-          .flatMap(r => Option(r.getDate(0))).map(_.toLocalDate).filter(stored)
-        if (open.isEmpty) writeObserved(cached)
-        else {
-          val old = readDays(spark, target, open)
-            .select(cached.columns.toIndexedSeq.map(col): _*) // align column order
-          writeObserved(old.join(cached, keyCols, "left_anti").unionByName(cached))
-        }
-      } finally cached.unpersist(blocking = false)
+    def merge(batch: DataFrame, days: Seq[Option[LocalDate]]): Map[String, Long] = {
+      val open = days.filter(stored)
+      if (open.isEmpty) writeObserved(batch)
+      else writeObserved(survivors(readPartitions(spark, target, open)
+        .select(batch.columns.toIndexedSeq.map(col): _*), batch).unionByName(batch))
+    }
+    days match {
+      case Some(known) => merge(part, known)
+      case None if stored.isEmpty => writeObserved(part)
+      case None =>
+        val cached = part.persist(StorageLevel.MEMORY_AND_DISK)
+        try merge(cached, batchDays(cached))
+        finally cached.unpersist(blocking = false)
     }
   }
 }

@@ -105,7 +105,7 @@ class Round16OpsSpec extends SparkSpec {
     val target = StoreQueries.storeRoot(spark, "cms_counters_spec16")
     val days = IncrementalStore.readTable(spark, target)
       .select(col(IncrementalStore.PartitionCol)).distinct()
-      .collect().map(_.getDate(0)).toSeq
+      .collect().map(_.getDate(0).toLocalDate).toSeq
     IncrementalStore.compactDays(spark, target, days,
       clusterBy = Seq("row_id"))
     val after = slurp(IncrementalStore.readTable(spark, target)

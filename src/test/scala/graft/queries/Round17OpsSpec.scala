@@ -63,31 +63,53 @@ class Round17OpsSpec extends SparkSpec {
     assert(commits >= 2, s"expected a multi-micro-batch run, saw $commits")
   }
 
+  // the same split, replay and new batch on the null day: a null `day`
+  // lands in the Hive default partition and merges by the same rule
+  private val nullDay: java.sql.Date = null
+  private val nullFragA = Seq((d1, 1L, 10.0), (nullDay, 2L, 20.0))
+  private val nullFragB = Seq((nullDay, 3L, 30.0))
+
   test("mergeBatchDayPartitions: a REPLAYED batch purges its own prior " +
       "rows (no duplicates), while a NEW batch touching an open day merges") {
-    val target = StoreQueries.freshScratch(spark, "graft_store/spec_replay17")
-    IncrementalStore.mergeBatchDayPartitions(itemsDf(fragA), 0L, target,
-      "day", clusterBy = Seq("k"))
-    IncrementalStore.mergeBatchDayPartitions(itemsDf(fragB), 1L, target,
-      "day", clusterBy = Seq("k"))
-    // replay batch 1 verbatim (failure/retry): content must not change
-    val before = slurp(IncrementalStore.readTable(spark, target)
-      .select(col("day"), col("k"), col("v")))
-    IncrementalStore.mergeBatchDayPartitions(itemsDf(fragB), 1L, target,
-      "day", clusterBy = Seq("k"))
-    val after = IncrementalStore.readTable(spark, target)
-    assert(slurp(after.select(col("day"), col("k"), col("v"))) === before)
-    assert(after.count() === 5L)
-    // a third, genuinely NEW batch on the open day adds its rows
-    IncrementalStore.mergeBatchDayPartitions(
-      itemsDf(Seq((d1, 6L, 60.0))), 2L, target, "day", clusterBy = Seq("k"))
-    val merged = IncrementalStore.readTable(spark, target)
-    assert(merged.count() === 6L)
-    assert(merged.filter(col("k") === 6L).count() === 1L)
-    // the batch-id bookkeeping column is present store-side…
-    assert(merged.columns.contains(IncrementalStore.BatchIdCol))
-    // …and the staging dir is invisible to the read
-    assert(!merged.columns.contains("_staging"))
+    for ((a, b, day) <- Seq((fragA, fragB, d1), (nullFragA, nullFragB, nullDay))) {
+      val target = StoreQueries.freshScratch(spark, "graft_store/spec_replay17")
+      IncrementalStore.mergeBatchDayPartitions(itemsDf(a), 0L, target,
+        "day", clusterBy = Seq("k"))
+      IncrementalStore.mergeBatchDayPartitions(itemsDf(b), 1L, target,
+        "day", clusterBy = Seq("k"))
+      // replay batch 1 verbatim (failure/retry): content must not change
+      val before = slurp(IncrementalStore.readTable(spark, target)
+        .select(col("day"), col("k"), col("v")))
+      assert(before === slurp(itemsDf(a ++ b)), s"day $day")
+      IncrementalStore.mergeBatchDayPartitions(itemsDf(b), 1L, target,
+        "day", clusterBy = Seq("k"))
+      val after = IncrementalStore.readTable(spark, target)
+      assert(slurp(after.select(col("day"), col("k"), col("v"))) === before)
+      assert(after.count() === (a ++ b).size.toLong)
+      // a third, genuinely NEW batch on the open day adds its rows
+      IncrementalStore.mergeBatchDayPartitions(
+        itemsDf(Seq((day, 6L, 60.0))), 2L, target, "day", clusterBy = Seq("k"))
+      val merged = IncrementalStore.readTable(spark, target)
+      assert(merged.count() === (a ++ b).size + 1L)
+      assert(merged.filter(col("k") === 6L).count() === 1L)
+      // the batch-id bookkeeping column is present store-side…
+      assert(merged.columns.contains(IncrementalStore.BatchIdCol))
+      // …and no staging column reaches the read
+      assert(!merged.columns.contains("_staging"))
+    }
+  }
+
+  test("mergeBatchDayPartitions leaves only day directories in the table, " +
+      "after a merge into an open day and after a replay") {
+    val target = StoreQueries.freshScratch(spark, "graft_store/spec_nostage17")
+    val root = new org.apache.hadoop.fs.Path(target)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def dirs = fs.listStatus(root).filter(_.isDirectory).map(_.getPath.getName).toSeq.sorted
+    IncrementalStore.mergeBatchDayPartitions(itemsDf(fragA), 0L, target, "day")
+    IncrementalStore.mergeBatchDayPartitions(itemsDf(fragB), 1L, target, "day")
+    assert(dirs === Seq(s"p_date=$d1", s"p_date=$d2"))
+    IncrementalStore.mergeBatchDayPartitions(itemsDf(fragB), 1L, target, "day")
+    assert(dirs === Seq(s"p_date=$d1", s"p_date=$d2"))
   }
 
   test("storeDayIncremental: empty input and all-null days fail with a " +

@@ -41,7 +41,7 @@ class CompactionSpec extends SparkSpec {
       .drop("dbt_updated_at")
       .collect().map(_.mkString("|")).sorted.toSeq
 
-    IncrementalStore.compactDays(spark, dir, allDays)
+    IncrementalStore.compactDays(spark, dir, allDays.map(_.toLocalDate))
 
     val afterFiles = filesPerDay(dir)
     assert(afterFiles.values.forall(_ === 1), s"still fragmented: $afterFiles")
@@ -64,7 +64,7 @@ class CompactionSpec extends SparkSpec {
     }
     val target = days.head
     val beforeOther = filesPerDay(dir) - s"p_date=$target"
-    IncrementalStore.compactDays(spark, dir, Seq(target))
+    IncrementalStore.compactDays(spark, dir, Seq(target.toLocalDate))
     assert(filesPerDay(dir)(s"p_date=$target") === 1)
     assert((filesPerDay(dir) - s"p_date=$target") === beforeOther,
       "untouched days must keep their exact files")

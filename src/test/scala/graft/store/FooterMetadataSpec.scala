@@ -221,6 +221,8 @@ class FooterMetadataSpec extends SparkSpec {
     val dir = tmp()
     GraftSession.withConf(spark, "spark.sql.parquet.outputTimestampType" -> "INT96") {
       IncrementalStore.overwriteDayPartitions(batch(0 until 60), dir, "ts")
+      // the write pins its type for itself alone
+      assert(spark.conf.get("spark.sql.parquet.outputTimestampType") === "INT96")
     }
     val conf = spark.sparkContext.hadoopConfiguration
     val files = IncrementalStore.listDays(spark, dir).flatMap { d =>

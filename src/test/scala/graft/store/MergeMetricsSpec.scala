@@ -9,8 +9,8 @@ import graft.SparkSpec
   * Dataset.observe — the spec recounts the written table independently and
   * the two must agree exactly, on the initial-insert, the merge and the
   * new-days path. Also pins the day-listing reads the daily run relies
-  * on (the newest-day watermark) and that a store write leaves the session
-  * conf as it found it.
+  * on (the newest-day watermark), that a store write leaves the session
+  * conf as it found it, the null day's MERGE and the merges' job counts.
   */
 class MergeMetricsSpec extends SparkSpec {
 
@@ -126,5 +126,59 @@ class MergeMetricsSpec extends SparkSpec {
       spark.conf.set(key, value)
       assert(listingJobs() === 0)
     } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  private def keyed(rows: (Long, String)*): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    rows.map { case (k, ts) => (k, Option(ts).map(java.sql.Timestamp.valueOf).orNull, k * 1.5) }
+      .toDF("k", "ts", "v")
+  }
+
+  test("upsertByKey merges the null day: other keys survive, an equal key is replaced") {
+    val dir = freshDir("null_day")
+    IncrementalStore.upsertByKey(keyed(1L -> "2024-03-01 10:00:00", 2L -> null), dir, "ts", Seq("k"))
+    IncrementalStore.upsertByKey(keyed(3L -> null), dir, "ts", Seq("k"))
+    val table = spark.read.parquet(dir)
+    assert(table.select("k").collect().map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L, 3L))
+    IncrementalStore.upsertByKey(keyed(3L -> null).withColumn("v", lit(-1.0)), dir, "ts", Seq("k"))
+    assert(rows(spark.read.parquet(dir)) === Seq(
+      "1|2024-03-01 10:00:00.0|1.5", "2|null|3.0", "3|null|-1.0"))
+  }
+
+  /** Jobs each merge starts on a batch read from parquet files, as the
+    * cron's bronze and a stream's micro-batches are. The bounds are what
+    * the same calls started on this session when the streaming merge
+    * staged an open day's rows under the table and read them back.
+    */
+  private final val UpsertNewDayJobs = 7
+  private final val UpsertOpenDayJobs = 8
+  private final val MergeNewDayJobs = 6
+  private final val MergeOpenDayJobs = 7
+
+  test("the merges start no more jobs than the merge that staged an open day's rows") {
+    def files(tag: String, ids: Range, firstDay: Int = 1) = {
+      val d = freshDir(s"jobs_src_$tag")
+      batch(ids, firstDay).write.parquet(d)
+      spark.read.parquet(d)
+    }
+    def jobs(body: => Unit): Int = graft.SparkSpec.jobsStarted(spark)(body).size
+    val up = freshDir("jobs_upsert")
+    IncrementalStore.upsertByKey(files("u0", 0 until 100), up, "ts", Seq("k"))
+    val upsertNew = jobs(IncrementalStore.upsertByKey(
+      files("u1", 100 until 160, firstDay = 4), up, "ts", Seq("k")))
+    val upsertOpen = jobs(IncrementalStore.upsertByKey(
+      files("u2", 50 until 150), up, "ts", Seq("k")))
+    val merged = freshDir("jobs_merge")
+    IncrementalStore.mergeBatchDayPartitions(files("m0", 0 until 100), 0L, merged, "ts")
+    val mergeNew = jobs(IncrementalStore.mergeBatchDayPartitions(
+      files("m1", 100 until 160, firstDay = 4), 1L, merged, "ts"))
+    val mergeOpen = jobs(IncrementalStore.mergeBatchDayPartitions(
+      files("m2", 160 until 220), 2L, merged, "ts"))
+    val counts = Seq(upsertNew, upsertOpen, mergeNew, mergeOpen)
+    info(s"jobs: upsert new/open day $upsertNew/$upsertOpen, merge new/open day $mergeNew/$mergeOpen")
+    assert(spark.read.parquet(up).count() === 210L)
+    assert(spark.read.parquet(merged).count() === 220L)
+    assert(counts.zip(Seq(UpsertNewDayJobs, UpsertOpenDayJobs, MergeNewDayJobs, MergeOpenDayJobs))
+      .forall { case (now, before) => now <= before }, counts.toString)
   }
 }

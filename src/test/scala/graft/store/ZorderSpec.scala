@@ -71,7 +71,7 @@ class ZorderSpec extends SparkSpec {
     IncrementalStore.overwriteDayPartitions(base, zDir, "observed_at")
     val before = IncrementalStore.readTable(spark, zDir)
       .collect().map(_.mkString("|")).sorted.toSeq
-    val days = Seq(java.sql.Date.valueOf("2024-03-01"))
+    val days = Seq(java.time.LocalDate.of(2024, 3, 1))
     IncrementalStore.zorderDays(spark, zDir, days, "observed_at", "close_price",
       filesPerDay = nFiles)
 
